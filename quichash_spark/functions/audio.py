@@ -512,11 +512,11 @@ def pcm_frame_bits(pcm: np.ndarray, cfg: DedupConfig) -> np.ndarray:
 def _frame_words(frames: np.ndarray) -> np.ndarray:
     """(n_frames, frame_len) float32 -> one uint64 feature word per frame.
 
-    float32 magnitude spectrum: ~1.4x kernel speedup vs the round-1
-    float64 path; float32 epsilon (~1e-7 relative) is 5 orders of
-    magnitude below the >=30 dB (~3%) perturbations the peak/centroid
-    features must already tolerate, so feature bits are unaffected in the
-    operating regime (kernel_version bumped anyway — bit outputs changed,
+    float32 input frames (the FFT itself upcasts to complex128): ~1.4x
+    kernel speedup vs the round-1 float64 path; float32 epsilon (~1e-7
+    relative) is 5 orders of magnitude below the >=30 dB (~3%)
+    perturbations the peak/centroid features must already tolerate, so
+    feature bits are unaffected in the operating regime (kernel_version bumped anyway — bit outputs changed,
     checkpoints/fixtures invalidate).
 
     Every op is frame-row-wise, so results are independent of how clips
@@ -529,7 +529,9 @@ def _frame_words(frames: np.ndarray) -> np.ndarray:
     additive noise the verify gate targets.
     """
     n_frames = frames.shape[0]
-    spec = np.abs(np.fft.rfft(frames, axis=1))  # float32 (n_frames, n_bins)
+    # numpy.fft upcasts float32 input: the rfft is complex128 and its
+    # magnitudes float64, (n_frames, n_bins)
+    spec = np.abs(np.fft.rfft(frames, axis=1))
     spec[:, 0] = 0.0  # ignore DC
     top1 = spec.argmax(axis=1)
     rows_idx = np.arange(n_frames)
@@ -545,7 +547,7 @@ def _frame_words(frames: np.ndarray) -> np.ndarray:
             e2 > 0, np.log2(np.maximum(e1, 1e-12) / np.maximum(e2, 1e-12)), 7.0
         )
     ratio_bin = np.clip(ratio * 4.0, 0, 31).astype(np.uint64)  # 5 bits, 1/4-octave
-    power = spec * spec  # contiguous float32 square — cheap
+    power = spec * spec  # contiguous float64 square — cheap
     tot = power.sum(axis=1)
     bins = np.arange(spec.shape[1], dtype=np.float32)
     with np.errstate(invalid="ignore", divide="ignore"):
@@ -570,9 +572,12 @@ def pcm_frame_bits_batch(
     per-clip loop).  :func:`_frame_words` is strictly frame-row-wise, so
     the concatenated results are bit-identical to the per-clip path
     (test-asserted).  Arrow batches are bounded (maxRecordsPerBatch=128),
-    which caps the concatenated matrix at ~20 MB — the earlier finding
-    that whole-partition concatenation (~100 MB intermediates) falls out
-    of cache does not apply at this batch size.
+    which caps the concatenated float32 frame matrix at ~20 MB.  That
+    figure understates the peak: :func:`_frame_words` runs numpy.fft,
+    which upcasts to a complex128 spectrum (2x the frame matrix's bytes
+    for its ~n/2 bins) followed by float64 magnitude, masked-copy and
+    power arrays (1x each), so a batch call holds roughly 5x the frame
+    matrix at once.  Size any batch retuning by that footprint.
     """
     counts: list[int] = []
     views: list[np.ndarray] = []

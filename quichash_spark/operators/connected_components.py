@@ -108,7 +108,8 @@ def _local_finish(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame, max_iters: int = 25, local_finish_threshold: int = 5_000_000
+    edges: DataFrame, max_iters: int = 25, local_finish_threshold: int = 5_000_000,
+    max_edges: int | None = None,
 ) -> DataFrame:
     """edges(clip_a, clip_b) -> assignments(clip_id, cluster_id).
 
@@ -122,7 +123,19 @@ def connected_components(
     force fully-distributed convergence; a test asserts both paths agree).
     At 10^12 clips the rounds do the shrinking; the tail finish replaces
     only the last O(log n) latency-bound rounds.
+
+    ``max_edges``: an upper bound on the edge count known without a job
+    (the pipeline sums checkpoint manifest rows).  At or under the
+    threshold the edges go straight to the union-find task — no dedup
+    shuffle, no checkpoint, no checksum job.  Duplicate edges and
+    self-loops are harmless to union-find.  That task also evaluates
+    ``edges`` itself, so pass the bound for cheap inputs such as
+    checkpoint reads.
     """
+    if max_edges is not None and max_edges <= local_finish_threshold:
+        return _local_finish(
+            edges.select(F.col("clip_a").alias("u"), F.col("clip_b").alias("v"))
+        )
     cur = (
         edges.select(F.col("clip_a").alias("u"), F.col("clip_b").alias("v"))
         .filter(F.col("u") != F.col("v"))

@@ -9,7 +9,11 @@ Scale design (10^12 rows):
 - Band keys are computed JVM-side (``xxhash64`` over signature slices)
   inside whole-stage codegen — no Python in this hot path.
 - Candidate pairs come from a self-equi-join on ``(band_idx, band_key)``:
-  a shuffle-hash/sort-merge join that AQE can skew-split.
+  a shuffle-hash/sort-merge join that AQE can skew-split.  The pipeline
+  has ONE candidate strategy, :func:`unified_candidates`, for batch and
+  incremental runs alike: an incremental run tags its signatures with a
+  boolean ``is_new`` column and the self-join keeps the new rows on one
+  side, so the smaller increment drives pair expansion.
 - Hot bands (e.g. a constant transcript owned by millions of clips) are
   capped: bucket sizes are counted first and buckets larger than
   ``cfg.band_bucket_cap`` are EXCLUDED from pair generation, with the drop
@@ -165,7 +169,8 @@ def unified_bucket_table(
       [2*bands, +chunks)    SimHash pigeonhole chunks
 
     Rows carry ``simhash`` so the Hamming-radius filter for chunk-channel
-    pairs applies directly after the self-join.
+    pairs applies directly after the self-join, and ``is_new`` (the
+    input's column, else True) for :func:`unified_candidates`.
     """
     width = 64 // cfg.simhash_chunks
     mask = (1 << width) - 1
@@ -183,181 +188,84 @@ def unified_bucket_table(
         keys = F.concat(F.col("band_keys_text"), F.col("band_keys_pcm"), chunks)
     else:
         keys = F.concat(F.col("band_keys_text"), chunks)
+    is_new = F.col("is_new") if "is_new" in signatures.columns else F.lit(True)
     return signatures.select(
-        "clip_id", "simhash", F.posexplode(keys).alias("band_idx", "band_key")
+        "clip_id", is_new.alias("is_new"), "simhash",
+        F.posexplode(keys).alias("band_idx", "band_key"),
     )
 
 
 def unified_candidates(
     signatures: DataFrame, cfg: DedupConfig, use_pcm: bool = True,
-    strategy: str = "join", scope: CacheScope | None = None,
-    restrict_ids: DataFrame | None = None,
+    scope: CacheScope | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """All candidate channels in one shuffle plan.
 
-    Returns (pairs(clip_a, clip_b, source), dropped buckets).  ``source``
-    is the comma-joined sorted set of channels that produced the pair.
-    ``scope``: registry for the persisted bucket summaries — pass a
-    per-pipeline :class:`CacheScope` when several pipelines share one
-    session; defaults to the module scope drained by
-    :func:`release_cached`.
+    Returns (pairs(clip_a, clip_b, source), dropped(band_idx, band_key,
+    bucket_n)).  ``clip_a < clip_b``; ``source`` is the comma-joined
+    sorted set of channels that produced the pair.  ``scope``: registry
+    for the persisted bucket summary — pass a per-pipeline
+    :class:`CacheScope` when several pipelines share one session;
+    defaults to the module scope drained by :func:`release_cached`.
 
-    ``restrict_ids`` (one ``clip_id`` column): emit only pairs with at
-    least one side in the set — the INCREMENTAL shape.  Bucket sizes,
-    caps and per-pair channel aggregation are still computed over the
-    FULL corpus (batch-identical semantics); the restriction changes
-    only pair EXPANSION, which becomes two joins each with the (small)
-    restricted band rows on one side, so unrestricted-x-unrestricted
-    combinations are never materialized (test-asserted equal to
-    post-filtering the full pair set).
+    ``is_new`` contract: when ``signatures`` carries a boolean ``is_new``
+    column (the INCREMENTAL shape: False on prior rows, True on the
+    increment), only pairs with at least one new side are emitted;
+    without the column every row is new (batch).  Bucket sizes, caps and
+    per-pair channel aggregation always see the FULL input, so the
+    flagged run emits exactly the batch pairs that touch a new clip
+    (test-asserted).
 
-    Three physical strategies produce identical pairs (test-asserted):
-
-    - ``"window"``: one window count partitioned by bucket key does
-      size-count + cap-filter in a single exchange of the bucket table,
-      and the member-list groupBy reuses that partitioning; pairs expand
-      via a codegen higher-order expression.  Fewest shuffles.
-    - ``"join"``: sizes aggregate, kept-keys join, then the classic band
-      self-join (AQE-skew-splittable).
-    - ``"agg"``: sizes + kept-join like ``"join"``, then member lists +
-      codegen expansion instead of the self-join.
-
-    In every strategy the cap filter runs BEFORE any collect_list, so a
-    hot bucket is never buffered into an array at 10^12-row scale, and
-    per-bucket pair arrays are bounded by cap^2/2 transient structs.
+    Plan: a sizes aggregate (which also records whether a new row sits
+    in each bucket) persisted as the >1-member summary, a kept-keys join,
+    then ONE band self-join with the new rows on one side.  The other
+    side keeps rows that are old or have a larger ``clip_id``, so each
+    pair expands exactly once per shared band, and old-x-old pairs never
+    do.  The cap filter runs before the self-join, so a hot bucket never
+    fans out.
     """
     scope = scope if scope is not None else _DEFAULT_SCOPE
-    _persist = scope.persist
     nb = cfg.bands
     n_channels = nb * (2 if use_pcm else 1)
     # The full bucket table is NOT persisted (caching 68 deserialized
     # rows/clip measured SLOWER than recomputing the codegen explode over
     # the page-cached parquet checkpoint).  The >1-member bucket SUMMARY
     # is: it is tiny (proportional to true-dup buckets), and both
-    # children — kept_keys (pair generation) and dropped (skew metrics) —
-    # read it, so the 13.6M-row sizes shuffle runs once instead of twice
-    # (the dropped-metrics job used to re-run the whole explode+agg).
+    # children — kept_keys (pair generation) and dropped (skew lineage,
+    # read after the candidates write) — read it, so the sizes shuffle
+    # runs once.
     buckets = unified_bucket_table(signatures, cfg, use_pcm)
-
-    if strategy == "window":
-        # ONE exchange total for size-count + cap-filter + member lists:
-        # the window count partitions by bucket key, the >1 filter drops
-        # the (overwhelming) size-1 majority, and the member-list groupBy
-        # REUSES the window's partitioning (no second shuffle of the
-        # bucket table).  Hot buckets pass through as rows (bounded: they
-        # are filtered before any array is built) and surface in
-        # ``dropped`` off the same persisted summary.
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band_idx", "band_key")
-        summary = _persist(
-            buckets.withColumn("bucket_n", F.count("*").over(w)).filter(
-                F.col("bucket_n") > 1
-            )
-        )
-        dropped = (
-            summary.filter(F.col("bucket_n") > cfg.band_bucket_cap)
-            .groupBy("band_idx", "band_key")
-            .agg(F.first("bucket_n").alias("bucket_n"))
-        )
-        members = (
-            summary.filter(F.col("bucket_n") <= cfg.band_bucket_cap)
-            .groupBy("band_idx", "band_key")
-            .agg(F.sort_array(F.collect_list(F.struct("clip_id", "simhash"))).alias("ms"))
-        )
-        raw = _expand_bucket_pairs(members)
-        return _pairs_from_raw(raw, cfg, nb, n_channels, use_pcm), dropped
-
-    sizes = buckets.groupBy("band_idx", "band_key").agg(F.count("*").alias("bucket_n"))
-    summary = _persist(sizes.filter(F.col("bucket_n") > 1))
-    kept_keys = summary.filter(F.col("bucket_n") <= cfg.band_bucket_cap).select(
-        "band_idx", "band_key"
+    summary = scope.persist(
+        buckets.groupBy("band_idx", "band_key")
+        .agg(F.count("*").alias("bucket_n"), F.max("is_new").alias("has_new"))
+        .filter(F.col("bucket_n") > 1)
     )
-    dropped = summary.filter(F.col("bucket_n") > cfg.band_bucket_cap)
-
-    if strategy == "agg":
-        members = (
-            buckets.join(kept_keys, ["band_idx", "band_key"])
-            .groupBy("band_idx", "band_key")
-            .agg(F.sort_array(F.collect_list(F.struct("clip_id", "simhash"))).alias("ms"))
-        )
-        raw = _expand_bucket_pairs(members)
-        if restrict_ids is not None:
-            raw = _raw_touching(raw, restrict_ids)
-    else:
-        kept = _persist(buckets.join(kept_keys, ["band_idx", "band_key"]))
-
-        def side_join(left, right, extra):
-            return left.alias("a").join(
-                right.alias("b"),
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.clip_id") < F.col("b.clip_id"))
-                & extra,
-            ).select(
-                F.col("a.band_idx").alias("band_idx"),
-                F.col("a.clip_id").alias("clip_a"),
-                F.col("b.clip_id").alias("clip_b"),
-                F.col("a.simhash").alias("sh_a"),
-                F.col("b.simhash").alias("sh_b"),
-            )
-
-        if restrict_ids is None:
-            raw = side_join(kept, kept, F.lit(True))
-        else:
-            # pair expansion with the restricted rows always on one side:
-            # (new x all) where the NEW side is lexicographically smaller,
-            # plus (all-minus-new x new) for the other orientation —
-            # covers each touching pair exactly once, and old-x-old
-            # combinations never expand
-            flags = restrict_ids.select(
-                F.col("clip_id").alias("rid")
-            ).distinct()
-            kept_r = _persist(
-                kept.join(flags, kept["clip_id"] == flags["rid"], "left_semi")
-            )
-            kept_o = kept.join(flags, kept["clip_id"] == flags["rid"], "left_anti")
-            raw = side_join(kept_r, kept, F.lit(True)).unionByName(
-                side_join(kept_o, kept_r, F.lit(True))
-            )
-
+    # a bucket without a new row cannot emit a pair touching one
+    kept_keys = summary.filter(
+        (F.col("bucket_n") <= cfg.band_bucket_cap) & F.col("has_new")
+    ).select("band_idx", "band_key")
+    dropped = summary.filter(F.col("bucket_n") > cfg.band_bucket_cap).select(
+        "band_idx", "band_key", "bucket_n"
+    )
+    kept = buckets.join(kept_keys, ["band_idx", "band_key"])
+    a, b = kept.alias("a"), kept.alias("b")
+    # in a flagged run the is_new filter prunes the prior branch of the
+    # signature union, so the left side explodes only the increment
+    raw = a.filter(F.col("a.is_new")).join(
+        b,
+        (F.col("a.band_idx") == F.col("b.band_idx"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col("a.clip_id") != F.col("b.clip_id"))
+        & (~F.col("b.is_new") | (F.col("b.clip_id") > F.col("a.clip_id"))),
+    ).select(
+        F.col("a.band_idx").alias("band_idx"),
+        F.least("a.clip_id", "b.clip_id").alias("clip_a"),
+        F.greatest("a.clip_id", "b.clip_id").alias("clip_b"),
+        # the Hamming filter is symmetric: no need to order the simhashes
+        F.col("a.simhash").alias("sh_a"),
+        F.col("b.simhash").alias("sh_b"),
+    )
     return _pairs_from_raw(raw, cfg, nb, n_channels, use_pcm), dropped
-
-
-def _raw_touching(raw: DataFrame, restrict_ids: DataFrame) -> DataFrame:
-    """Post-filter raw pair rows to those touching the restricted set
-    (the non-join strategies, where expansion already happened)."""
-    flags_a = restrict_ids.select(F.col("clip_id").alias("clip_a")).distinct()
-    flags_b = restrict_ids.select(F.col("clip_id").alias("clip_b")).distinct()
-    a = raw.join(flags_a, "clip_a", "left_semi")
-    # rows whose ONLY restricted side is clip_b (a-covered rows must not
-    # repeat: the downstream channel aggregation counts raw rows)
-    b = raw.join(flags_b, "clip_b", "left_semi").join(
-        flags_a, "clip_a", "left_anti"
-    )
-    return a.unionByName(b.select(*a.columns))
-
-
-def _expand_bucket_pairs(members: DataFrame) -> DataFrame:
-    """i<j pair expansion of per-bucket member lists, whole-stage codegen:
-    struct sort orders by clip_id (first field), so a=ms[i], b=ms[j>i]
-    gives clip_a<clip_b."""
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ms"), i + F.lit(2), F.size(F.col("ms"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    return members.select("band_idx", F.explode(pair_arr).alias("p")).select(
-        "band_idx",
-        F.col("p.a.clip_id").alias("clip_a"),
-        F.col("p.b.clip_id").alias("clip_b"),
-        F.col("p.a.simhash").alias("sh_a"),
-        F.col("p.b.simhash").alias("sh_b"),
-    )
 
 
 def _pairs_from_raw(

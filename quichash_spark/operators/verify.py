@@ -20,10 +20,11 @@ Scale design — bytes are the enemy:
    token containment) are all built-in column expressions.  On real
    corpora this decides the bulk of candidates (exact/near-text dups).
 2. SLOW PATH (one byte shuffle): remaining pairs explode to
-   (pair, member) rows; the corpus is pruned to participants with a
-   broadcast semi-join (bytes never enter an exchange un-pruned), each
-   payload row is tagged with its pair memberships, and ONE groupBy(pair)
-   brings both members' bytes together for the SNR kernel
+   (pair, member) rows; the corpus scan joins that broadcast membership
+   table, which in one step prunes it to participants (bytes never
+   enter an exchange un-pruned) and tags each payload row with its pair
+   memberships, and ONE groupBy(pair) brings both members' bytes
+   together for the SNR kernel
    (applyInArrow, zero-copy payload access).  Bounded: candidate volume
    is capped upstream by the LSH bucket caps, so pairs << corpus.
 """
@@ -149,9 +150,16 @@ def verify_candidates(
     task_mb: int = 32,
     n_candidates: int | None = None,
     scope: CacheScope | None = None,
+    clip_bytes: float | None = None,
 ) -> DataFrame:
     """candidates(clip_a, clip_b, source) -> verified edges (see module
     docstring for the fast/slow execution split).
+
+    ``clip_bytes``: a bound on payload bytes per clip for sizing the
+    slow-path groups (the pipeline passes 2 x the largest ``n_samples``
+    from the signature checkpoints' parquet footer statistics).  Without
+    it, one 2-int-column scan of ``clips`` estimates the mean.  With both
+    hints and ``signatures``, building the plan submits no Spark job.
 
     ``n_candidates``: known candidate row count (the pipeline passes the
     checkpoint manifest's count).  Without it, ``candidates`` is persisted
@@ -226,17 +234,22 @@ def verify_candidates(
     # guard and fall back to a shuffle semi-join otherwise (AQE still
     # upgrades it to broadcast at runtime when the build side turns out
     # small).  Corpus bytes never shuffle un-pruned on either path.
-    ids = membership.select("clip_id").distinct()
     # conservative upper bound on slow-pair volume, known without a job
     # (manifest hint or the persisted count above)
     n_slow = n_candidates
     if n_slow <= broadcast_pair_limit:
-        ids = F.broadcast(ids)
-        membership = F.broadcast(membership)
-    payload = clips.join(ids, "clip_id", "left_semi").select(
-        "clip_id", "bytes", "codec", "transcript"
-    )
-    tagged = payload.join(membership, "clip_id")
+        # the payload scan probes the broadcast membership table directly:
+        # non-participants drop inside the scan's own tasks, with no id
+        # exchange and no semi-join tier in front of the tagging join
+        tagged = clips.select("clip_id", "bytes", "codec", "transcript").join(
+            F.broadcast(membership), "clip_id"
+        )
+    else:
+        ids = membership.select("clip_id").distinct()
+        payload = clips.join(ids, "clip_id", "left_semi").select(
+            "clip_id", "bytes", "codec", "transcript"
+        )
+        tagged = payload.join(membership, "clip_id")
 
     def verify_group(tbl: "pa.Table") -> "pa.Table":
         # Per-pair work is ~0.2 ms, so per-pair FRAMEWORK work must stay
@@ -327,20 +340,22 @@ def verify_candidates(
     #
     # The group COUNT is a byte budget, not a pair count: each group
     # becomes ONE pandas frame of 2 payload rows per pair, so bytes/task —
-    # estimated from the input's own sr_hz*dur_ms metadata (a cheap
-    # 2-int-column scan) — is what bounds peak task memory.  A fixed
+    # bounded by the ``clip_bytes`` hint, else estimated from the input's
+    # own sr_hz*dur_ms metadata — is what bounds peak task memory.  A fixed
     # pairs-per-task breaks at scale: 128 pairs of 1 MB clips is 256 MB a
     # frame, while 128 pairs of 16 KB clips wastes task granularity.  The
     # floor keeps every core busy on tiny inputs (interleaved A/B at
     # n=200k showed 4 MB vs 32 MB budgets within noise of each other, so
     # the budget is a memory bound, not a throughput dial).
-    # one cheap 2-int-column scan of the corpus (never bytes, never the
-    # signature DAG — which may be un-checkpointed here)
-    avg_bytes = (
-        clips.agg(F.avg(F.col("sr_hz") * F.col("dur_ms") / 500.0)).first()[0] or 16384.0
-    )
+    if clip_bytes is None:
+        # one cheap 2-int-column scan of the corpus (never bytes, never
+        # the signature DAG — which may be un-checkpointed here)
+        clip_bytes = (
+            clips.agg(F.avg(F.col("sr_hz") * F.col("dur_ms") / 500.0)).first()[0]
+            or 16384.0
+        )
     par = candidates.sparkSession.sparkContext.defaultParallelism
-    by_budget = int(n_slow * 2 * avg_bytes) // (task_mb << 20) + 1
+    by_budget = int(n_slow * 2 * clip_bytes) // (task_mb << 20) + 1
     n_groups = max(2 * par, min(n_slow + 1, by_budget))
     slow = (
         tagged.withColumn(

@@ -11,6 +11,18 @@ resumes by skipping completed stages (manifest-gated, idempotent writes).
                  ├─4→ simhash candidates ───┼─6→ verify┼─7→ clusters
                  └─5→ containment cands ────┘          │
                                         8: metrics + manifest (all stages)
+
+Batch (:func:`run_pipeline`) and incremental (:func:`incremental_update`)
+runs share ONE stage graph (:func:`_run_stages`).  An incremental run
+computes signatures for the increment only, unions them with the prior
+checkpoint's signatures and tags the union with a literal ``is_new``
+column (False on prior rows, True on the increment); the candidate
+self-join keeps the new rows on one side, so only pairs touching a new
+clip expand.  A batch run has no prior and no flag: every row is new.
+
+The stages after signatures size themselves from what the checkpoints
+already record — manifest row counts and parquet footer statistics — so
+they submit no sizing jobs of their own.
 """
 
 from __future__ import annotations
@@ -42,13 +54,19 @@ class PipelineResult:
 
 
 def _stage(store: CheckpointStore, name: str, build, timings: dict[str, float]) -> DataFrame:
-    """Run ``build()`` and checkpoint unless the manifest says complete."""
+    """Run ``build()`` and checkpoint unless the manifest says complete.
+
+    ``build`` returns the stage table, or ``(table, lineage)`` where
+    ``lineage`` maps extra metrics-table names to DataFrames that
+    :meth:`CheckpointStore.write` counts before marking the stage
+    complete."""
     if store.is_complete(name):
         timings[name] = 0.0
         return store.read(name)
     t0 = time.monotonic()
-    df = build()
-    out = store.write(df, name)  # records per-partition lineage metrics too
+    built = build()
+    df, lineage = built if isinstance(built, tuple) else (built, None)
+    out = store.write(df, name, lineage=lineage)  # records per-partition lineage metrics too
     timings[name] = round(time.monotonic() - t0, 3)
     return out
 
@@ -61,110 +79,8 @@ def run_pipeline(
     use_pcm_lsh: bool = True,
     use_containment: bool = False,
 ) -> PipelineResult:
-    timings: dict[str, float] = {}
     store = CheckpointStore(spark, checkpoint_dir, cfg)
-
-    # include_minhash=False: the dedup stages consume band keys + scalars
-    # only, so the checkpoint (and the Python->JVM exchange) skips the raw
-    # 128-perm MinHash vectors — ~400 MB of incompressible longs per 200k
-    # clips.  Containment's bucket scan reads the precomputed band_keys
-    # columns (identical bucketing, see lsh.band_table).
-    signatures = _stage(
-        store,
-        "signatures",
-        lambda: compute_signatures(clips, cfg, include_minhash=False),
-        timings,
-    )
-
-    exact_groups = _stage(
-        store, "exact_groups", lambda: exact_duplicate_groups(signatures), timings
-    )
-    # star edges derive from the (tiny) groups table — no second
-    # checkpoint stage; clip_ids are sorted so element 1 is the group min
-    exact_edges = exact_groups.select(
-        F.element_at("clip_ids", 1).alias("clip_a"),
-        F.explode("clip_ids").alias("clip_b"),
-    ).filter(F.col("clip_a") != F.col("clip_b"))
-
-    # per-run registry: concurrent pipelines in one session each release
-    # only their own persisted bucket summaries (not each other's)
-    scope = CacheScope()
-
-    def build_candidates() -> DataFrame:
-        from quichash_spark.operators.lsh import unified_candidates
-
-        # every channel (text LSH, pcm LSH, simhash chunks) through ONE
-        # bucket table => one sizes pass, one kept-join, one self-join
-        pairs, dropped = unified_candidates(
-            signatures, cfg, use_pcm=use_pcm_lsh, scope=scope
-        )
-        store.append_metrics("buckets_dropped", dropped)
-        if use_containment:
-            # redundant with lsh_text + the verify kernel's containment
-            # acceptance (same buckets) — off by default, available for
-            # configs that cap pair generation harder than bucket scans
-            cont = containment_candidates(signatures, cfg)
-            pairs = (
-                pairs.unionByName(cont.withColumnRenamed("source", "source"))
-                .groupBy("clip_a", "clip_b")
-                .agg(F.concat_ws(",", F.sort_array(F.collect_set("source"))).alias("source"))
-            )
-        return pairs
-
-    try:
-        candidates = _stage(store, "candidates", build_candidates, timings)
-    finally:
-        # the bucket summaries persisted inside unified_candidates are
-        # fully consumed once the candidates checkpoint exists (and dead
-        # weight if the stage failed); release THIS run's caches only
-        scope.release()
-
-    # exact pairs need no re-verification (proven identical by content
-    # hash) but they also cost nothing: identical pcm_hash routes them
-    # through the JVM fast path where transcript equality accepts them —
-    # so no anti-join barrier is spent carving them out
-    def build_verified() -> DataFrame:
-        # manifest row count: sizing without a count job (even the
-        # footer-metadata count is free to skip)
-        return verify_candidates(
-            candidates, clips, cfg, signatures=signatures,
-            n_candidates=store.rows("candidates"), scope=scope,
-        )
-
-    try:
-        verified = _stage(store, "verified_edges", build_verified, timings)
-    finally:
-        # no-op when the manifest count fed n_candidates; drains the
-        # self-sizing persist otherwise (ADVICE r4: don't defer to a
-        # manual module-level release)
-        scope.release()
-
-    def build_clusters() -> DataFrame:
-        edges = (
-            verified.filter(F.col("accepted"))
-            .select("clip_a", "clip_b")
-            .unionByName(exact_edges.select("clip_a", "clip_b"))
-        )
-        assign = connected_components(edges, cfg.cc_max_iters)
-        all_clips = signatures.select("clip_id")
-        return (
-            all_clips.join(assign, "clip_id", "left")
-            .select(
-                "clip_id",
-                F.coalesce("cluster_id", "clip_id").alias("cluster_id"),
-            )
-        )
-
-    clusters = _stage(store, "clusters", build_clusters, timings)
-
-    return PipelineResult(
-        signatures=signatures,
-        exact_groups=exact_groups,
-        candidates=candidates,
-        verified=verified,
-        clusters=clusters,
-        stage_seconds=timings,
-    )
+    return _run_stages(store, cfg, clips, clips, None, use_pcm_lsh, use_containment)
 
 
 def incremental_update(
@@ -186,17 +102,24 @@ def incremental_update(
       decode-everything stage (the dominant cost) runs on the increment
       only, and old ``bytes`` are never re-read except for the bounded
       set of old clips that participate in a new candidate pair (the
-      verify stage's existing semi-join pruning);
+      verify stage's membership join prunes the payload scan);
     - CANDIDATES run the identical unified bucket machinery over the
-      signature union, then keep only pairs touching a new clip —
-      bucket sizes (and therefore the skew caps) are computed over the
-      FULL corpus, exactly as a batch run would see them;
+      signature union, tagged with ``is_new`` (False on the prior
+      checkpoint's rows, True on the increment).  Bucket sizes (and
+      therefore the skew caps) are computed over the FULL corpus,
+      exactly as a batch run would see them; only buckets holding a new
+      row expand, with the new rows on one side of the self-join, so
+      exactly the batch pairs that touch a new clip are emitted;
     - CLUSTERS: prior assignments enter connected components as
       (cluster_id, clip_id) edges — the transitive reduction of every
       previously-accepted pair — unioned with the newly verified
-      edges, so the result equals the batch run's transitive closure
-      (new bridge clips correctly MERGE previously-separate clusters;
-      tests assert batch == incremental exactly).
+      edges and the exact-duplicate edges, so the result equals the
+      batch run's transitive closure (new bridge clips correctly MERGE
+      previously-separate clusters; tests assert batch == incremental
+      exactly).  Exact edges go in unfiltered: an old-x-old exact pair
+      was already clustered by the prior run, so its edge is redundant
+      with the prior edges and changes no component, and filtering it
+      would cost more jobs than the few extra edges.
 
     At 10^12 scale the band-key explode over old signatures would be
     replaced by a maintained bucket table (same keys, persisted);
@@ -205,96 +128,136 @@ def incremental_update(
     ``all_clips`` must contain every clip (old + new) — it is only read
     through verification's byte-pruned path.
     """
-    timings: dict[str, float] = {}
     prior = CheckpointStore(spark, prior_checkpoint_dir, cfg)
     for stage in ("signatures", "clusters"):
         if not prior.is_complete(stage):
             raise ValueError(
                 f"prior checkpoint missing completed stage {stage!r}"
             )
-    old_sigs = prior.read("signatures")
-    old_clusters = prior.read("clusters")
     store = CheckpointStore(spark, checkpoint_dir, cfg)
+    return _run_stages(store, cfg, new_clips, all_clips, prior, use_pcm_lsh)
 
+
+def _run_stages(
+    store: CheckpointStore,
+    cfg: DedupConfig,
+    new_clips: DataFrame,
+    all_clips: DataFrame,
+    prior: CheckpointStore | None,
+    use_pcm_lsh: bool,
+    use_containment: bool = False,
+) -> PipelineResult:
+    """The stage graph of both run shapes: ``prior`` is None for a batch
+    run, else the completed prior checkpoint an increment extends."""
+    timings: dict[str, float] = {}
+
+    # include_minhash=False: the dedup stages consume band keys + scalars
+    # only, so the checkpoint (and the Python->JVM exchange) skips the raw
+    # 128-perm MinHash vectors — ~400 MB of incompressible longs per 200k
+    # clips.  Containment's bucket scan reads the precomputed band_keys
+    # columns (identical bucketing, see lsh.band_table).
     new_sigs = _stage(
         store,
         "signatures",
         lambda: compute_signatures(new_clips, cfg, include_minhash=False),
         timings,
     )
-    signatures = old_sigs.unionByName(new_sigs)
-    new_ids = new_sigs.select(F.col("clip_id").alias("nid"))
-
-    def _touching_new(pairs: DataFrame) -> DataFrame:
-        """Pairs with at least one NEW side (either column)."""
-        a = pairs.join(
-            new_ids, pairs["clip_a"] == new_ids["nid"], "left_semi"
+    sig_stores = [store]
+    signatures = new_sigs
+    if prior is not None:
+        sig_stores.append(prior)
+        signatures = (
+            prior.read("signatures").withColumn("is_new", F.lit(False))
+            .unionByName(new_sigs.withColumn("is_new", F.lit(True)))
         )
-        b = pairs.join(
-            new_ids, pairs["clip_b"] == new_ids["nid"], "left_semi"
-        )
-        return a.unionByName(b).dropDuplicates(["clip_a", "clip_b"])
 
     exact_groups = _stage(
-        store, "exact_groups",
-        lambda: exact_duplicate_groups(signatures), timings,
+        store, "exact_groups", lambda: exact_duplicate_groups(signatures), timings
     )
-    exact_edges = _touching_new(
-        exact_groups.select(
-            F.element_at("clip_ids", 1).alias("clip_a"),
-            F.explode("clip_ids").alias("clip_b"),
-        ).filter(F.col("clip_a") != F.col("clip_b"))
-    )
+    # star edges derive from the (tiny) groups table — no second
+    # checkpoint stage; clip_ids are sorted so element 1 is the group min
+    exact_edges = exact_groups.select(
+        F.element_at("clip_ids", 1).alias("clip_a"),
+        F.explode("clip_ids").alias("clip_b"),
+    ).filter(F.col("clip_a") != F.col("clip_b"))
 
+    # per-run registry: concurrent pipelines in one session each release
+    # only their own persisted bucket summaries (not each other's)
     scope = CacheScope()
 
-    def build_candidates() -> DataFrame:
+    def build_candidates():
         from quichash_spark.operators.lsh import unified_candidates
 
-        # restrict_ids: pair expansion keeps the (small) new band rows on
-        # one join side, so old-x-old combinations never materialize —
-        # bucket sizes/caps still see the full corpus (batch-identical)
+        # every channel (text LSH, pcm LSH, simhash chunks) through ONE
+        # bucket table => one sizes pass, one kept-join, one self-join
         pairs, dropped = unified_candidates(
-            signatures, cfg, use_pcm=use_pcm_lsh, scope=scope,
-            restrict_ids=new_ids.select(F.col("nid").alias("clip_id")),
+            signatures, cfg, use_pcm=use_pcm_lsh, scope=scope
         )
-        store.append_metrics("buckets_dropped", dropped)
-        return pairs
+        if use_containment:
+            # redundant with lsh_text + the verify kernel's containment
+            # acceptance (same buckets) — off by default, available for
+            # configs that cap pair generation harder than bucket scans
+            cont = containment_candidates(signatures, cfg)
+            pairs = (
+                pairs.unionByName(cont)
+                .groupBy("clip_a", "clip_b")
+                .agg(F.concat_ws(",", F.sort_array(F.collect_set("source"))).alias("source"))
+            )
+        # the dropped-bucket lineage is counted off the cached summary
+        # after the candidates write has filled it
+        return pairs, {"buckets_dropped": dropped}
 
     try:
         candidates = _stage(store, "candidates", build_candidates, timings)
     finally:
+        # the bucket summary persisted inside unified_candidates is fully
+        # consumed once the candidates checkpoint and its lineage exist
+        # (and dead weight if the stage failed); release THIS run's caches
         scope.release()
 
+    # exact pairs need no re-verification (proven identical by content
+    # hash) but they also cost nothing: identical pcm_hash routes them
+    # through the JVM fast path where transcript equality accepts them —
+    # so no anti-join barrier is spent carving them out
     def build_verified() -> DataFrame:
+        # sizing hints without a job: the manifest's candidate count and
+        # the longest clip from the signature footers (16-bit samples)
+        longest = [s.column_max("signatures", "n_samples") for s in sig_stores]
         return verify_candidates(
             candidates, all_clips, cfg, signatures=signatures,
-            n_candidates=store.rows("candidates"), scope=scope,
+            n_candidates=store.rows("candidates"),
+            clip_bytes=None if None in longest else 2 * max(longest),
         )
 
-    try:
-        verified = _stage(store, "verified_edges", build_verified, timings)
-    finally:
-        scope.release()
+    verified = _stage(store, "verified_edges", build_verified, timings)
 
     def build_clusters() -> DataFrame:
-        prior_edges = (
-            old_clusters.filter(F.col("clip_id") != F.col("cluster_id"))
-            .select(
-                F.col("cluster_id").alias("clip_a"),
-                F.col("clip_id").alias("clip_b"),
-            )
-        )
         edges = (
             verified.filter(F.col("accepted"))
             .select("clip_a", "clip_b")
             .unionByName(exact_edges.select("clip_a", "clip_b"))
-            .unionByName(prior_edges)
         )
-        assign = connected_components(edges, cfg.cc_max_iters)
-        all_ids = signatures.select("clip_id")
+        # edge bound from manifest rows: accepted <= verified rows, star
+        # edges <= clips, prior (cluster_id, clip_id) edges <= its rows
+        bound = [store.rows("verified_edges"), store.rows("signatures")]
+        if prior is not None:
+            prior_edges = (
+                prior.read("clusters")
+                .filter(F.col("clip_id") != F.col("cluster_id"))
+                .select(
+                    F.col("cluster_id").alias("clip_a"),
+                    F.col("clip_id").alias("clip_b"),
+                )
+            )
+            edges = edges.unionByName(prior_edges)
+            bound += [prior.rows("signatures"), prior.rows("clusters")]
+        assign = connected_components(
+            edges, cfg.cc_max_iters,
+            max_edges=None if None in bound else sum(bound),
+        )
         return (
-            all_ids.join(assign, "clip_id", "left")
+            signatures.select("clip_id")
+            .join(assign, "clip_id", "left")
             .select(
                 "clip_id",
                 F.coalesce("cluster_id", "clip_id").alias("cluster_id"),

@@ -60,3 +60,41 @@ def codegen_stage_count(df: DataFrame) -> int:
         if "*(" in line
     }
     return len(ids)
+
+
+def _seq(s) -> list:
+    """A Scala ``Seq`` (py4j proxy) as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def plan_nodes(df: DataFrame) -> list:
+    """Every node of ``df``'s executed physical plan (py4j proxies),
+    descending through adaptive-plan and query-stage wrappers — for
+    node-level assertions that do not depend on how Spark prints plans."""
+    stack = [df._jdf.queryExecution().executedPlan()]  # type: ignore[attr-defined]
+    out = []
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        else:
+            stack.extend(_seq(node.children()))
+    return out
+
+
+def expression_count(df: DataFrame, class_name: str) -> int:
+    """How many instances of the Catalyst expression class ``class_name``
+    (simple name, e.g. ``"StringSplit"``) the executed plan's nodes hold,
+    lambda bodies included."""
+    n = 0
+    for node in plan_nodes(df):
+        stack = _seq(node.expressions())
+        while stack:
+            e = stack.pop()
+            n += e.getClass().getSimpleName() == class_name
+            stack.extend(_seq(e.children()))
+    return n

@@ -42,7 +42,11 @@ def get_spark(
         # 14s on the 400k-clip candidates stage.  Safe at scale: SHJ is
         # only picked when a build side fits its per-partition budget,
         # bucket caps bound per-key fan-out, and AQE skew-split still
-        # applies to shuffled-hash joins.
+        # applies to shuffled-hash joins.  The setting is session-wide,
+        # and that safety argument rests on this repo's bucket caps
+        # (band_bucket_cap) bounding per-key fan-out: a future join over
+        # an uncapped skewed key should carry a per-query join hint
+        # rather than inherit this preference.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         # InferFiltersFromGenerate infers `size(child)>0` under every
         # explode and predicate pushdown then INLINES the generator child

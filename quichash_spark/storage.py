@@ -24,6 +24,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from quichash_spark.config import DedupConfig
 
@@ -75,29 +76,40 @@ class CheckpointStore:
     def _table_path(self, stage: str) -> str:
         return str(self.base / stage)
 
-    def write(self, df: DataFrame, stage: str, wall_ms: float | None = None) -> DataFrame:
+    def write(self, df: DataFrame, stage: str, wall_ms: float | None = None,
+              lineage: dict[str, DataFrame] | None = None) -> DataFrame:
         """Idempotent overwrite of a stage table; marks the stage complete.
 
         Per-partition lineage comes from the written parquet FOOTERS
         (one part-file per output partition, num_rows read driver-side
         with pyarrow) — zero extra Spark jobs per stage; Iceberg keeps
         the read-back aggregate path (its files carry the counts in
-        manifests, but the generic route is one aggregate job).
+        manifests, but the generic route is one aggregate job).  The
+        manifest records the schema just written and :meth:`read` reuses
+        it, so no footer-inference job follows the write.
+
+        ``lineage``: further per-partition lineage tables (metrics stage
+        name -> DataFrame), counted after the stage table is written and
+        before the manifest marks it complete — e.g. the candidates
+        stage's dropped buckets, read off the summary its write cached.
+        A resumed run therefore finds them whenever the stage is
+        complete.
         """
         t0 = time.monotonic()
         if self.use_iceberg:
             df.writeTo(f"{self.iceberg_namespace}.{stage}").createOrReplace()
-            out = self.read(stage)
             per_part = (
-                out.groupBy(F.spark_partition_id().alias("partition_id"))
+                self.read(stage)
+                .groupBy(F.spark_partition_id().alias("partition_id"))
                 .agg(F.count("*").alias("rows_out"))
                 .collect()
             )
             parts = [(r["partition_id"], r["rows_out"]) for r in per_part]
         else:
             df.write.mode("overwrite").parquet(self._table_path(stage))
-            out = self.read(stage)
             parts = self._footer_partition_rows(stage)
+        for name, extra in (lineage or {}).items():
+            self.append_metrics(name, extra)
         rows = sum(n for _, n in parts)
         self._append_metrics_rows(stage, parts)
         manifest = self._read_manifest()
@@ -105,11 +117,12 @@ class CheckpointStore:
             "status": "complete",
             "config_hash": self.cfg_hash,
             "rows": rows,
+            "schema": df.schema.jsonValue(),
             "wall_ms": round(wall_ms if wall_ms is not None else (time.monotonic() - t0) * 1000, 1),
             "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
         }
         self._write_manifest(manifest)
-        return out
+        return self.read(stage)
 
     def adopt(self, stage: str, wall_ms: float | None = None) -> DataFrame:
         """Register an externally-materialized parquet dir as a completed
@@ -140,9 +153,37 @@ class CheckpointStore:
         return None
 
     def read(self, stage: str) -> DataFrame:
+        """The stage table; parquet reads use the schema the manifest
+        recorded at write time (no footer-inference job), when it has
+        one."""
         if self.use_iceberg:
             return self.spark.read.table(f"{self.iceberg_namespace}.{stage}")
-        return self.spark.read.parquet(self._table_path(stage))
+        ent = self._read_manifest().get(stage) or {}
+        reader = self.spark.read
+        if "schema" in ent:
+            reader = reader.schema(StructType.fromJson(ent["schema"]))
+        return reader.parquet(self._table_path(stage))
+
+    def column_max(self, stage: str, column: str) -> int | None:
+        """Maximum of a numeric column from the stage's parquet footer
+        statistics — driver-side metadata, no Spark job.  None when the
+        stage has no files or a row group lacks statistics."""
+        import pyarrow.parquet as pq
+
+        best = None
+        for f in sorted(Path(self._table_path(stage)).glob("part-*")):
+            md = pq.ParquetFile(str(f)).metadata
+            paths = [md.schema.column(i).path for i in range(md.num_columns)]
+            idx = paths.index(column)
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                st = rg.column(idx).statistics
+                if st is not None and st.has_null_count and st.null_count == rg.num_rows:
+                    continue  # empty or all-null row group
+                if st is None or not st.has_min_max:
+                    return None
+                best = st.max if best is None else max(best, st.max)
+        return best
 
     def invalidate(self, stage: str) -> None:
         manifest = self._read_manifest()
@@ -194,10 +235,15 @@ class CheckpointStore:
         pq.write_table(table, mdir / f"{stage}_{batch_ms}.parquet")
 
     def append_metrics(self, stage: str, df: DataFrame) -> None:
-        """Aggregate per-partition counts of ``df`` into the metrics table
-        (one Spark job + driver-side write)."""
+        """Count ``df``'s rows per partition into the metrics table: one
+        Spark job, then a driver-side write.  The partition id is taken
+        before a ``coalesce(1)``, so the count streams through a single
+        task with no exchange (a plain groupBy on the partition id adds
+        one, which adaptive execution runs as a second job)."""
         per_part = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
+            df.select(F.spark_partition_id().alias("partition_id"))
+            .coalesce(1)
+            .groupBy("partition_id")
             .agg(F.count("*").alias("rows_out"))
             .collect()
         )

@@ -26,6 +26,24 @@ def test_content_hash_golden():
     assert hashing.content_hash(pcm + 1, "hello world") != got
 
 
+@pytest.mark.parametrize(
+    "pcm, transcript",
+    [
+        (np.arange(-40, 40, dtype=np.int16), "hello world"),
+        (np.arange(8, dtype=np.int16), ""),
+        (np.empty(0, np.int16), "only text"),
+        (np.empty(0, np.int16), ""),
+        (np.array([1, -2, 3], dtype=np.int32), "wider dtype, ünïcode"),
+    ],
+)
+def test_content_and_pcm_hash_equals_two_content_hashes(pcm, transcript):
+    """The one-pass digest pair equals the two independent digests."""
+    assert hashing.content_and_pcm_hash(pcm, transcript) == (
+        hashing.content_hash(pcm, transcript),
+        hashing.content_hash(pcm, ""),
+    )
+
+
 def test_empty_inputs():
     assert hashing.shingle_hashes("", 5).size == 0
     assert hashing.simhash64_i64("") == 0

@@ -134,6 +134,38 @@ def test_metrics_lineage_rows(spark, result):
         assert sums[stage] == store.read(stage).count(), stage
 
 
+def test_dropped_bucket_lineage_survives_resume(spark, tiny_clips, tmp_path):
+    """The candidates write records the dropped-bucket lineage before the
+    manifest marks the stage complete, so a resumed run that skips the
+    stage still reports it."""
+    from dataclasses import replace
+
+    from quichash_spark.config import CLIPS_CONFIG
+    from quichash_spark.pipeline import run_pipeline
+    from quichash_spark.storage import CheckpointStore
+
+    cfg = replace(CLIPS_CONFIG, band_bucket_cap=5)  # the hot "ok" band drops
+    ckpt = str(tmp_path / "capped")
+    run_pipeline(spark, tiny_clips, ckpt, cfg)
+    store = CheckpointStore(spark, ckpt, cfg)
+
+    def dropped() -> int:
+        return (
+            store.latest_metrics()
+            .filter(F.col("stage") == "buckets_dropped")
+            .agg(F.sum("rows_out"))
+            .first()[0]
+        )
+
+    n = dropped()
+    assert n >= 36  # 32 text bands + 4 simhash chunks of the hot band
+    store.invalidate("verified_edges")
+    store.invalidate("clusters")
+    res = run_pipeline(spark, tiny_clips, ckpt, cfg)
+    assert res.stage_seconds["candidates"] == 0.0
+    assert dropped() == n
+
+
 def test_partitioning_equivalence(spark, tmp_path_factory):
     """Reference parallel==sequential test (src/scan.rs:960-1028): the
     cluster table is identical for different input partitionings."""

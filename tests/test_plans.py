@@ -130,3 +130,76 @@ def test_text_repetition_is_shuffle_free(spark):
     assert "Exchange" not in plan
     assert "Python" not in plan
     assert df.count() > 0
+
+
+def _job_count(spark) -> int:
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_checkpoint_write_readback_submits_no_job(spark, tmp_path):
+    """CheckpointStore.write reads its table back with the schema it just
+    wrote, and read() reuses the manifest's copy: neither runs the
+    footer-inference job a bare parquet read pays."""
+    from quichash_spark.config import CLIPS_CONFIG
+    from quichash_spark.storage import CheckpointStore
+
+    df = spark.createDataFrame(
+        [("a", 1, [1, 2]), ("b", None, [])], "clip_id string, n int, ks array<bigint>"
+    )
+    before = _job_count(spark)
+    df.write.parquet(str(tmp_path / "plain"))
+    write_jobs = _job_count(spark) - before
+
+    store = CheckpointStore(spark, str(tmp_path / "ck"), CLIPS_CONFIG)
+    before = _job_count(spark)
+    out = store.write(df, "stage")
+    assert _job_count(spark) - before == write_jobs
+    before = _job_count(spark)
+    again = store.read("stage")
+    assert _job_count(spark) == before
+    assert out.schema == again.schema == spark.read.parquet(str(tmp_path / "plain")).schema
+    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_verify_plan_build_with_hints_submits_no_job(spark, tiny_clips):
+    """With signatures and both sizing hints (candidate count, bytes per
+    clip), building verify_candidates' plan runs no Spark job."""
+    from quichash_spark.config import CLIPS_CONFIG
+    from quichash_spark.functions.udfs import compute_signatures
+    from quichash_spark.operators.verify import verify_candidates
+
+    sigs = compute_signatures(
+        tiny_clips, CLIPS_CONFIG, include_minhash=False
+    ).localCheckpoint(eager=True)
+    cands = spark.createDataFrame(
+        [("clip_00000000", "clip_00000001", "lsh_text")],
+        "clip_a string, clip_b string, source string",
+    )
+    before = _job_count(spark)
+    out = verify_candidates(
+        cands, tiny_clips, CLIPS_CONFIG, signatures=sigs,
+        n_candidates=1, clip_bytes=32_000,
+    )
+    assert _job_count(spark) == before
+    assert out.count() == 1  # the plan still runs
+
+
+def test_connected_components_under_bound_runs_no_checksum_job(spark):
+    """An edge bound under local_finish_threshold sends the edges straight
+    to the union-find task: building the plan runs no checksum job, and
+    materializing it runs a single job."""
+    from quichash_spark.operators.connected_components import connected_components
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], "clip_a string, clip_b string"
+    )
+    before = _job_count(spark)
+    unhinted = connected_components(edges)
+    assert _job_count(spark) > before  # the checksum job the bound saves
+    before = _job_count(spark)
+    hinted = connected_components(edges, max_edges=3)
+    assert _job_count(spark) == before
+    got = {r["clip_id"]: r["cluster_id"] for r in hinted.collect()}
+    assert _job_count(spark) - before == 1
+    assert got == {r["clip_id"]: r["cluster_id"] for r in unhinted.collect()}
+    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}

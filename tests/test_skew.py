@@ -47,25 +47,6 @@ def test_unified_candidates_drops_hot_and_reports(spark, tiny_clips):
     assert not {(a, b) for a in ok_ids for b in ok_ids if a < b} & got
 
 
-def test_unified_candidates_strategies_agree(spark, tiny_clips):
-    """The one-shuffle agg expansion must produce byte-identical pairs,
-    sources, and pcm-hit filtering to the reference band self-join."""
-    from quichash_spark.config import CLIPS_CONFIG
-    from quichash_spark.functions.udfs import compute_signatures
-    from quichash_spark.operators.lsh import unified_candidates
-
-    sigs = compute_signatures(tiny_clips, CLIPS_CONFIG).cache()
-    results = {}
-    drops = {}
-    for s in ("window", "join", "agg"):
-        pairs, dropped = unified_candidates(sigs, CLIPS_CONFIG, strategy=s)
-        results[s] = {tuple(r) for r in pairs.collect()}
-        drops[s] = {(r["band_idx"], r["band_key"], r["bucket_n"]) for r in dropped.collect()}
-    assert results["window"] == results["join"] == results["agg"]
-    assert results["join"]
-    assert drops["window"] == drops["join"] == drops["agg"]
-
-
 def test_slim_signatures_equivalent_buckets(spark, tiny_clips):
     """Pipeline checkpoints omit the raw MinHash vectors; bucket-based
     operators must behave identically off the precomputed band keys."""
@@ -85,12 +66,14 @@ def test_slim_signatures_equivalent_buckets(spark, tiny_clips):
     assert cf == cs and cf
 
 
-def test_unified_candidates_restrict_ids_equals_postfilter(spark, tiny_clips):
-    """restrict_ids (the incremental expansion shape) must produce
-    EXACTLY the pairs of the unrestricted run that touch the set —
-    same channel sources, same pcm-hit thresholding — for both the
-    join strategy (one-sided expansion) and the agg strategy
-    (post-filter of raw rows)."""
+def test_unified_candidates_is_new_equals_postfilter(spark, tiny_clips):
+    """``is_new``-flagged signatures (the incremental shape: a literal
+    flag on each branch of a signature union) must produce EXACTLY the
+    pairs of the unflagged run that touch a new clip — same channel
+    sources, same pcm-hit thresholding — and the same dropped buckets,
+    because sizes and caps still see the full input."""
+    from dataclasses import replace
+
     from pyspark.sql import functions as F
 
     from quichash_spark.config import CLIPS_CONFIG
@@ -99,19 +82,27 @@ def test_unified_candidates_restrict_ids_equals_postfilter(spark, tiny_clips):
 
     sigs = compute_signatures(tiny_clips, CLIPS_CONFIG, include_minhash=False)
     sigs = sigs.localCheckpoint(eager=True)
-    new_ids = sigs.select("clip_id").filter(F.col("clip_id") >= "clip_00000150")
-
-    full, _ = unified_candidates(sigs, CLIPS_CONFIG)
-    want = sorted(
-        (r["clip_a"], r["clip_b"], r["source"])
-        for r in full.collect()
-        if r["clip_a"] >= "clip_00000150" or r["clip_b"] >= "clip_00000150"
+    new = F.col("clip_id") >= "clip_00000150"
+    flagged = (
+        sigs.filter(~new).withColumn("is_new", F.lit(False))
+        .unionByName(sigs.filter(new).withColumn("is_new", F.lit(True)))
     )
-    for strategy in ("join", "agg"):
-        got_df, _ = unified_candidates(
-            sigs, CLIPS_CONFIG, strategy=strategy, restrict_ids=new_ids
+
+    def dropped_set(df):
+        return {(r["band_idx"], r["band_key"], r["bucket_n"]) for r in df.collect()}
+
+    # the capped config drops the hot "ok" band's buckets
+    for cfg in (CLIPS_CONFIG, replace(CLIPS_CONFIG, band_bucket_cap=5)):
+        full, full_dropped = unified_candidates(sigs, cfg)
+        want = sorted(
+            (r["clip_a"], r["clip_b"], r["source"])
+            for r in full.collect()
+            if r["clip_a"] >= "clip_00000150" or r["clip_b"] >= "clip_00000150"
         )
+        got_df, got_dropped = unified_candidates(flagged, cfg)
         got = sorted(
             (r["clip_a"], r["clip_b"], r["source"]) for r in got_df.collect()
         )
-        assert got == want, strategy
+        assert got == want and want, cfg.band_bucket_cap
+        assert dropped_set(got_dropped) == dropped_set(full_dropped)
+    assert dropped_set(got_dropped)
