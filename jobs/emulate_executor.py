@@ -194,7 +194,7 @@ def main() -> None:
         t0 = time.monotonic()
         clips = spark.read.parquet(*inputs)
         n_cand = (args.n_candidates // args.n_procs + 1
-                  if args.n_candidates is not None else None)
+                  if args.n_candidates is not None else candidates.count())
         verified = verify_candidates(candidates, clips, CLIPS_CONFIG,
                                      signatures=signatures, n_candidates=n_cand)
         verified.write.mode("overwrite").parquet(args.output)

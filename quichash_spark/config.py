@@ -29,7 +29,6 @@ class DedupConfig:
     minhash_seed: int = 1       # seed stream for (a_i, b_i) permutation params
 
     # --- SimHash ---
-    simhash_bits: int = 64
     simhash_hamming_r: int = 3  # Hamming-ball radius for the probe
     simhash_chunks: int = 4     # pigeonhole chunks (r+1) for exact-radius probe
 
@@ -51,8 +50,7 @@ class DedupConfig:
     # the content-hash channel, so dropping hot buckets costs no recall on
     # true duplicates while bounding the join fan-out.
     band_bucket_cap: int = 300     # max rows per (band, band_hash) bucket
-    pair_cap_per_bucket: int = 50000  # max candidate pairs emitted per bucket
-    salt_buckets: int = 16         # salt fan-out for hot-band repartitioning
+    salt_buckets: int = 16         # containment scan tasks per core
     # pairs found ONLY by the pcm channel need >= this many matching
     # bands (of cfg.bands): random frame-word collisions hit 1 band,
     # true audio near-dups (J >~ 0.5) hit many — collision-count filter

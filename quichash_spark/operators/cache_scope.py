@@ -1,14 +1,12 @@
-"""Pipeline-scoped registry for persisted intermediate DataFrames.
+"""Caller-owned registry for persisted intermediate DataFrames.
 
-The LSH and verify stages persist small intermediates (bucket summaries,
-self-sized candidate inputs) that must outlive the function that created
-them — the caller materializes the returned DataFrames, THEN the caches
-can go.  A module-global list (rounds 1-4) assumed one pipeline per
-session: two concurrent pipelines calling ``release_cached()`` would
-unpersist each other's blocks mid-run.  Each ``run_pipeline`` now owns a
-:class:`CacheScope` and passes it down, so releases are scoped to the
-run; the module-level ``release_cached()`` helpers remain as the default
-scope for ad-hoc single-pipeline sessions.
+The LSH stage persists a small intermediate (the bucket summary) that
+must outlive the function that created it — the caller materializes the
+returned DataFrames, THEN the cache can go.  There is no module default
+scope: a module-global list would let two pipelines sharing a session
+unpersist each other's blocks mid-run, and nothing would ever drain it.
+Each run owns a :class:`CacheScope`, passes it down and releases it, so
+releases are scoped to the run.
 """
 
 from __future__ import annotations

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from quichash_spark.config import DedupConfig
+from quichash_spark.operators.lsh import _capped_self_join, band_table
 
 FULL_MATRIX_LIMIT = 256
 
@@ -253,16 +254,12 @@ def _scan_task_pairs(pdf: pd.DataFrame, strategy: str) -> pd.DataFrame:
     return pd.concat(frames, ignore_index=True)
 
 
-def containment_candidates(
-    signatures: DataFrame, cfg: DedupConfig, kept: DataFrame | None = None,
-    strategy: str = "auto",
-) -> DataFrame:
+def containment_candidates(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Candidate pairs (clip_a < clip_b, source='containment').
 
-    ``kept`` lets callers share the (cached) kept-bucket table with the
-    LSH pair stage instead of recomputing banding + bucket sizes.
-    ``strategy`` selects the per-bucket scan ('auto'/'matrix'/'aho'/
-    'suffix' — see :func:`_bucket_pairs`); all are pair-identical.
+    The buckets scanned are the kept text-band buckets of the LSH stage's
+    capped-bucket self-join (2..``band_bucket_cap`` members); each is
+    scanned with :func:`_bucket_pairs`' default strategy.
 
     NOTE: within the pipeline this channel is subsumed — its buckets are
     exactly the LSH pair-generation buckets, so every containment pair it
@@ -271,11 +268,7 @@ def containment_candidates(
     direct containment queries (and for configs where LSH pair generation
     is capped harder than bucket scans).
     """
-    if kept is None:
-        from quichash_spark.operators.lsh import kept_buckets
-
-        kept, _ = kept_buckets(signatures, cfg, "minhash_text")
-
+    kept, _, _ = _capped_self_join(band_table(signatures), cfg.band_bucket_cap)
     texts = signatures.select(
         "clip_id", "transcript", F.xxhash64("transcript").alias("thash")
     )
@@ -304,7 +297,7 @@ def containment_candidates(
         )
         .groupBy("task_bucket")
         .applyInPandas(
-            lambda pdf: _scan_task_pairs(pdf, strategy), _PAIR_SCHEMA
+            lambda pdf: _scan_task_pairs(pdf, "auto"), _PAIR_SCHEMA
         )
         .dropDuplicates(["thash_small", "thash_big"])
     )

@@ -10,7 +10,10 @@ Four channels over a ``documents(doc_id, text, ...)`` table:
            the scale path; with DOCS_CONFIG (64 bands x 2 rows) every pair
            with J >= 0.4 is a candidate w.p. > 1 - 1e-6, so the verified
            output equals the exact baseline's
-- SimHash: Hamming-radius pairs via the pigeonhole probe
+- SimHash: Hamming-radius pairs via the pigeonhole chunk buckets
+
+Both LSH channels run the clip pipeline's one capped-bucket self-join
+(``operators/lsh.py``) — one LSH implementation for both corpora.
 
 Shingling for the exact baseline is pure JVM (split/sequence/transform/
 array_distinct in whole-stage codegen); only MinHash needs an Arrow UDF.
@@ -20,7 +23,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -29,8 +31,11 @@ from pyspark.sql.types import ArrayType, LongType
 
 from quichash_spark.config import DOCS_CONFIG, DedupConfig
 from quichash_spark.functions import hashing
-from quichash_spark.operators.lsh import lsh_candidates
-from quichash_spark.operators.simhash_probe import simhash_candidates
+from quichash_spark.operators.lsh import (
+    _capped_self_join,
+    band_table,
+    simhash_chunk_table,
+)
 
 
 def shingle_array(text: Column, k: int) -> Column:
@@ -138,10 +143,12 @@ def _as_fraction(threshold: float, den: int = 1000) -> tuple[int, int]:
 def minhash_signatures(
     documents: DataFrame, cfg: DedupConfig = DOCS_CONFIG, id_col: str = "doc_id"
 ) -> DataFrame:
-    """(doc_id as clip_id, minhash array<long>, simhash long) via Arrow UDF.
+    """(doc_id as clip_id, band_keys_text array<long>, simhash long) via
+    Arrow UDF.
 
-    Column is named ``clip_id``/``minhash_text`` so the clip-pipeline LSH
-    operators apply unchanged — one LSH implementation for both corpora.
+    ``band_keys_text`` are the MinHash signature's band keys, folded by
+    ``hashing.band_hashes_batch`` as in the clips kernel, so
+    ``lsh.band_table`` applies unchanged.
     """
     a_params, b_params = hashing.minhash_params(cfg)
 
@@ -157,11 +164,12 @@ def minhash_signatures(
             # Python loop over 128 permutations
             sets = [hashing.shingle_hashes(c, cfg.k_shingle) for c in canons]
             sigs = hashing.minhash_signature_batch(sets, a_params, b_params)
+            keys = hashing.band_hashes_batch(sigs, cfg.bands, cfg.rows)
             sim = [hashing.simhash64_i64(c) for c in canons]
             yield pd.DataFrame(
                 {
                     "clip_id": pdf[id_col],
-                    "minhash_text": list(sigs.view(np.int64)),
+                    "band_keys_text": list(keys),
                     "simhash": sim,
                 }
             )
@@ -171,7 +179,7 @@ def minhash_signatures(
     schema = StructType(
         [
             StructField("clip_id", StringType()),
-            StructField("minhash_text", ArrayType(LongType())),
+            StructField("band_keys_text", ArrayType(LongType())),
             StructField("simhash", LongType()),
         ]
     )
@@ -208,7 +216,9 @@ def minhash_lsh_pairs(
     # materialization the Python MinHash kernel re-runs per branch
     # (measured 4 MapInPandas nodes in the r5 plan, guide §4)
     sigs = minhash_signatures(documents, cfg, id_col).localCheckpoint(eager=True)
-    cands, _dropped = lsh_candidates(sigs, cfg, "minhash_text", "lsh_text")
+    _, raw, _ = _capped_self_join(band_table(sigs), cfg.band_bucket_cap)
+    # a pair sharing several bands is one candidate
+    cands = raw.select("clip_a", "clip_b").dropDuplicates()
     sh = shingle_table(
         documents, F.lpad(F.col(id_col).cast("string"), 12, "0"), k,
         id_alias=id_col,
@@ -238,12 +248,24 @@ def minhash_lsh_pairs(
 def simhash_pairs(
     documents: DataFrame, cfg: DedupConfig = DOCS_CONFIG, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Pairs within SimHash Hamming radius (exact, via pigeonhole probe)."""
-    # eager checkpoint: the probe references sigs four times (see
+    """Pairs within SimHash Hamming radius: every pair sharing a capped
+    pigeonhole chunk bucket, filtered by true distance with JVM-side
+    ``bit_count(a ^ b)`` — exact for pairs whose shared chunks are not
+    all in hot (over-cap) buckets."""
+    # eager checkpoint: the self-join references sigs four times (see
     # minhash_lsh_pairs) — one kernel pass instead of four
     sigs = minhash_signatures(documents, cfg, id_col).localCheckpoint(eager=True)
-    pairs, _ = simhash_candidates(sigs, cfg)
-    return pairs.select(
-        F.col("clip_a").cast("long").alias("doc_a"),
-        F.col("clip_b").cast("long").alias("doc_b"),
+    _, raw, _ = _capped_self_join(
+        simhash_chunk_table(sigs, cfg), cfg.band_bucket_cap
+    )
+    return (
+        raw.filter(
+            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+            <= cfg.simhash_hamming_r
+        )
+        .select(
+            F.col("clip_a").cast("long").alias("doc_a"),
+            F.col("clip_b").cast("long").alias("doc_b"),
+        )
+        .dropDuplicates()
     )

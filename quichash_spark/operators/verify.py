@@ -44,7 +44,6 @@ from pyspark.sql.types import (
 
 from quichash_spark.config import DedupConfig
 from quichash_spark.functions import audio, hashing
-from quichash_spark.operators.cache_scope import CacheScope
 
 VERIFIED_SCHEMA = StructType(
     [
@@ -124,60 +123,37 @@ def _text_relation_cols(ta, tb, sh_a, sh_b, cfg: DedupConfig):
 #: broadcast hard limit (and far under typical driver heaps)
 BROADCAST_PAIR_LIMIT = 20_000_000
 
-#: Default scope for verify_candidates calls that must size a
-#: non-checkpointed candidate input themselves (``n_candidates is None``)
-#: without a caller-provided scope.  Mirrors
-#: :func:`quichash_spark.operators.lsh.release_cached`: long-lived
-#: sessions call :func:`release_cached` after materializing the verified
-#: output, or cached candidate blocks accumulate run over run.
-#: Concurrent pipelines pass their own :class:`CacheScope` (or the
-#: ``n_candidates`` hint, which skips the persist entirely).
-_DEFAULT_SCOPE = CacheScope()
-
-
-def release_cached() -> None:
-    """Unpersist candidate DataFrames cached by verify_candidates calls
-    that had to self-size their input under the default scope."""
-    _DEFAULT_SCOPE.release()
+#: payload budget per slow-path group (one pandas frame): bounds peak
+#: task memory, see the sizing note in :func:`verify_candidates`
+TASK_MB = 32
 
 
 def verify_candidates(
     candidates: DataFrame,
     clips: DataFrame,
     cfg: DedupConfig,
-    signatures: DataFrame | None = None,
+    *,
+    signatures: DataFrame,
+    n_candidates: int,
     broadcast_pair_limit: int = BROADCAST_PAIR_LIMIT,
-    task_mb: int = 32,
-    n_candidates: int | None = None,
-    scope: CacheScope | None = None,
     clip_bytes: float | None = None,
 ) -> DataFrame:
     """candidates(clip_a, clip_b, source) -> verified edges (see module
     docstring for the fast/slow execution split).
 
+    ``signatures``: the signature table of every clip a candidate names
+    (``clip_id``, ``pcm_hash``, ``simhash``, ``transcript``).
+
+    ``n_candidates``: a bound on the candidate row count (the pipeline
+    passes the checkpoint manifest's count); it sizes the slow-path
+    groups and picks the broadcast side of the payload join.
+
     ``clip_bytes``: a bound on payload bytes per clip for sizing the
     slow-path groups (the pipeline passes 2 x the largest ``n_samples``
     from the signature checkpoints' parquet footer statistics).  Without
-    it, one 2-int-column scan of ``clips`` estimates the mean.  With both
-    hints and ``signatures``, building the plan submits no Spark job.
-
-    ``n_candidates``: known candidate row count (the pipeline passes the
-    checkpoint manifest's count).  Without it, ``candidates`` is persisted
-    before the sizing ``count()`` so a non-checkpointed input computes its
-    DAG exactly once instead of once for sizing and again for the run —
-    the persist lands in ``scope`` (a per-pipeline :class:`CacheScope`)
-    when given, else in the module default drained by
-    :func:`release_cached` once the verified output is materialized.
+    it, one 2-int-column scan of ``clips`` estimates the mean; with it,
+    building the plan submits no Spark job.
     """
-    if signatures is None:
-        from quichash_spark.functions.udfs import compute_signatures
-
-        signatures = compute_signatures(clips, cfg)
-    if n_candidates is None:
-        candidates = (scope if scope is not None else _DEFAULT_SCOPE).persist(
-            candidates
-        )
-        n_candidates = candidates.count()
     lite = signatures.select("clip_id", "pcm_hash", "simhash", "transcript")
     p = candidates.join(
         lite.select(
@@ -235,7 +211,6 @@ def verify_candidates(
     # upgrades it to broadcast at runtime when the build side turns out
     # small).  Corpus bytes never shuffle un-pruned on either path.
     # conservative upper bound on slow-pair volume, known without a job
-    # (manifest hint or the persisted count above)
     n_slow = n_candidates
     if n_slow <= broadcast_pair_limit:
         # the payload scan probes the broadcast membership table directly:
@@ -355,7 +330,7 @@ def verify_candidates(
             or 16384.0
         )
     par = candidates.sparkSession.sparkContext.defaultParallelism
-    by_budget = int(n_slow * 2 * clip_bytes) // (task_mb << 20) + 1
+    by_budget = int(n_slow * 2 * clip_bytes) // (TASK_MB << 20) + 1
     n_groups = max(2 * par, min(n_slow + 1, by_budget))
     slow = (
         tagged.withColumn(

@@ -164,7 +164,7 @@ def sequential_containment(
 ) -> pd.DataFrame:
     """Replica of operators.containment.containment_candidates: text-channel
     kept buckets (grouped by exact signature slices — collision-free variant
-    of the JVM band keys), distinct-transcript containment per bucket, then
+    of the kernel band keys), distinct-transcript containment per bucket, then
     expansion over ALL clips sharing the matched transcripts."""
     # clip-level text-band buckets, keyed by the exact signature slice
     buckets: dict[tuple[int, tuple], list[int]] = defaultdict(list)

@@ -7,10 +7,12 @@ resumes by skipping completed stages (manifest-gated, idempotent writes).
 
     clips ─1→ signatures ─2→ exact edges ──────────────┐
                  ├─3→ LSH text candidates ──┐          │
-                 ├─3b→ LSH pcm candidates ──┤          │
-                 ├─4→ simhash candidates ───┼─6→ verify┼─7→ clusters
-                 └─5→ containment cands ────┘          │
+                 ├─3b→ LSH pcm candidates ──┼─6→ verify┼─7→ clusters
+                 └─4→ simhash candidates ───┘          │
                                         8: metrics + manifest (all stages)
+
+Containment (stage 5) is not a pipeline channel: its buckets are the
+LSH text buckets, and the verify kernel accepts containment pairs.
 
 Batch (:func:`run_pipeline`) and incremental (:func:`incremental_update`)
 runs share ONE stage graph (:func:`_run_stages`).  An incremental run
@@ -37,7 +39,6 @@ from quichash_spark.config import CLIPS_CONFIG, DedupConfig
 from quichash_spark.functions.udfs import compute_signatures
 from quichash_spark.operators.cache_scope import CacheScope
 from quichash_spark.operators.connected_components import connected_components
-from quichash_spark.operators.containment import containment_candidates
 from quichash_spark.operators.exact_dedup import exact_duplicate_groups
 from quichash_spark.operators.verify import verify_candidates
 from quichash_spark.storage import CheckpointStore
@@ -76,11 +77,9 @@ def run_pipeline(
     clips: DataFrame,
     checkpoint_dir: str,
     cfg: DedupConfig = CLIPS_CONFIG,
-    use_pcm_lsh: bool = True,
-    use_containment: bool = False,
 ) -> PipelineResult:
     store = CheckpointStore(spark, checkpoint_dir, cfg)
-    return _run_stages(store, cfg, clips, clips, None, use_pcm_lsh, use_containment)
+    return _run_stages(store, cfg, clips, clips, None)
 
 
 def incremental_update(
@@ -90,7 +89,6 @@ def incremental_update(
     all_clips: DataFrame,
     checkpoint_dir: str,
     cfg: DedupConfig = CLIPS_CONFIG,
-    use_pcm_lsh: bool = True,
 ) -> PipelineResult:
     """Add NEW clips to an already-clustered corpus without re-running
     the full pipeline — the production shape for a growing 10^12-clip
@@ -135,7 +133,7 @@ def incremental_update(
                 f"prior checkpoint missing completed stage {stage!r}"
             )
     store = CheckpointStore(spark, checkpoint_dir, cfg)
-    return _run_stages(store, cfg, new_clips, all_clips, prior, use_pcm_lsh)
+    return _run_stages(store, cfg, new_clips, all_clips, prior)
 
 
 def _run_stages(
@@ -144,8 +142,6 @@ def _run_stages(
     new_clips: DataFrame,
     all_clips: DataFrame,
     prior: CheckpointStore | None,
-    use_pcm_lsh: bool,
-    use_containment: bool = False,
 ) -> PipelineResult:
     """The stage graph of both run shapes: ``prior`` is None for a batch
     run, else the completed prior checkpoint an increment extends."""
@@ -154,8 +150,7 @@ def _run_stages(
     # include_minhash=False: the dedup stages consume band keys + scalars
     # only, so the checkpoint (and the Python->JVM exchange) skips the raw
     # 128-perm MinHash vectors — ~400 MB of incompressible longs per 200k
-    # clips.  Containment's bucket scan reads the precomputed band_keys
-    # columns (identical bucketing, see lsh.band_table).
+    # clips.
     new_sigs = _stage(
         store,
         "signatures",
@@ -190,19 +185,7 @@ def _run_stages(
 
         # every channel (text LSH, pcm LSH, simhash chunks) through ONE
         # bucket table => one sizes pass, one kept-join, one self-join
-        pairs, dropped = unified_candidates(
-            signatures, cfg, use_pcm=use_pcm_lsh, scope=scope
-        )
-        if use_containment:
-            # redundant with lsh_text + the verify kernel's containment
-            # acceptance (same buckets) — off by default, available for
-            # configs that cap pair generation harder than bucket scans
-            cont = containment_candidates(signatures, cfg)
-            pairs = (
-                pairs.unionByName(cont)
-                .groupBy("clip_a", "clip_b")
-                .agg(F.concat_ws(",", F.sort_array(F.collect_set("source"))).alias("source"))
-            )
+        pairs, dropped = unified_candidates(signatures, cfg, scope=scope)
         # the dropped-bucket lineage is counted off the cached summary
         # after the candidates write has filled it
         return pairs, {"buckets_dropped": dropped}

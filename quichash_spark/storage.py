@@ -124,26 +124,6 @@ class CheckpointStore:
         self._write_manifest(manifest)
         return self.read(stage)
 
-    def adopt(self, stage: str, wall_ms: float | None = None) -> DataFrame:
-        """Register an externally-materialized parquet dir as a completed
-        stage — e.g. slice outputs hardlinked in from per-executor
-        processes (bench emulation) or a stage computed by a separate
-        cluster job.  Same manifest + per-partition lineage semantics as
-        :meth:`write`, but no Spark job: lineage comes from the parquet
-        footers already on disk."""
-        parts = self._footer_partition_rows(stage)
-        self._append_metrics_rows(stage, parts)
-        manifest = self._read_manifest()
-        manifest[stage] = {
-            "status": "complete",
-            "config_hash": self.cfg_hash,
-            "rows": sum(n for _, n in parts),
-            "wall_ms": round(wall_ms or 0.0, 1),
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        }
-        self._write_manifest(manifest)
-        return self.read(stage)
-
     def rows(self, stage: str) -> int | None:
         """Row count recorded at checkpoint time (None if not complete) —
         lets downstream stages size themselves without re-counting."""

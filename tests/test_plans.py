@@ -53,19 +53,25 @@ def test_verify_fast_path_is_jvm_only(spark, tiny_clips):
     """The fast verification path must contain no Python evaluation."""
     from quichash_spark.config import CLIPS_CONFIG
     from quichash_spark.functions.udfs import compute_signatures
+    from quichash_spark.operators.cache_scope import CacheScope
     from quichash_spark.operators.lsh import unified_candidates
     from quichash_spark.operators.verify import verify_candidates
-    from quichash_spark.plans.inspect import explain_str
+    from quichash_spark.plans.inspect import plan_nodes
 
     sigs = compute_signatures(tiny_clips, CLIPS_CONFIG)
-    cands, _ = unified_candidates(sigs, CLIPS_CONFIG)
-    verified = verify_candidates(cands, tiny_clips, CLIPS_CONFIG, signatures=sigs)
-    plan = explain_str(verified, mode="simple")
+    with CacheScope() as scope:
+        cands, _ = unified_candidates(sigs, CLIPS_CONFIG, scope=scope)
+        verified = verify_candidates(
+            cands, tiny_clips, CLIPS_CONFIG, signatures=sigs,
+            n_candidates=cands.count(),
+        )
+        names = [n.getClass().getSimpleName() for n in plan_nodes(verified)]
     # no row-at-a-time Python anywhere; exactly one grouped-Arrow node
     # (the slow-path SNR kernel) — the fast-path branch is pure JVM
-    assert "BatchEvalPython" not in plan
+    assert "BatchEvalPythonExec" not in names
     assert (
-        plan.count("FlatMapGroupsInArrow") + plan.count("FlatMapGroupsInPandas") == 1
+        names.count("FlatMapGroupsInArrowExec")
+        + names.count("FlatMapGroupsInPandasExec") == 1
     )
 
 

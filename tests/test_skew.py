@@ -1,29 +1,10 @@
-"""Skew-handling tests: salted repartitioning + hot-bucket caps."""
+"""Skew-handling tests: hot-bucket caps and the is_new-flagged self-join."""
 
 from __future__ import annotations
 
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from quichash_spark.operators.lsh import salted_repartition
-
-
-def test_salted_repartition_spreads_hot_key(spark):
-    # one hot key owning 90% of rows
-    rows = [Row(clip_id=f"c{i}", band_key=0 if i < 900 else i) for i in range(1000)]
-    df = spark.createDataFrame(rows)
-    salted = salted_repartition(df, ["band_key"], salt_buckets=8, num_partitions=16)
-    per_part = (
-        salted.groupBy(F.spark_partition_id().alias("p"))
-        .agg(F.sum(F.when(F.col("band_key") == 0, 1).otherwise(0)).alias("hot"))
-        .filter(F.col("hot") > 0)
-        .collect()
-    )
-    # the hot key's 900 rows land on several partitions, none dominant
-    assert len(per_part) >= 4
-    assert max(r["hot"] for r in per_part) < 900
-    # no rows lost
-    assert salted.count() == 1000
+from quichash_spark.operators.cache_scope import CacheScope
 
 
 def test_unified_candidates_drops_hot_and_reports(spark, tiny_clips):
@@ -35,15 +16,16 @@ def test_unified_candidates_drops_hot_and_reports(spark, tiny_clips):
 
     sigs = compute_signatures(tiny_clips, CLIPS_CONFIG).cache()
     capped = replace(CLIPS_CONFIG, band_bucket_cap=5)
-    pairs, dropped = unified_candidates(sigs, capped, use_pcm=True)
-    # the "ok" hot band exceeds cap on all 32 text bands AND all 4
-    # simhash chunks (identical simhash)
-    assert dropped.count() >= 36
+    with CacheScope() as scope:
+        pairs, dropped = unified_candidates(sigs, capped, use_pcm=True, scope=scope)
+        # the "ok" hot band exceeds cap on all 32 text bands AND all 4
+        # simhash chunks (identical simhash)
+        assert dropped.count() >= 36
+        got = {(r["clip_a"], r["clip_b"]) for r in pairs.collect()}
     ok_ids = {
         r["clip_id"]
         for r in sigs.filter(F.col("transcript") == "ok").select("clip_id").collect()
     }
-    got = {(r["clip_a"], r["clip_b"]) for r in pairs.collect()}
     assert not {(a, b) for a in ok_ids for b in ok_ids if a < b} & got
 
 
@@ -58,9 +40,10 @@ def test_slim_signatures_equivalent_buckets(spark, tiny_clips):
     full = compute_signatures(tiny_clips, CLIPS_CONFIG).cache()
     slim = compute_signatures(tiny_clips, CLIPS_CONFIG, include_minhash=False).cache()
     assert "minhash_text" not in slim.columns
-    pf, _ = unified_candidates(full, CLIPS_CONFIG)
-    ps, _ = unified_candidates(slim, CLIPS_CONFIG)
-    assert {tuple(r) for r in pf.collect()} == {tuple(r) for r in ps.collect()}
+    with CacheScope() as scope:
+        pf, _ = unified_candidates(full, CLIPS_CONFIG, scope=scope)
+        ps, _ = unified_candidates(slim, CLIPS_CONFIG, scope=scope)
+        assert {tuple(r) for r in pf.collect()} == {tuple(r) for r in ps.collect()}
     cf = {tuple(r) for r in containment_candidates(full, CLIPS_CONFIG).collect()}
     cs = {tuple(r) for r in containment_candidates(slim, CLIPS_CONFIG).collect()}
     assert cf == cs and cf
@@ -93,16 +76,17 @@ def test_unified_candidates_is_new_equals_postfilter(spark, tiny_clips):
 
     # the capped config drops the hot "ok" band's buckets
     for cfg in (CLIPS_CONFIG, replace(CLIPS_CONFIG, band_bucket_cap=5)):
-        full, full_dropped = unified_candidates(sigs, cfg)
-        want = sorted(
-            (r["clip_a"], r["clip_b"], r["source"])
-            for r in full.collect()
-            if r["clip_a"] >= "clip_00000150" or r["clip_b"] >= "clip_00000150"
-        )
-        got_df, got_dropped = unified_candidates(flagged, cfg)
-        got = sorted(
-            (r["clip_a"], r["clip_b"], r["source"]) for r in got_df.collect()
-        )
-        assert got == want and want, cfg.band_bucket_cap
-        assert dropped_set(got_dropped) == dropped_set(full_dropped)
+        with CacheScope() as scope:
+            full, full_dropped = unified_candidates(sigs, cfg, scope=scope)
+            want = sorted(
+                (r["clip_a"], r["clip_b"], r["source"])
+                for r in full.collect()
+                if r["clip_a"] >= "clip_00000150" or r["clip_b"] >= "clip_00000150"
+            )
+            got_df, got_dropped = unified_candidates(flagged, cfg, scope=scope)
+            got = sorted(
+                (r["clip_a"], r["clip_b"], r["source"]) for r in got_df.collect()
+            )
+            assert got == want and want, cfg.band_bucket_cap
+            assert dropped_set(got_dropped) == dropped_set(full_dropped)
     assert dropped_set(got_dropped)
