@@ -22,10 +22,13 @@ Codecs — REAL, implemented from public format specs with stdlib+numpy:
                    residuals, fixed + LPC prediction, all four stereo
                    decorrelation modes, frame CRCs verified
 
-Only the LOSSY codecs needing DSP libraries (opus/mp3) remain
-registered as STUBS that raise ``NotImplementedError`` — the Spark-side
-plumbing (schema, batching, dispatch) is identical, only the byte->PCM
-kernel would differ on a cluster with codec libs installed.
+Undecodable payloads have ONE policy, owned by :func:`decode_pcm`: null
+bytes, an unregistered codec (the lossy ``opus``/``mp3`` need DSP
+libraries and are not registered), corrupt or truncated bytes all decode
+to ``None``, which every kernel turns into a ``decode_ok=false`` row (or
+no output rows) — never an exception that kills a stage.
+:func:`decode_column` is the one zero-copy reader of an Arrow binary
+column; the Arrow-native kernels (signatures, verify) decode through it.
 
 G.711 and IMA ADPCM prefer stdlib ``audioop`` C kernels at runtime when
 available (Python <= 3.12; removed in 3.13 by PEP 594) with the
@@ -407,16 +410,6 @@ def encode_wav(pcm: np.ndarray, sr_hz: int = 8000) -> bytes:
     return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
 
-def _stub(codec: str) -> Callable[[bytes], np.ndarray]:
-    def _raise(_: bytes) -> np.ndarray:
-        raise NotImplementedError(
-            f"codec {codec!r}: decoder not available in this environment; "
-            "register a real kernel in CODECS on a cluster with audio libs"
-        )
-
-    return _raise
-
-
 from quichash_spark.functions.flac import decode_flac  # noqa: E402
 
 #: codec name -> bytes->int16-PCM decoder. The registry mirrors
@@ -431,31 +424,49 @@ CODECS: dict[str, Callable[[bytes], np.ndarray]] = {
     # REAL lossless decoder from the public spec (functions/flac.py):
     # Rice residuals, fixed+LPC prediction, all stereo modes, CRC-checked
     "flac": decode_flac,
-    # lossy codecs needing DSP libraries stay honestly stubbed
-    "opus": _stub("opus"),
-    "mp3": _stub("mp3"),
 }
 
 
 def decode_pcm(data: bytes | None, codec: str) -> np.ndarray | None:
-    """Decode bytes to int16 PCM; None / unknown codec => None (row is
-    counted in metrics, not fatal — FIXTURES.md §4 malformed-input rule)."""
-    if data is None:
-        return None
+    """Decode bytes to int16 PCM, or ``None`` for every payload that cannot
+    be decoded: null bytes, a codec with no registered decoder (unknown,
+    or lossy ``opus``/``mp3`` with no decoder available), corrupt or
+    truncated bytes.  The row is counted as ``decode_ok=false``, never
+    fatal (FIXTURES.md §4 malformed-input rule); callers need no ``try``.
+
+    ``data`` may be bytes, a memoryview (the zero-copy Arrow path — NOT
+    copied through ``bytes()``) or any other buffer."""
     dec = CODECS.get(codec)
-    if dec is None:
+    if data is None or dec is None:
         return None
     try:
-        # bytes and memoryview both satisfy the buffer protocol frombuffer
-        # needs; memoryview (the Arrow zero-copy path) must NOT be copied
-        # through bytes() — that copy was the whole per-row decode cost
-        if not isinstance(data, (bytes, memoryview)):
-            data = bytes(data)
-        return dec(data)
-    except NotImplementedError:
-        raise
+        return dec(data if isinstance(data, (bytes, memoryview)) else bytes(data))
     except Exception:
         return None
+
+
+def decode_column(binary_array, codecs: list[str]) -> list[np.ndarray | None]:
+    """Decode an Arrow ``binary``/``large_binary`` array row by row, through
+    :func:`decode_pcm`, reading each payload as a zero-copy memoryview off
+    the Arrow data buffer (offsets decoded once; the array's slice offset
+    and null mask respected).  ``codecs[i]`` names row i's codec."""
+    import pyarrow as pa
+
+    arr = binary_array
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
+    bufs = arr.buffers()
+    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(bufs[1], dtype=odt, count=arr.offset + n + 1)[arr.offset:]
+    data_mv = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
+    isnull = arr.is_null().to_numpy(zero_copy_only=False) if arr.null_count else None
+    return [
+        None
+        if isnull is not None and isnull[i]
+        else decode_pcm(data_mv[offs[i]: offs[i + 1]], codecs[i])
+        for i in range(n)
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -642,6 +653,7 @@ def shingles_from_words(words: np.ndarray, cfg: DedupConfig) -> np.ndarray:
 __all__ = [
     "CODECS",
     "PCM16_PADDED_HEADER",
+    "decode_column",
     "decode_pcm",
     "encode_wav",
     "snr_db",

@@ -191,12 +191,7 @@ def compute_audio_embeddings(clips, cfg: AudioEmbedConfig = EMBED_CONFIG):
             for cid, data, codec, sr in zip(
                 pdf["clip_id"], pdf["bytes"], pdf["codec"], pdf["sr_hz"]
             ):
-                try:
-                    pcm = decode_pcm(
-                        bytes(data) if data is not None else None, codec
-                    )
-                except NotImplementedError:
-                    continue
+                pcm = decode_pcm(data, codec)
                 emb = mfcc_embedding(pcm, int(sr), cfg)
                 if emb is not None:
                     rows.append({"clip_id": cid, "embedding": emb.tolist()})

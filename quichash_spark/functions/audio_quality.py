@@ -140,12 +140,7 @@ def compute_audio_quality(clips):
                 pdf["clip_id"], pdf["bytes"], pdf["codec"], pdf["sr_hz"],
                 pdf["dur_ms"], pdf["transcript"],
             ):
-                try:
-                    pcm = decode_pcm(
-                        bytes(data) if data is not None else None, codec
-                    )
-                except NotImplementedError:
-                    pcm = None
+                pcm = decode_pcm(data, codec)
                 m = pcm_quality_metrics(pcm, int(sr)) if pcm is not None else None
                 row = {"clip_id": cid, "decode_ok": m is not None,
                        "dur_ms": dur, "transcript": tr}

@@ -166,12 +166,7 @@ def compute_fingerprints(clips, cfg: FingerprintConfig = FP_CONFIG):
             ids: list = []
             lms: list[np.ndarray] = []
             for cid, data, codec in zip(pdf["clip_id"], pdf["bytes"], pdf["codec"]):
-                try:
-                    pcm = decode_pcm(
-                        bytes(data) if data is not None else None, codec
-                    )
-                except NotImplementedError:
-                    continue  # stubbed codec: no fingerprints, no crash
+                pcm = decode_pcm(data, codec)
                 lm = landmark_hashes(pcm, cfg)
                 if lm.shape[0] == 0:
                     continue

@@ -3,7 +3,7 @@ processed by Arrow-batched kernels.
 
 Audio is the fully-real modality in this engine (see
 :mod:`quichash_spark.functions.audio` — pcm/wav/G.711/ADPCM/FLAC real,
-only lossy opus/mp3 stubbed).  Images follow the identical pattern —
+lossy opus/mp3 unregistered, so they decode to ``None``).  Images follow the identical pattern —
 ``binary`` payload column + metadata struct + ``mapInPandas`` kernel —
 with REAL png/bmp/jpeg/webp-lossless decoders
 (:mod:`quichash_spark.functions.imaging`, :mod:`~.jpeg`,

@@ -84,7 +84,7 @@ def signature_record_batch(
     measures exactly the work the real stage does.
 
     The per-row ``bytes`` cells are read as ZERO-COPY memoryviews straight
-    off the Arrow data buffer (offsets decoded once per batch), skipping
+    off the Arrow data buffer (``audio.decode_column``), skipping
     the pandas conversion that materializes every payload as a Python
     bytes object on the way in and re-encodes arrays on the way out —
     measured ~27% of the exchange cost at 4 workers.
@@ -93,28 +93,11 @@ def signature_record_batch(
 
     schema = _schema_for(include_minhash, include_embedding)
     n = rb.num_rows
-    bys = rb.column(1)
-    off = bys.offset
-    bufs = bys.buffers()
-    odt = np.int64 if pa.types.is_large_binary(bys.type) else np.int32
-    offs = np.frombuffer(bufs[1], dtype=odt, count=off + n + 1)[off:]
-    data_mv = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
-    isnull = (
-        bys.is_null().to_numpy(zero_copy_only=False)
-        if bys.null_count
-        else None
-    )
-    codec_list = rb.column(2).to_pylist()
     canons = [
         " ".join(t.split()) if isinstance(t, str) else ""
         for t in rb.column(3).to_pylist()
     ]
-    pcms: list[np.ndarray | None] = [
-        None
-        if (isnull is not None and isnull[i])
-        else audio.decode_pcm(data_mv[offs[i]: offs[i + 1]], codec_list[i])
-        for i in range(n)
-    ]
+    pcms = audio.decode_column(rb.column(1), rb.column(2).to_pylist())
     # batched execution, output-identical to the row-at-a-time
     # kernels (tests assert equality): decode per row (variable
     # length), per-clip FFT, ONE multiply-reduceat per MinHash

@@ -252,12 +252,7 @@ def compute_pcm_cdc_chunks(clips: DataFrame) -> DataFrame:
             for cid, data, codec in zip(
                 pdf["clip_id"], pdf["bytes"], pdf["codec"]
             ):
-                try:
-                    pcm = decode_pcm(
-                        bytes(data) if data is not None else None, codec
-                    )
-                except NotImplementedError:
-                    pcm = None
+                pcm = decode_pcm(data, codec)
                 if pcm is None:
                     continue
                 raw = np.ascontiguousarray(pcm, dtype="<i2").tobytes()

@@ -80,12 +80,7 @@ def compute_segment_hashes(clips: DataFrame, window: int = WINDOW) -> DataFrame:
             for cid, data, codec in zip(
                 pdf["clip_id"], pdf["bytes"], pdf["codec"]
             ):
-                try:
-                    pcm = decode_pcm(
-                        bytes(data) if data is not None else None, codec
-                    )
-                except NotImplementedError:
-                    pcm = None
+                pcm = decode_pcm(data, codec)
                 hs: list[int] = []
                 if pcm is not None:
                     import numpy as np

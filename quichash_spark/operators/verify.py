@@ -233,8 +233,8 @@ def verify_candidates(
         # ~0.8 ms each — 4x the actual kernel), replaced by one sort +
         # boundary walk; (b) pandas conversion of the payload column
         # (every audio blob copied into a Python bytes object), replaced
-        # by applyInArrow + zero-copy memoryviews off the Arrow buffer.
-        import numpy as np
+        # by applyInArrow + zero-copy memoryviews off the Arrow buffer
+        # (audio.decode_column).
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -248,20 +248,7 @@ def verify_candidates(
         source = tbl.column("source").to_pylist()
         codec = tbl.column("codec").to_pylist()
         transcript = tbl.column("transcript").to_pylist()
-        bys = tbl.column("bytes").combine_chunks()
-        off = bys.offset
-        bufs = bys.buffers()
-        odt = np.int64 if pa.types.is_large_binary(bys.type) else np.int32
-        offs = np.frombuffer(bufs[1], dtype=odt, count=off + n + 1)[off:]
-        data_mv = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
-        isnull = (
-            bys.is_null().to_numpy(zero_copy_only=False) if bys.null_count else None
-        )
-
-        def blob(k: int):
-            if isnull is not None and isnull[k]:
-                return None
-            return data_mv[offs[k]: offs[k + 1]]
+        pcm = audio.decode_column(tbl.column("bytes"), codec)
 
         out: dict[str, list] = {f.name: [] for f in VERIFIED_SCHEMA.fields}
         i = 0
@@ -282,8 +269,8 @@ def verify_candidates(
                 }
             else:
                 v = verify_pair(
-                    audio.decode_pcm(blob(ia), codec[ia]),
-                    audio.decode_pcm(blob(ib), codec[ib]),
+                    pcm[ia],
+                    pcm[ib],
                     transcript[ia],
                     transcript[ib],
                     cfg,
@@ -308,13 +295,13 @@ def verify_candidates(
         )
 
     # Group by a HASH BUCKET of pair_id, not pair_id itself: one
-    # applyInPandas group per pair means one Arrow exchange + pandas frame
-    # per pair (~1 ms fixed each — dominates with tiny audio pairs).
-    # verify_group already resolves pairs inside a frame via
-    # pdf.groupby(pair_id), so bucketed groups are semantically identical.
+    # applyInArrow group per pair means one Arrow exchange per pair (~1 ms
+    # fixed each — dominates with tiny audio pairs).  verify_group already
+    # resolves pairs inside a group (sort by pair_id + boundary walk over
+    # the Arrow table), so bucketed groups are semantically identical.
     #
     # The group COUNT is a byte budget, not a pair count: each group
-    # becomes ONE pandas frame of 2 payload rows per pair, so bytes/task —
+    # becomes ONE Arrow table of 2 payload rows per pair, so bytes/task —
     # bounded by the ``clip_bytes`` hint, else estimated from the input's
     # own sr_hz*dur_ms metadata — is what bounds peak task memory.  A fixed
     # pairs-per-task breaks at scale: 128 pairs of 1 MB clips is 256 MB a

@@ -2,7 +2,7 @@
 incremental Structured Streaming job.
 
 Production shape: readStream from the clips table/queue -> signature
-extraction (the SAME mapInPandas kernel as batch — Structured Streaming
+extraction (the SAME mapInArrow kernel as batch — Structured Streaming
 executes it incrementally) -> ``dropDuplicates`` keyed on content_hash
 with a watermark bounding state -> append sink of first-seen clips.
 

@@ -128,8 +128,48 @@ def test_decode_roundtrip_and_padding():
     assert (audio.decode_pcm(padded, "pcm16_padded") == pcm).all()
     assert audio.decode_pcm(None, "pcm16") is None
     assert audio.decode_pcm(b"\x00\x00", "nope") is None
-    with pytest.raises(NotImplementedError):
-        audio.decode_pcm(b"x", "opus")
+    assert audio.decode_pcm(b"x", "opus") is None
+
+
+def _decode_column_cases():
+    pcm = np.array([1, -2, 300, -400], dtype=np.int16)
+    padded = b"\x99" * audio.PCM16_PADDED_HEADER + pcm.tobytes()
+    payloads = [
+        b"\x05\x00", pcm.tobytes(), None, padded, b"\x00" * 3, b"",
+        audio.encode_wav(pcm), None, b"x", pcm.tobytes(),
+    ]
+    codecs = [
+        "pcm16", "pcm16", "pcm16", "pcm16_padded", "pcm16", "pcm16",
+        "wav", "wav", "mp3", "nope",
+    ]
+    return payloads, codecs
+
+
+@pytest.mark.parametrize("kind", ["sliced_binary", "large_binary"])
+def test_decode_column_equals_decode_pcm_per_row(kind):
+    import pyarrow as pa
+
+    payloads, codecs = _decode_column_cases()
+    if kind == "sliced_binary":
+        # offset != 0 with nulls both inside and before the slice
+        arr = pa.array([b"\x07\x00", None] + payloads, pa.binary()).slice(2)
+        assert arr.offset == 2 and arr.null_count == 2
+    else:
+        arr = pa.array(payloads, pa.large_binary())
+    got = audio.decode_column(arr, codecs)
+    want = [
+        audio.decode_pcm(bytes(x) if x is not None else None, c)
+        for x, c in zip(arr.to_pylist(), codecs)
+    ]
+    assert len(got) == len(want) == len(payloads)
+    for g, w in zip(got, want):
+        if w is None:
+            assert g is None
+        else:
+            assert g is not None and g.dtype == w.dtype
+            assert np.array_equal(g, w)
+    # the fixture really mixes decodable and undecodable rows
+    assert sum(w is None for w in want) == 5
 
 
 def test_snr():

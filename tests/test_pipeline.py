@@ -183,6 +183,51 @@ def test_partitioning_equivalence(spark, tmp_path_factory):
     shutil.rmtree(d2, ignore_errors=True)
 
 
+def test_hostile_corpus_degrades_to_decode_ok_false_singletons(spark, tmp_path):
+    """Malformed rows never kill a stage (FIXTURES.md §4): codecs with no
+    decoder available (two byte-identical mp3 rows, one opus), null
+    bytes, truncated WAV and FLAC, an unknown codec, shared and empty
+    transcripts.  Every bad row is a decode_ok=false singleton and the
+    good corpus clusters exactly as the oracle says."""
+    import numpy as np
+
+    from quichash_spark.fixtures import CLIPS_SCHEMA, clips_dataframe
+    from quichash_spark.functions.audio import encode_wav
+    from quichash_spark.functions.flac import encode_flac
+    from quichash_spark.oracle.numpy_oracle import cluster_pairs, oracle_clusters
+    from quichash_spark.pipeline import run_pipeline
+
+    n = 100
+    pcm = (np.sin(np.arange(4000) / 7.0) * 8000).astype(np.int16)
+    shared = "the same words on every hostile row of this corpus"
+    bad = [
+        ("bad_mp3_a", b"\xff\xfb\x90\x00" * 64, "mp3", shared),
+        ("bad_mp3_b", b"\xff\xfb\x90\x00" * 64, "mp3", shared),
+        ("bad_opus", b"OggS" + bytes(60), "opus", shared),
+        ("bad_null", None, "pcm16", ""),
+        ("bad_wav_trunc", encode_wav(pcm)[:-1], "wav", ""),
+        ("bad_flac_trunc", encode_flac(pcm)[:2000], "flac", shared),
+        ("bad_unknown", pcm.tobytes(), "nope", ""),
+    ]
+    bad_df = spark.createDataFrame(
+        [(cid, b, 8000, 500, codec, tr) for cid, b, codec, tr in bad],
+        CLIPS_SCHEMA,
+    )
+    clips = clips_dataframe(spark, n).unionByName(bad_df)
+    res = run_pipeline(spark, clips, str(tmp_path / "ckpt"))
+
+    got = {r["clip_id"]: r["cluster_id"] for r in res.clusters.collect()}
+    assert len(got) == n + len(bad)
+    for cid, *_ in bad:
+        assert got[cid] == cid
+        assert sum(c == cid for c in got.values()) == 1, cid
+    ok = {r["clip_id"]: r["decode_ok"] for r in res.signatures.collect()}
+    assert {cid for cid, v in ok.items() if not v} == {b[0] for b in bad}
+    good = {k: v for k, v in got.items() if not k.startswith("bad_")}
+    oracle_pairs = cluster_pairs(oracle_clusters(n))
+    assert cluster_pairs(good) == oracle_pairs
+
+
 def test_emulate_executor_verify_mode_partitions_exactly(spark, tmp_path):
     """The bench harness's verify-mode executor processes (disjoint
     pmod(xxhash64(pair_id)) residue classes) must union to exactly the
