@@ -191,8 +191,10 @@ def compute_audio_embeddings(clips, cfg: AudioEmbedConfig = EMBED_CONFIG):
             for cid, data, codec, sr in zip(
                 pdf["clip_id"], pdf["bytes"], pdf["codec"], pdf["sr_hz"]
             ):
-                pcm = decode_pcm(data, codec)
-                emb = mfcc_embedding(pcm, int(sr), cfg)
+                # a null rate degrades like a failed decode: row dropped
+                if pd.isna(sr):
+                    continue
+                emb = mfcc_embedding(decode_pcm(data, codec), int(sr), cfg)
                 if emb is not None:
                     rows.append({"clip_id": cid, "embedding": emb.tolist()})
             yield pd.DataFrame(rows, columns=["clip_id", "embedding"])

@@ -140,7 +140,8 @@ def compute_audio_quality(clips):
                 pdf["clip_id"], pdf["bytes"], pdf["codec"], pdf["sr_hz"],
                 pdf["dur_ms"], pdf["transcript"],
             ):
-                pcm = decode_pcm(data, codec)
+                # a null rate degrades like a failed decode: null metrics
+                pcm = None if pd.isna(sr) else decode_pcm(data, codec)
                 m = pcm_quality_metrics(pcm, int(sr)) if pcm is not None else None
                 row = {"clip_id": cid, "decode_ok": m is not None,
                        "dur_ms": dur, "transcript": tr}

@@ -61,20 +61,8 @@ SLIM_SIGNATURE_SCHEMA = StructType(
 )
 
 
-def _schema_for(include_minhash: bool, include_embedding: bool) -> StructType:
-    base = SIGNATURE_SCHEMA if include_minhash else SLIM_SIGNATURE_SCHEMA
-    if not include_embedding:
-        return base
-    from pyspark.sql.types import FloatType
-
-    return StructType(
-        list(base.fields) + [StructField("embedding", ArrayType(FloatType()))]
-    )
-
-
 def signature_record_batch(
-    rb, cfg: DedupConfig, a_params, b_params, include_minhash: bool = True,
-    include_embedding: bool = False,
+    rb, cfg: DedupConfig, a_params, b_params, include_minhash: bool = True
 ):
     """One input RecordBatch (clip_id, bytes, codec, transcript) -> one
     signature RecordBatch.  THE signature kernel — shared verbatim by the
@@ -91,7 +79,7 @@ def signature_record_batch(
     """
     import pyarrow as pa
 
-    schema = _schema_for(include_minhash, include_embedding)
+    schema = SIGNATURE_SCHEMA if include_minhash else SLIM_SIGNATURE_SCHEMA
     n = rb.num_rows
     canons = [
         " ".join(t.split()) if isinstance(t, str) else ""
@@ -162,44 +150,18 @@ def signature_record_batch(
         pa.array(canons, pa.string()),
         pa.array([p is not None for p in pcms], pa.bool_()),
     ]
-    if include_embedding:
-        # perceptual channel in the SAME decode pass (100 TB shape: the
-        # bytes column is read exactly once for hashes, MinHash frames
-        # AND the MFCC embedding).  sr_hz rides in as input column 4.
-        from quichash_spark.functions.audio_embed import mfcc_embedding
-
-        srs = rb.column(4).to_pylist()
-        # null sr_hz degrades like a failed decode (null embedding), it
-        # must not TypeError and kill the whole Arrow batch
-        embs = [
-            mfcc_embedding(p, int(sr)) if p is not None and sr is not None
-            else None
-            for p, sr in zip(pcms, srs)
-        ]
-        arrays.append(
-            pa.array(
-                [e.tolist() if e is not None else None for e in embs],
-                pa.list_(pa.float32()),
-            )
-        )
     return pa.RecordBatch.from_arrays(
         arrays, names=[f.name for f in schema.fields]
     )
 
 def compute_signatures(
-    clips: DataFrame, cfg: DedupConfig, include_minhash: bool = True,
-    include_embedding: bool = False,
+    clips: DataFrame, cfg: DedupConfig, include_minhash: bool = True
 ) -> DataFrame:
     """clips -> signatures (stage 1 of SURVEY.md §7.0).
 
     One pass over the bytes computes every signature (the reference's
     single-read multi-hash pattern, /root/reference/src/hash.rs:814-967,
     re-expressed as one Arrow batch through several numpy kernels).
-    ``include_embedding`` adds the MFCC perceptual embedding
-    (functions/audio_embed.py) to the same decode pass — at 100 TB the
-    bytes column is read once for hashes, MinHash frames AND the
-    semantic channel (equivalence vs the standalone kernel is
-    test-asserted).
     ``transcript`` is carried forward canonicalized (single-space joined)
     so downstream stages never re-read the big ``bytes`` column.
 
@@ -212,16 +174,10 @@ def compute_signatures(
 
     def batches(it):
         for rb in it:
-            yield signature_record_batch(
-                rb, cfg, a_params, b_params, include_minhash, include_embedding
-            )
+            yield signature_record_batch(rb, cfg, a_params, b_params, include_minhash)
 
-    schema = _schema_for(include_minhash, include_embedding)
+    schema = SIGNATURE_SCHEMA if include_minhash else SLIM_SIGNATURE_SCHEMA
     cols = ["clip_id", "bytes", "codec", "transcript"]
-    if include_embedding:
-        # MFCC needs the clip's native rate (resampled to the config's
-        # target inside the kernel)
-        cols.append("sr_hz")
     # few fat Python tasks: each Arrow-exchange task pays fixed protocol
     # overhead, so target ~3 tasks/core (coalesce = no shuffle; it only
     # ever reduces the scan's partition count)

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def exact_duplicate_groups(signatures: DataFrame) -> DataFrame:
@@ -35,22 +34,16 @@ def exact_duplicate_groups(signatures: DataFrame) -> DataFrame:
     )
 
 
-def exact_duplicate_edges(signatures: DataFrame) -> DataFrame:
-    """Star edges (group-min member -> other members) for the cluster stage.
+def exact_duplicate_edges(groups: DataFrame) -> DataFrame:
+    """Star edges (group-min member -> other members) for the cluster stage,
+    derived from :func:`exact_duplicate_groups` output.
 
     Emitting n-1 star edges per group instead of n*(n-1)/2 pairwise edges
     keeps edge volume linear in corpus size — the connected-components
-    stage makes the clusters identical either way.
+    stage makes the clusters identical either way.  ``clip_ids`` is sorted,
+    so element 1 is the group min.
     """
-    w = Window.partitionBy("content_hash")
-    return (
-        signatures.filter(F.col("content_hash").isNotNull())
-        .select("content_hash", "clip_id")
-        .withColumn("root", F.min("clip_id").over(w))
-        .filter(F.col("clip_id") != F.col("root"))
-        .select(
-            F.col("root").alias("clip_a"),
-            F.col("clip_id").alias("clip_b"),
-            F.lit("exact").alias("source"),
-        )
-    )
+    return groups.select(
+        F.element_at("clip_ids", 1).alias("clip_a"),
+        F.explode("clip_ids").alias("clip_b"),
+    ).filter(F.col("clip_a") != F.col("clip_b"))

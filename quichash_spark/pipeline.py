@@ -39,7 +39,9 @@ from quichash_spark.config import CLIPS_CONFIG, DedupConfig
 from quichash_spark.functions.udfs import compute_signatures
 from quichash_spark.operators.cache_scope import CacheScope
 from quichash_spark.operators.connected_components import connected_components
-from quichash_spark.operators.exact_dedup import exact_duplicate_groups
+from quichash_spark.operators.exact_dedup import (
+    exact_duplicate_edges, exact_duplicate_groups,
+)
 from quichash_spark.operators.verify import verify_candidates
 from quichash_spark.storage import CheckpointStore
 
@@ -170,11 +172,8 @@ def _run_stages(
         store, "exact_groups", lambda: exact_duplicate_groups(signatures), timings
     )
     # star edges derive from the (tiny) groups table — no second
-    # checkpoint stage; clip_ids are sorted so element 1 is the group min
-    exact_edges = exact_groups.select(
-        F.element_at("clip_ids", 1).alias("clip_a"),
-        F.explode("clip_ids").alias("clip_b"),
-    ).filter(F.col("clip_a") != F.col("clip_b"))
+    # checkpoint stage
+    exact_edges = exact_duplicate_edges(exact_groups)
 
     # per-run registry: concurrent pipelines in one session each release
     # only their own persisted bucket summaries (not each other's)
@@ -218,7 +217,7 @@ def _run_stages(
         edges = (
             verified.filter(F.col("accepted"))
             .select("clip_a", "clip_b")
-            .unionByName(exact_edges.select("clip_a", "clip_b"))
+            .unionByName(exact_edges)
         )
         # edge bound from manifest rows: accepted <= verified rows, star
         # edges <= clips, prior (cluster_id, clip_id) edges <= its rows

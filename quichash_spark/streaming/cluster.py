@@ -1,37 +1,42 @@
-"""Streaming cluster assignment: a CUSTOM stateful operator via
+"""Streaming cluster assignment: custom stateful operators via
 ``applyInPandasWithState``.
 
-``stream_exact_dedup`` (dedup.py) emits only first occurrences; this
-operator emits EVERY arriving clip with its cluster assignment — the
-incremental analog of the batch pipeline's exact-dedup clustering
-(cluster_id = the group's first-seen clip).  Per-key state holds the
-representative clip_id and a running member count, persisted by
-Structured Streaming's state store across micro-batches, so a duplicate
+One rule serves every operator here: a clip joins the cluster of the
+FIRST clip that presented one of its keys, and seeds a new cluster when
+it presented none.  Three keys:
+
+- ``stream_cluster_assign``: the content hash (exact duplicates);
+- ``stream_near_dup_assign``: the MinHash LSH band keys (near-duplicates);
+- ``stream_embed_neardup_assign``: hyperplane buckets over MFCC
+  embeddings, verified by exact cosine (perceptual duplicates).
+
+State is the key's first presenter, persisted by Structured Streaming's
+state store across micro-batches and query restarts, so a duplicate
 arriving hours after its original still joins the original's cluster.
+State never expires: its size is O(distinct keys), each entry a clip_id
+(plus a member count for the exact operator, one embedding for the
+perceptual one), partitioned by the shuffle on the key.
+``stream_cluster_assign`` emits ``is_first``, which marks the first
+occurrence of each content hash.
 
 The reference has no streaming surface (SURVEY.md §2.8); this is the
-engine's forward extension, and the state design is the one that holds
-at 10^12 scale: state size is O(distinct content hashes), each entry two
-small scalars, partitioned by the shuffle on content_hash.  For bounded
-state under true infinite streams, pass ``ttl`` (processing-time
-timeout): an expired hash simply re-seeds a new cluster, which is the
-standard recall/state tradeoff — expiries are observable in the output
-(``is_first`` re-fires).
+engine's forward extension.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from quichash_spark.config import CLIPS_CONFIG, DedupConfig
 from quichash_spark.functions.udfs import compute_signatures
+from quichash_spark.streaming import drain, drain_to_memory, file_stream
 
 OUTPUT_SCHEMA = (
     "clip_id string, content_hash string, cluster_id string, "
@@ -58,10 +63,6 @@ def _sorted_group(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
 def _assign(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        # processing-time TTL fired with no new data: drop the entry
-        state.remove()
-        return
     rep, n = state.get if state.exists else (None, 0)
     out: dict[str, list] = {
         "clip_id": [], "content_hash": [], "cluster_id": [],
@@ -89,52 +90,22 @@ def stream_cluster_assign(
     checkpoint_dir: str,
     cfg: DedupConfig = CLIPS_CONFIG,
     max_files_per_trigger: int | None = None,
-    ttl_ms: int | None = None,
 ) -> DataFrame:
-    """File-stream clips -> (clip_id, content_hash, cluster_id, ...).
-
-    Bounded test harness (availableNow + memory sink); swap source/sink
-    for the unbounded production run.
-    """
-    schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    """File-stream clips -> (clip_id, content_hash, cluster_id, member_n,
+    is_first), one row per decodable arrival, drained into memory."""
+    stream = file_stream(spark, source_dir, max_files_per_trigger)
     sigs = compute_signatures(stream, cfg, include_minhash=False).filter(
         F.col("decode_ok")
     )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def assign_with_ttl(key, pdfs, state):
-        yield from _assign(key, pdfs, state)
-        # after the state.update inside _assign (a timeout can only be
-        # armed on existing state); re-armed every batch the key appears
-        if ttl_ms and state.exists:
-            state.setTimeoutDuration(ttl_ms)
-
     assigned = (
         sigs.select("clip_id", "content_hash")
         .groupBy("content_hash")
         .applyInPandasWithState(
-            assign_with_ttl, OUTPUT_SCHEMA, STATE_SCHEMA, "append", timeout
+            _assign, OUTPUT_SCHEMA, STATE_SCHEMA, "append",
+            GroupStateTimeout.NoTimeout,
         )
     )
-    name = "qh_scluster_" + hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]
-    q = (
-        assigned.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(assigned, checkpoint_dir, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -152,9 +123,6 @@ def _band_assign(
 ) -> Iterator[pd.DataFrame]:
     """State per (band_idx, band_key): the first clip that presented this
     band key (the bucket's streaming representative)."""
-    if state.hasTimedOut:
-        state.remove()
-        return
     rep = state.get[0] if state.exists else None
     out: dict[str, list] = {
         "clip_id": [], "band_idx": [], "band_key": [], "rep": [], "is_new": [],
@@ -181,7 +149,6 @@ def stream_near_dup_assign(
     out_dir: str,
     cfg: DedupConfig = CLIPS_CONFIG,
     max_files_per_trigger: int | None = None,
-    ttl_ms: int | None = None,
 ) -> DataFrame:
     """Incremental LSH dedup: band-key state instead of exact-hash state —
     the true streaming analog of batch stage 3 (operators/lsh.py).
@@ -193,8 +160,7 @@ def stream_near_dup_assign(
 
     1. ``applyInPandasWithState`` keyed by ``(band_idx, band_key)`` —
        state is one clip_id per distinct band key (the streaming
-       representative); size O(distinct band keys), shuffled by key,
-       TTL-boundable exactly like the exact-hash operator.
+       representative); size O(distinct band keys), shuffled by key.
     2. per-micro-batch reduction in ``foreachBatch``: a clip's cluster is
        the min representative over the band keys it MATCHED (rows where it
        was not the seeder), else itself.  All of one clip's band rows land
@@ -208,11 +174,7 @@ def stream_near_dup_assign(
     verify/CC stages over the checkpointed output for the precise final
     clusters.
     """
-    schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, max_files_per_trigger)
     sigs = compute_signatures(stream, cfg, include_minhash=False).filter(
         F.col("decode_ok")
     )
@@ -222,37 +184,39 @@ def stream_near_dup_assign(
             "band_idx", "band_key"
         ),
     )
-    return _run_band_stream(spark, bands, checkpoint_dir, out_dir, ttl_ms)
+    return _run_band_stream(
+        bands, _band_assign, BAND_OUT_SCHEMA, BAND_STATE_SCHEMA, F.lit(True),
+        checkpoint_dir, out_dir,
+    )
 
 
 def _run_band_stream(
-    spark: SparkSession,
     bands: DataFrame,
+    assign: Callable[
+        [tuple, Iterator[pd.DataFrame], GroupState], Iterator[pd.DataFrame]
+    ],
+    out_schema: str,
+    state_schema: str,
+    joins: Column,
     checkpoint_dir: str,
     out_dir: str,
-    ttl_ms: int | None,
 ) -> DataFrame:
-    """Shared tail of the band-key near-dup operators: stateful bucket
-    assignment + per-micro-batch min-rep reduction -> parquet sink.
-    ``bands`` is any streaming (clip_id, band_idx int, band_key long)."""
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms
-        else GroupStateTimeout.NoTimeout
-    )
+    """Shared tail of the band-key near-dup operators: ``assign`` keyed by
+    ``(band_idx, band_key)`` over the streaming ``bands``, then the
+    per-micro-batch reduction appended as parquet under ``out_dir``.
 
-    def assign_with_ttl(key, pdfs, state):
-        yield from _band_assign(key, pdfs, state)
-        if ttl_ms and state.exists:
-            state.setTimeoutDuration(ttl_ms)
-
+    ``assign`` emits (clip_id, rep, is_new, ...) rows in ``out_schema``; a
+    clip joins the min ``rep`` over the rows it did not seed that satisfy
+    ``joins``, else it is its own cluster.  Returns everything under
+    ``out_dir``."""
     assigned = bands.groupBy("band_idx", "band_key").applyInPandasWithState(
-        assign_with_ttl, BAND_OUT_SCHEMA, BAND_STATE_SCHEMA, "append", timeout
+        assign, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
     def finalize(batch_df: DataFrame, _batch_id: int) -> None:
         matched = F.when(
-            ~F.col("is_new") & (F.col("rep") != F.col("clip_id")), F.col("rep")
+            ~F.col("is_new") & (F.col("rep") != F.col("clip_id")) & joins,
+            F.col("rep"),
         )
         out = (
             batch_df.groupBy("clip_id")
@@ -265,16 +229,18 @@ def _run_band_stream(
         )
         out.write.mode("append").parquet(out_dir)
 
-    q = (
-        assigned.writeStream.foreachBatch(finalize)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        assigned.writeStream.foreachBatch(finalize).outputMode("append"),
+        checkpoint_dir,
     )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return bands.sparkSession.read.parquet(out_dir)
 
+
+#: hyperplane-LSH shape of the perceptual operator: EMB_N_TABLES tables of
+#: EMB_N_PLANES sign bits each, planes drawn from EMB_SEED
+EMB_N_PLANES = 12
+EMB_N_TABLES = 4
+EMB_SEED = 7
 
 EMB_BAND_OUT_SCHEMA = (
     "clip_id string, band_idx int, band_key long, rep string, "
@@ -291,11 +257,6 @@ def _emb_band_assign(
     """State per (table_idx, bucket): the seeding clip AND its embedding,
     so every later arrival's exact cosine to the bucket representative is
     computed right here — no second stateful stage, no lookup join."""
-    import numpy as np
-
-    if state.hasTimedOut:
-        state.remove()
-        return
     rep, rep_emb = state.get if state.exists else (None, None)
     if rep_emb is not None:
         rep_emb = np.asarray(rep_emb, dtype=np.float64)
@@ -330,12 +291,7 @@ def stream_embed_neardup_assign(
     source_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    threshold: float | None = None,
-    n_planes: int = 12,
-    n_tables: int = 4,
-    seed: int = 7,
     max_files_per_trigger: int | None = None,
-    ttl_ms: int | None = None,
 ) -> DataFrame:
     """Incremental PERCEPTUAL dedup: hyperplane-LSH buckets over
     streaming MFCC embeddings (functions/audio_embed.py), with
@@ -343,84 +299,36 @@ def stream_embed_neardup_assign(
     ``(band_idx, band_key)`` role — plus an exact-cosine VERIFY the
     MinHash variant lacks: the bucket state carries its seeder's
     embedding, every arrival's cosine to the seeder is computed inside
-    the stateful operator, and only matches ``>= threshold``
-    (default: the batch channel's NEARDUP_THRESHOLD) join a cluster.
+    the stateful operator, and only matches ``>= NEARDUP_THRESHOLD``
+    (the batch channel's threshold) join a cluster.
 
     Loose buckets + exact verify = batch-equivalent precision with
-    candidate recall ``1-(1-(1-acos(c)/pi)^n_planes)^n_tables``
+    candidate recall ``1-(1-(1-acos(c)/pi)^EMB_N_PLANES)^EMB_N_TABLES``
     (~0.995 for the fixture's SNR-33dB copies at 12 planes x 4
     tables).  Without the verify, bucket-only merging over-merged the
     sine-mixture corpus 3.2x (402/500 clips joined vs 125 verified).
     State is (clip_id, dim-30 embedding) per distinct (table, bucket)
-    — O(distinct buckets), TTL-boundable.  Clusters remain star-shaped
+    — O(distinct buckets).  Clusters remain star-shaped
     around first-seen reps (batch CC merges chains; see
     stream_near_dup_assign's tradeoff note)."""
-    import numpy as np
-
     from quichash_spark.functions.audio_embed import (
-        EMBED_CONFIG, NEARDUP_THRESHOLD, compute_audio_embeddings,
+        EMBED_DIM, NEARDUP_THRESHOLD, compute_audio_embeddings,
     )
     from quichash_spark.operators.similarity import hyperplane_buckets_udf
 
-    if threshold is None:
-        threshold = NEARDUP_THRESHOLD
-    dim = 2 * (EMBED_CONFIG.n_mfcc - 1)
-    planes = np.random.default_rng(seed).standard_normal(
-        (n_tables, n_planes, dim)
+    planes = np.random.default_rng(EMB_SEED).standard_normal(
+        (EMB_N_TABLES, EMB_N_PLANES, EMBED_DIM)
     )
     buckets = hyperplane_buckets_udf(planes)
-    schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    emb = compute_audio_embeddings(stream)
+    emb = compute_audio_embeddings(
+        file_stream(spark, source_dir, max_files_per_trigger)
+    )
     bands = emb.select(
         "clip_id",
         "embedding",
         F.posexplode(buckets(F.col("embedding"))).alias("band_idx", "band_key"),
     ).select("band_idx", "band_key", "clip_id", "embedding")
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms
-        else GroupStateTimeout.NoTimeout
+    return _run_band_stream(
+        bands, _emb_band_assign, EMB_BAND_OUT_SCHEMA, EMB_BAND_STATE_SCHEMA,
+        F.col("cosine") >= NEARDUP_THRESHOLD, checkpoint_dir, out_dir,
     )
-
-    def assign_with_ttl(key, pdfs, state):
-        yield from _emb_band_assign(key, pdfs, state)
-        if ttl_ms and state.exists:
-            state.setTimeoutDuration(ttl_ms)
-
-    assigned = bands.groupBy("band_idx", "band_key").applyInPandasWithState(
-        assign_with_ttl, EMB_BAND_OUT_SCHEMA, EMB_BAND_STATE_SCHEMA,
-        "append", timeout,
-    )
-
-    def finalize(batch_df: DataFrame, _batch_id: int) -> None:
-        matched = F.when(
-            ~F.col("is_new")
-            & (F.col("rep") != F.col("clip_id"))
-            & (F.col("cosine") >= threshold),
-            F.col("rep"),
-        )
-        out = (
-            batch_df.groupBy("clip_id")
-            .agg(F.min(matched).alias("match_rep"))
-            .select(
-                "clip_id",
-                F.coalesce("match_rep", "clip_id").alias("cluster_id"),
-                F.col("match_rep").isNotNull().alias("joined_existing"),
-            )
-        )
-        out.write.mode("append").parquet(out_dir)
-
-    q = (
-        assigned.writeStream.foreachBatch(finalize)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from quichash_spark.streaming import drain_to_memory, file_stream
+
 WINDOW_SECONDS = 3600
 
 
@@ -48,32 +50,17 @@ def stream_windowed_event_stats(
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Incremental variant: parquet file stream -> watermarked tumbling
-    window -> in-memory sink, drained with availableNow (bounded test
-    harness for the unbounded production shape: readStream from a
-    table/queue, writeStream to a sink table).
+    window -> in-memory sink (complete mode).
 
     Returns the completed result as a batch DataFrame.
     """
-    batch_schema = spark.read.parquet(source_dir).schema
     stream = (
-        spark.readStream.schema(batch_schema)
-        .parquet(source_dir)
+        file_stream(spark, source_dir)
         # watermarks require TIMESTAMP (tz-aware); parquet NTZ cast is
         # deterministic because the session timezone is pinned to UTC
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", watermark)
     )
-    agg = windowed_event_stats(stream, window_seconds)
-    import hashlib
-
-    name = "qh_stream_" + hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return drain_to_memory(
+        windowed_event_stats(stream, window_seconds), checkpoint_dir, "complete"
     )
-    q.awaitTermination()
-    return spark.table(name)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quichash_spark.sources.hashdb import STANDARD_SEP
+from quichash_spark.streaming import drain, file_stream
 
 
 def stream_scan_to_db(
@@ -33,11 +34,7 @@ def stream_scan_to_db(
     """
     from quichash_spark.sources.hashdb import read_standard
 
-    schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = file_stream(spark, source_dir, max_files_per_trigger)
     if algorithm == "sha256":
         digest = F.sha2(F.col("bytes"), 256)
     elif algorithm == "md5":
@@ -55,13 +52,8 @@ def stream_scan_to_db(
             F.col("clip_id"),
         ).alias("value")
     )
-    q = (
-        lines.writeStream.format("text")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        lines.writeStream.format("text").outputMode("append").option("path", out_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return read_standard(spark, out_dir)

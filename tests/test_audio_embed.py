@@ -4,6 +4,7 @@ sequential oracle replica (the same contract every other clips-channel
 operator carries)."""
 
 import numpy as np
+import pytest
 
 from quichash_spark.fixtures.clips import clip_row
 from quichash_spark.functions.audio import decode_pcm
@@ -107,36 +108,6 @@ def test_spark_embeddings_partition_invariant(spark):
     assert len(sa) > 0
 
 
-def test_fused_signature_embedding_matches_standalone(spark):
-    """compute_signatures(include_embedding=True) computes the MFCC
-    embedding in the SAME decode pass as the hashes (the 100 TB
-    single-read shape) and must produce bit-identical vectors to the
-    standalone mapInPandas kernel; the flagship schema is untouched by
-    default."""
-    from quichash_spark.config import CLIPS_CONFIG
-    from quichash_spark.fixtures import clips_dataframe
-    from quichash_spark.functions.audio_embed import compute_audio_embeddings
-    from quichash_spark.functions.udfs import compute_signatures
-
-    n = 40
-    fused = compute_signatures(
-        clips_dataframe(spark, n), CLIPS_CONFIG, include_embedding=True
-    )
-    got = {
-        r["clip_id"]: tuple(r["embedding"])
-        for r in fused.collect()
-        if r["embedding"] is not None
-    }
-    sep = {
-        r["clip_id"]: tuple(r["embedding"])
-        for r in compute_audio_embeddings(clips_dataframe(spark, n)).collect()
-    }
-    assert got == sep and len(got) > 0
-    assert "embedding" not in compute_signatures(
-        clips_dataframe(spark, n), CLIPS_CONFIG
-    ).columns
-
-
 def test_spark_pairs_match_sequential_replica(spark):
     from quichash_spark.fixtures import clips_dataframe
     from quichash_spark.functions.audio_embed import compute_audio_embeddings
@@ -192,17 +163,22 @@ def test_audio_sem_dedup_matches_union_find(spark):
     assert got == exp
 
 
-def test_null_sr_hz_degrades_to_null_embedding(spark):
-    """ADVICE r4: a null sr_hz must behave like a failed decode (null
-    embedding for that ROW), not TypeError the whole Arrow batch — the
-    hash columns for the row (and every other row) still come through."""
+@pytest.mark.parametrize("kernel", ["embeddings", "quality"])
+def test_null_sr_hz_degrades_like_failed_decode(spark, kernel):
+    """A null sr_hz degrades that ROW like a failed decode instead of
+    killing the whole Arrow batch: the embedding kernel drops the row,
+    the quality kernel keeps it with decode_ok=false and null metrics.
+    Every other row comes through exactly as with the rates intact."""
     from pyspark.sql import functions as F
 
-    from quichash_spark.config import CLIPS_CONFIG
     from quichash_spark.fixtures import clips_dataframe
-    from quichash_spark.functions.udfs import compute_signatures
+    from quichash_spark.functions.audio_embed import compute_audio_embeddings
+    from quichash_spark.functions.audio_quality import (
+        METRIC_COLS, compute_audio_quality,
+    )
 
-    clips = clips_dataframe(spark, 16).withColumn(
+    intact = clips_dataframe(spark, 16)
+    clips = intact.withColumn(
         "sr_hz",
         F.when(F.pmod(F.xxhash64("clip_id"), F.lit(2)) == 0, None).otherwise(
             F.col("sr_hz")
@@ -213,13 +189,25 @@ def test_null_sr_hz_degrades_to_null_embedding(spark):
         for r in clips.filter(F.col("sr_hz").isNull()).select("clip_id").collect()
     }
     assert 0 < len(nulled) < 16  # the fixture split actually exercised both
-    rows = compute_signatures(
-        clips, CLIPS_CONFIG, include_embedding=True
-    ).collect()
-    assert len(rows) == 16
-    for r in rows:
-        if r["clip_id"] in nulled:
-            assert r["embedding"] is None
-        else:
-            assert r["embedding"] is not None
-        assert r["content_hash"] is not None or not r["decode_ok"]
+    if kernel == "embeddings":
+        def run(df):
+            return {
+                r["clip_id"]: tuple(r["embedding"])
+                for r in compute_audio_embeddings(df).collect()
+            }
+    else:
+        def run(df):
+            return {
+                r["clip_id"]: r.asDict() for r in compute_audio_quality(df).collect()
+            }
+    got, exp = run(clips), run(intact)
+    assert {c: v for c, v in got.items() if c not in nulled} == {
+        c: v for c, v in exp.items() if c not in nulled
+    }
+    if kernel == "embeddings":
+        assert nulled & set(exp) and not nulled & set(got)
+    else:
+        assert len(got) == 16
+        for cid in nulled:
+            assert not got[cid]["decode_ok"]
+            assert all(got[cid][c] is None for c in METRIC_COLS)

@@ -39,8 +39,9 @@ def _planted(kind: str, n: int = 200) -> set[tuple[str, str]]:
 def test_exact_dedup_matches_truth(signatures):
     from quichash_spark.operators.exact_dedup import exact_duplicate_edges, exact_duplicate_groups
 
-    groups = exact_duplicate_groups(signatures).collect()
-    edges = {(r["clip_a"], r["clip_b"]) for r in exact_duplicate_edges(signatures).collect()}
+    groups_df = exact_duplicate_groups(signatures)
+    groups = groups_df.collect()
+    edges = {(r["clip_a"], r["clip_b"]) for r in exact_duplicate_edges(groups_df).collect()}
     planted = _planted("exact")
     assert edges == planted  # pairs of size-2 groups == star edges
     assert all(r["n"] == 2 for r in groups)

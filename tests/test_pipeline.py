@@ -47,7 +47,7 @@ def test_report_invariants(result):
     # exact-dup pairs are intra-cluster (recall floor, BASELINE.md)
     from quichash_spark.operators.exact_dedup import exact_duplicate_edges
 
-    exact = exact_duplicate_edges(res.signatures)
+    exact = exact_duplicate_edges(res.exact_groups)
     a = clusters.withColumnRenamed("clip_id", "clip_a").withColumnRenamed(
         "cluster_id", "ca"
     )

@@ -104,59 +104,6 @@ def test_bpe_ish_token_count(spark):
     assert got == [6, 0]
 
 
-def test_stream_exact_dedup_matches_batch(spark, tiny_clips, tmp_path):
-    import shutil
-
-    from quichash_spark.streaming.dedup import stream_exact_dedup
-
-    src = tmp_path / "clips_src"
-    tiny_clips.write.mode("overwrite").parquet(str(src))
-    got = stream_exact_dedup(spark, str(src), str(tmp_path / "ckpt"))
-    # one row per distinct content hash
-    from quichash_spark.config import CLIPS_CONFIG
-    from quichash_spark.functions.udfs import compute_signatures
-
-    expected = (
-        compute_signatures(tiny_clips, CLIPS_CONFIG)
-        .filter("decode_ok")
-        .select("content_hash")
-        .distinct()
-        .count()
-    )
-    assert got.count() == expected
-    assert got.select("content_hash").distinct().count() == expected
-    shutil.rmtree(src, ignore_errors=True)
-
-
-def test_stream_dedup_watermark_collapses_across_batches(spark, tiny_clips, tmp_path):
-    """With a watermark, state is keyed on content_hash ALONE
-    (dropDuplicatesWithinWatermark): a duplicate arriving in a later
-    micro-batch must still collapse.  maxFilesPerTrigger=1 forces each
-    file into its own micro-batch."""
-    from quichash_spark.config import CLIPS_CONFIG
-    from quichash_spark.functions.udfs import compute_signatures
-    from quichash_spark.streaming.dedup import stream_exact_dedup
-
-    src = tmp_path / "clips_wm"
-    first = tiny_clips.limit(40)
-    # same 40 clips written twice => identical hashes in separate files
-    first.coalesce(1).write.mode("overwrite").parquet(str(src))
-    first.coalesce(1).write.mode("append").parquet(str(src))
-    got = stream_exact_dedup(
-        spark, str(src), str(tmp_path / "ckpt_wm"), watermark="10 minutes",
-        max_files_per_trigger=1,
-    )
-    expected = (
-        compute_signatures(first, CLIPS_CONFIG)
-        .filter("decode_ok")
-        .select("content_hash")
-        .distinct()
-        .count()
-    )
-    assert got.select("content_hash").distinct().count() == expected
-    assert got.count() == expected  # cross-batch duplicates collapsed
-
-
 def test_glob_source(spark, tiny_clips, tmp_path):
     """Reference S6 (wildcard expansion, src/wildcard.rs:23-69): path
     globs resolve at the reader."""
