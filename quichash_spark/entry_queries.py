@@ -1127,8 +1127,8 @@ def q_audio_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_audio_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual audio near-dup channel (functions/audio_embed.py):
-    MFCC [mean||std] clip embeddings (shuffle-free mapInPandas over the
-    scan) fed into hyperplane-LSH candidate buckets + exact-cosine
+    MFCC [mean||std] clip embeddings (shuffle-free ``audio.map_decoded``
+    over the scan) fed into hyperplane-LSH candidate buckets + exact-cosine
     verification (``neardup_pairs_ann`` — JVM-side zip_with/aggregate
     cosine, candidates from a bucket equi-join, no CartesianProduct/BNLJ
     node; plan-asserted in tests/test_plans.py).  Complements

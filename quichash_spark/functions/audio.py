@@ -2,9 +2,9 @@
 
 Mirrors the reference's streaming hash loop over file bytes
 (``/root/reference/src/hash.rs:669-739``) but inverted for Spark: bytes
-arrive as Arrow binary columns and are decoded per batch inside
-``mapInPandas`` kernels (quichash streams one file through many hashers;
-we stream many rows through one vectorized kernel).
+arrive as Arrow binary columns and are decoded once per batch
+(quichash streams one file through many hashers; we stream many rows
+through one vectorized kernel).
 
 Codecs — REAL, implemented from public format specs with stdlib+numpy:
 
@@ -28,7 +28,11 @@ libraries and are not registered), corrupt or truncated bytes all decode
 to ``None``, which every kernel turns into a ``decode_ok=false`` row (or
 no output rows) — never an exception that kills a stage.
 :func:`decode_column` is the one zero-copy reader of an Arrow binary
-column; the Arrow-native kernels (signatures, verify) decode through it.
+column, and :func:`map_decoded` is the one Spark harness of the per-clip
+kernels (embeddings, quality, landmarks, segment hashes, PCM CDC): it
+decodes each Arrow batch through :func:`decode_column` and hands the
+kernel columns.  Signatures and the verify slow path read the column
+directly.
 
 G.711 and IMA ADPCM prefer stdlib ``audioop`` C kernels at runtime when
 available (Python <= 3.12; removed in 3.13 by PEP 594) with the
@@ -469,6 +473,36 @@ def decode_column(binary_array, codecs: list[str]) -> list[np.ndarray | None]:
     ]
 
 
+def map_decoded(clips, kernel: Callable, schema, extra: tuple = ()):
+    """THE Spark harness of the per-clip audio kernels: selects
+    ``clip_id, bytes, codec, *extra``, runs ``mapInArrow``, decodes each
+    batch once through :func:`decode_column` (zero-copy payload views, no
+    pandas) and calls ``kernel(ids, pcms, *extra_lists)`` — Python lists,
+    ``pcms[i]`` is ``None`` for an undecodable row.  The kernel returns
+    one column (list or numpy array) per ``schema`` field, in order; any
+    number of rows (rows may be dropped or exploded)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+
+    def batches(it):
+        for rb in it:
+            cols = kernel(
+                rb.column(0).to_pylist(),
+                decode_column(rb.column(1), rb.column(2).to_pylist()),
+                *(c.to_pylist() for c in rb.columns[3:]),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return clips.select("clip_id", "bytes", "codec", *extra).mapInArrow(
+        batches, schema
+    )
+
+
 # ---------------------------------------------------------------------------
 # SNR verification kernel (BASELINE.json input_hint: allclose SNR >= 30 dB)
 # ---------------------------------------------------------------------------
@@ -656,6 +690,7 @@ __all__ = [
     "decode_column",
     "decode_pcm",
     "encode_wav",
+    "map_decoded",
     "snr_db",
     "pcm_frame_bits",
     "pcm_shingle_hashes",

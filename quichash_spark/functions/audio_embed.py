@@ -155,10 +155,12 @@ def mfcc_frames(pcm: np.ndarray, sr: int,
     return logmel @ _dct2_matrix(cfg.n_mfcc, cfg.n_mels).T
 
 
-def mfcc_embedding(pcm: np.ndarray | None, sr: int,
+def mfcc_embedding(pcm: np.ndarray | None, sr: int | None,
                    cfg: AudioEmbedConfig = EMBED_CONFIG) -> np.ndarray | None:
-    """L2-normalized float32 [mean || std] MFCC summary, or None."""
-    if pcm is None or pcm.size == 0:
+    """L2-normalized float32 [mean || std] MFCC summary, or None (also
+    for a null or non-positive rate: the row degrades like a failed
+    decode)."""
+    if pcm is None or pcm.size == 0 or sr is None or sr <= 0:
         return None
     mf = mfcc_frames(pcm, sr, cfg)[:, 1:]  # drop c0 (overall energy)
     emb = np.concatenate([mf.mean(axis=0), mf.std(axis=0)])
@@ -171,34 +173,21 @@ def mfcc_embedding(pcm: np.ndarray | None, sr: int,
 def compute_audio_embeddings(clips, cfg: AudioEmbedConfig = EMBED_CONFIG):
     """Spark operator: clips (clip_id, bytes, codec, sr_hz) ->
     (clip_id, embedding array<float>); undecodable rows dropped.
-    Shuffle-free mapInPandas — embeds pipeline with the scan."""
-    import pandas as pd
-
+    Shuffle-free ``audio.map_decoded`` — embeds pipeline with the scan."""
     from pyspark.sql.types import (
         ArrayType, FloatType, StringType, StructField, StructType,
     )
 
-    from quichash_spark.functions.audio import decode_pcm
+    from quichash_spark.functions.audio import map_decoded
 
     schema = StructType([
         StructField("clip_id", StringType()),
         StructField("embedding", ArrayType(FloatType())),
     ])
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for cid, data, codec, sr in zip(
-                pdf["clip_id"], pdf["bytes"], pdf["codec"], pdf["sr_hz"]
-            ):
-                # a null rate degrades like a failed decode: row dropped
-                if pd.isna(sr):
-                    continue
-                emb = mfcc_embedding(decode_pcm(data, codec), int(sr), cfg)
-                if emb is not None:
-                    rows.append({"clip_id": cid, "embedding": emb.tolist()})
-            yield pd.DataFrame(rows, columns=["clip_id", "embedding"])
+    def kernel(ids, pcms, rates):
+        embs = [mfcc_embedding(p, sr, cfg) for p, sr in zip(pcms, rates)]
+        keep = [i for i, e in enumerate(embs) if e is not None]
+        return [ids[i] for i in keep], [embs[i] for i in keep]
 
-    return clips.select("clip_id", "bytes", "codec", "sr_hz").mapInPandas(
-        batches, schema
-    )
+    return map_decoded(clips, kernel, schema, extra=("sr_hz",))

@@ -41,8 +41,9 @@ integer arithmetic):
                    AND silent_ppm < SILENT_PPM_MAX
                    AND WPM_MIN <= wpm <= WPM_MAX
 
-Scale notes (100 TB): the kernel is a shuffle-free ``mapInPandas`` over
-the scan (same shape as ``audio_embed.compute_audio_embeddings``);
+Scale notes (100 TB): the kernel runs in the shuffle-free
+``audio.map_decoded`` harness over the scan (like every per-clip audio
+kernel);
 ``dur_ms``/``transcript`` ride through the kernel untouched so the
 derived columns need NO join back to the source table.  All downstream
 arithmetic is whole-stage-codegen JVM expressions.
@@ -82,11 +83,14 @@ METRIC_COLS = (
 )
 
 
-def pcm_quality_metrics(pcm: np.ndarray | None, sr_hz: int) -> dict | None:
-    """Integer-exact quality metrics for one decoded clip (or None when
-    the clip failed to decode).  Vectorized numpy; int64 throughout, so
-    every value equals the plain-Python replica bit-for-bit."""
-    if pcm is None:
+def pcm_quality_metrics(
+    pcm: np.ndarray | None, sr_hz: int | None
+) -> dict | None:
+    """Integer-exact quality metrics for one decoded clip, or None when
+    the clip failed to decode or its rate is null or non-positive.
+    Vectorized numpy; int64 throughout, so every value equals the
+    plain-Python replica bit-for-bit."""
+    if pcm is None or sr_hz is None or sr_hz <= 0:
         return None
     s = pcm.astype(np.int64, copy=False)
     n = int(s.size)
@@ -114,16 +118,15 @@ def compute_audio_quality(clips):
     Input columns ``(clip_id, bytes, codec, sr_hz, dur_ms, transcript)``;
     output carries ``clip_id, decode_ok`` + :data:`METRIC_COLS` (nulls on
     decode failure) + pass-through ``dur_ms, transcript`` so the derived
-    speaking-rate columns join nothing.  Shuffle-free ``mapInPandas``
-    (one Arrow exchange, pipelined with the parquet scan)."""
-    import pandas as pd
-
+    speaking-rate columns join nothing.  Shuffle-free
+    ``audio.map_decoded`` (one Arrow exchange, pipelined with the
+    parquet scan)."""
     from pyspark.sql.types import (
         BooleanType, IntegerType, LongType, StringType, StructField,
         StructType,
     )
 
-    from quichash_spark.functions.audio import decode_pcm
+    from quichash_spark.functions.audio import map_decoded
 
     schema = StructType(
         [StructField("clip_id", StringType()),
@@ -133,23 +136,16 @@ def compute_audio_quality(clips):
            StructField("transcript", StringType())]
     )
 
-    def batches(it):
-        for pdf in it:
-            out = []
-            for cid, data, codec, sr, dur, tr in zip(
-                pdf["clip_id"], pdf["bytes"], pdf["codec"], pdf["sr_hz"],
-                pdf["dur_ms"], pdf["transcript"],
-            ):
-                # a null rate degrades like a failed decode: null metrics
-                pcm = None if pd.isna(sr) else decode_pcm(data, codec)
-                m = pcm_quality_metrics(pcm, int(sr)) if pcm is not None else None
-                row = {"clip_id": cid, "decode_ok": m is not None,
-                       "dur_ms": dur, "transcript": tr}
-                row.update(m or {c: None for c in METRIC_COLS})
-                out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in schema.fields]
-            )
+    def kernel(ids, pcms, rates, durs, transcripts):
+        ms = [pcm_quality_metrics(p, sr) for p, sr in zip(pcms, rates)]
+        return [
+            ids,
+            [m is not None for m in ms],
+            *([None if m is None else m[c] for m in ms] for c in METRIC_COLS),
+            durs,
+            transcripts,
+        ]
 
-    cols = ["clip_id", "bytes", "codec", "sr_hz", "dur_ms", "transcript"]
-    return clips.select(*cols).mapInPandas(batches, schema)
+    return map_decoded(
+        clips, kernel, schema, extra=("sr_hz", "dur_ms", "transcript")
+    )

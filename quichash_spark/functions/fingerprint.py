@@ -27,9 +27,9 @@ Matching (operators/fingerprint_match.py) joins clips on the hash and
 requires >= ``min_matches`` collisions agreeing on one anchor-time
 delta — random collisions spread over deltas, true matches concentrate.
 
-Scale: the kernel is shuffle-free per clip (mapInPandas); the join is
-a hash-bucketed self-join with a non-discriminative-hash cap, the same
-shape (and the same 100 TB story) as the LSH band join.
+Scale: the kernel is shuffle-free per clip (``audio.map_decoded``); the
+join is a hash-bucketed self-join with a non-discriminative-hash cap,
+the same shape (and the same 100 TB story) as the LSH band join.
 """
 
 from __future__ import annotations
@@ -123,31 +123,16 @@ def landmark_hashes(
     return np.stack([h, t[ai]], axis=1)
 
 
-def fingerprint_rows(
-    clip_id: str, data: bytes | None, codec: str,
-    cfg: FingerprintConfig = FP_CONFIG,
-) -> list[dict]:
-    """Exploded (clip_id, fp_hash, t_anchor) rows for one clip."""
-    from quichash_spark.functions.audio import decode_pcm
-
-    pcm = decode_pcm(data, codec)
-    lm = landmark_hashes(pcm, cfg)
-    return [
-        {"clip_id": clip_id, "fp_hash": int(h), "t_anchor": int(t)}
-        for h, t in lm
-    ]
-
-
 def compute_fingerprints(clips, cfg: FingerprintConfig = FP_CONFIG):
     """Spark operator: clips (clip_id, bytes, codec) -> exploded
     landmark table (clip_id, fp_hash, t_anchor).  Shuffle-free
-    (mapInPandas over the scan); downstream matching does the one
-    hash-bucketed exchange."""
-    import pandas as pd
-
+    (``audio.map_decoded`` over the scan); downstream matching does the
+    one hash-bucketed exchange."""
     from pyspark.sql.types import (
         IntegerType, LongType, StringType, StructField, StructType,
     )
+
+    from quichash_spark.functions.audio import map_decoded
 
     schema = StructType([
         StructField("clip_id", StringType()),
@@ -155,35 +140,16 @@ def compute_fingerprints(clips, cfg: FingerprintConfig = FP_CONFIG):
         StructField("t_anchor", IntegerType()),
     ])
 
-    from quichash_spark.functions.audio import decode_pcm
+    def kernel(ids, pcms):
+        # columnar: one landmark array per clip, one concatenation per
+        # batch (a dict per landmark cost ~10 us/row at ~2k landmarks/clip)
+        lms = [landmark_hashes(p, cfg) for p in pcms]
+        flat = np.concatenate([np.empty((0, 2), dtype=np.int64), *lms])
+        counts = [lm.shape[0] for lm in lms]
+        return (
+            np.repeat(np.asarray(ids, dtype=object), counts),
+            flat[:, 0],
+            flat[:, 1].astype(np.int32),
+        )
 
-    def batches(it):
-        for pdf in it:
-            # columnar accumulation: one landmark array per clip, one
-            # frame per batch — the previous one-dict-per-landmark loop
-            # cost ~10 us/row of pure Python at ~2k landmarks/clip
-            # (guide §4.2); hash/anchor values are unchanged
-            ids: list = []
-            lms: list[np.ndarray] = []
-            for cid, data, codec in zip(pdf["clip_id"], pdf["bytes"], pdf["codec"]):
-                pcm = decode_pcm(data, codec)
-                lm = landmark_hashes(pcm, cfg)
-                if lm.shape[0] == 0:
-                    continue
-                ids.extend([cid] * lm.shape[0])
-                lms.append(lm)
-            if lms:
-                flat = np.concatenate(lms)
-                yield pd.DataFrame({
-                    "clip_id": ids,
-                    "fp_hash": flat[:, 0],
-                    "t_anchor": flat[:, 1].astype(np.int32),
-                })
-            else:
-                yield pd.DataFrame({
-                    "clip_id": pd.Series([], dtype=object),
-                    "fp_hash": pd.Series([], dtype=np.int64),
-                    "t_anchor": pd.Series([], dtype=np.int32),
-                })
-
-    return clips.select("clip_id", "bytes", "codec").mapInPandas(batches, schema)
+    return map_decoded(clips, kernel, schema)

@@ -35,7 +35,8 @@ million).  The aggregate is count-only — a hot boilerplate chunk shared
 by a million documents contributes ONE group row, never a pair
 expansion, so no cap is needed (unlike the LSH/segment channels).
 
-Scale notes (100 TB): chunking is a shuffle-free ``mapInPandas``; the
+Scale notes (100 TB): chunking is shuffle-free (``mapInPandas`` over
+documents, ``audio.map_decoded`` over clips); the
 stats are two hash-partitioned aggregations (chunk-hash counts with
 map-side combine, then a per-document rollup).  The join back to chunks
 carries only (hash, count>=2), and AQE handles residual skew.
@@ -136,16 +137,10 @@ def compute_cdc_chunks(docs: DataFrame, id_col: str = "doc_id",
 
     def batches(it):
         for pdf in it:
-            ids: list = []
-            parts: list[tuple[np.ndarray, np.ndarray]] = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                spans = chunk_spans(data)
-                if not spans:
-                    continue
-                ids.extend([did] * len(spans))
-                parts.append(_chunk_cols(data, spans))
-            yield _chunk_frame(id_col, ids, parts)
+            cols = _chunk_table(
+                pdf[id_col], ((t or "").encode("utf-8") for t in pdf[text_col])
+            )
+            yield pd.DataFrame(dict(zip(schema.fieldNames(), cols)))
 
     return docs.select(id_col, text_col).mapInPandas(batches, schema)
 
@@ -169,31 +164,29 @@ def _chunk_cols(data: bytes, spans: list[tuple[int, int]]):
     return hv, lens
 
 
-def _chunk_frame(id_col: str, ids: list, parts):
-    """Columnar chunk-table frame: the previous one-dict-per-chunk loop
-    measured ~10 us/row of pure Python overhead (3 s per 300k chunks) —
-    building numpy columns once per batch removes it (guide §4.2)."""
-    import pandas as pd
-
-    if not parts:
-        return pd.DataFrame({
-            id_col: pd.Series([], dtype=object),
-            "chunk_idx": pd.Series([], dtype=np.int32),
-            "chunk_hash": pd.Series([], dtype=np.int64),
-            "chunk_len": pd.Series([], dtype=np.int32),
-        })
+def _chunk_table(ids, payloads):
+    """(id, chunk_idx, chunk_hash, chunk_len) columns of one batch's chunk
+    table; an empty payload contributes no chunks.  Columnar: a dict per
+    chunk measured ~10 us/row of pure Python overhead (3 s per 300k
+    chunks) — numpy columns built once per batch remove it."""
+    out_ids: list = []
+    parts: list[tuple[np.ndarray, np.ndarray]] = []
+    for i, data in zip(ids, payloads):
+        spans = chunk_spans(data)
+        if spans:
+            out_ids.extend([i] * len(spans))
+            parts.append(_chunk_cols(data, spans))
     counts = np.fromiter((h.size for h, _ in parts), dtype=np.int64,
                          count=len(parts))
     # per-document 0..n-1 chunk indices, vectorized across the batch
-    total = int(counts.sum())
     starts = np.repeat(np.cumsum(counts) - counts, counts)
-    idx = (np.arange(total) - starts).astype(np.int32)
-    return pd.DataFrame({
-        id_col: ids,
-        "chunk_idx": idx,
-        "chunk_hash": np.concatenate([h for h, _ in parts]),
-        "chunk_len": np.concatenate([l for _, l in parts]),
-    })
+    idx = (np.arange(int(counts.sum())) - starts).astype(np.int32)
+    return (
+        out_ids,
+        idx,
+        np.concatenate([np.empty(0, np.int64), *(h for h, _ in parts)]),
+        np.concatenate([np.empty(0, np.int32), *(l for _, l in parts)]),
+    )
 
 
 def cdc_dup_stats(chunks: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -236,7 +229,7 @@ def compute_pcm_cdc_chunks(clips: DataFrame) -> DataFrame:
         IntegerType, LongType, StringType, StructField, StructType,
     )
 
-    from quichash_spark.functions.audio import decode_pcm
+    from quichash_spark.functions.audio import map_decoded
 
     schema = StructType([
         StructField("clip_id", StringType()),
@@ -245,24 +238,10 @@ def compute_pcm_cdc_chunks(clips: DataFrame) -> DataFrame:
         StructField("chunk_len", IntegerType()),
     ])
 
-    def batches(it):
-        for pdf in it:
-            ids: list = []
-            parts: list[tuple[np.ndarray, np.ndarray]] = []
-            for cid, data, codec in zip(
-                pdf["clip_id"], pdf["bytes"], pdf["codec"]
-            ):
-                pcm = decode_pcm(data, codec)
-                if pcm is None:
-                    continue
-                raw = np.ascontiguousarray(pcm, dtype="<i2").tobytes()
-                spans = chunk_spans(raw)
-                if not spans:
-                    continue
-                ids.extend([cid] * len(spans))
-                parts.append(_chunk_cols(raw, spans))
-            yield _chunk_frame("clip_id", ids, parts)
+    def kernel(ids, pcms):
+        return _chunk_table(ids, (
+            b"" if p is None else np.asarray(p, dtype="<i2").tobytes()
+            for p in pcms
+        ))
 
-    return clips.select("clip_id", "bytes", "codec").mapInPandas(
-        batches, schema
-    )
+    return map_decoded(clips, kernel, schema)

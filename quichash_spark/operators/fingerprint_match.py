@@ -27,18 +27,6 @@ from pyspark.sql import functions as F
 from quichash_spark.functions.fingerprint import FP_CONFIG, FingerprintConfig
 
 
-def capped_fingerprints(
-    fps: DataFrame, cfg: FingerprintConfig = FP_CONFIG
-) -> DataFrame:
-    """Landmarks minus the over-common hashes (> ``max_bucket``
-    occurrences corpus-wide)."""
-    counts = fps.groupBy("fp_hash").agg(F.count("*").alias("n_occ"))
-    return (
-        fps.join(counts.filter(F.col("n_occ") <= cfg.max_bucket), "fp_hash")
-        .drop("n_occ")
-    )
-
-
 def bucket_stats(fps: DataFrame, cfg: FingerprintConfig = FP_CONFIG) -> DataFrame:
     """(n_hashes, n_dropped_hashes, n_dropped_landmarks) — the no-silent-
     caps report for the ``max_bucket`` filter."""
@@ -53,21 +41,17 @@ def bucket_stats(fps: DataFrame, cfg: FingerprintConfig = FP_CONFIG) -> DataFram
 
 
 def fingerprint_pairs(
-    fps: DataFrame, cfg: FingerprintConfig = FP_CONFIG,
-    checkpoint: bool = True,
+    fps: DataFrame, cfg: FingerprintConfig = FP_CONFIG
 ) -> DataFrame:
     """Clip pairs with >= ``min_matches`` hash collisions agreeing on one
     anchor-time delta: (clip_a, clip_b, aligned_matches, total_matches,
     delta_frames), clip_a < clip_b.
 
-    ``checkpoint`` materializes the exploded landmark table once
-    (eager localCheckpoint): the cap count and BOTH self-join branches
-    reuse it, instead of running the STFT kernel three times.  Pass
-    False when ``fps`` is already checkpointed/persisted by the caller
-    (the 100 TB pipeline shape writes landmarks to a stage table).
+    The exploded landmark table is materialized once (eager
+    localCheckpoint): the cap count and BOTH self-join branches reuse
+    it, instead of running the STFT kernel three times.
     """
-    if checkpoint:
-        fps = fps.localCheckpoint(eager=True)
+    fps = fps.localCheckpoint(eager=True)
     # n_occ > 1 additionally drops singleton hashes (roughly half the
     # landmark table) before the self-join — they can never form a pair,
     # so the join shuffles half the bytes for identical output (guide

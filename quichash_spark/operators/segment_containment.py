@@ -56,16 +56,17 @@ GROUP_CAP = 64
 def compute_segment_hashes(clips: DataFrame, window: int = WINDOW) -> DataFrame:
     """clips -> (clip_id, n_windows, seg_hashes array<long>).
 
-    Shuffle-free ``mapInPandas`` decode pass; undecodable rows yield
-    ``n_windows = 0`` with an empty hash list (they can never pair)."""
-    import pandas as pd
+    Shuffle-free ``audio.map_decoded`` decode pass; undecodable rows
+    yield ``n_windows = 0`` with an empty hash list (they can never
+    pair)."""
+    import numpy as np
 
     from pyspark.sql.types import (
         ArrayType, IntegerType, LongType, StringType, StructField,
         StructType,
     )
 
-    from quichash_spark.functions.audio import decode_pcm
+    from quichash_spark.functions.audio import map_decoded
     from quichash_spark.functions.hashing import hash64
 
     schema = StructType([
@@ -74,33 +75,18 @@ def compute_segment_hashes(clips: DataFrame, window: int = WINDOW) -> DataFrame:
         StructField("seg_hashes", ArrayType(LongType())),
     ])
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for cid, data, codec in zip(
-                pdf["clip_id"], pdf["bytes"], pdf["codec"]
-            ):
-                pcm = decode_pcm(data, codec)
-                hs: list[int] = []
-                if pcm is not None:
-                    import numpy as np
+    def kernel(ids, pcms):
+        step = 2 * window
+        hs: list[list[int]] = []
+        for pcm in pcms:
+            raw = b"" if pcm is None else np.asarray(pcm, dtype="<i2").tobytes()
+            hs.append([
+                _i64(hash64(raw[o: o + step]))
+                for o in range(0, len(raw) - step + 1, step)
+            ])
+        return ids, [len(h) for h in hs], hs
 
-                    raw = np.ascontiguousarray(pcm, dtype="<i2").tobytes()
-                    step = 2 * window
-                    hs = [
-                        _i64(hash64(raw[o: o + step]))
-                        for o in range(0, len(raw) - step + 1, step)
-                    ]
-                rows.append(
-                    {"clip_id": cid, "n_windows": len(hs), "seg_hashes": hs}
-                )
-            yield pd.DataFrame(
-                rows, columns=["clip_id", "n_windows", "seg_hashes"]
-            )
-
-    return clips.select("clip_id", "bytes", "codec").mapInPandas(
-        batches, schema
-    )
+    return map_decoded(clips, kernel, schema)
 
 
 def _i64(u: int) -> int:

@@ -192,9 +192,7 @@ def neardup_pairs_ann(
     - the join key is (table_idx, bucket): AQE skew-join can split a
       residual hot bucket below the cap.
     """
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_tables, n_planes, dim))
-    buckets = hyperplane_buckets_udf(planes)
+    buckets = hyperplane_buckets_udf(dim, n_planes, n_tables, seed)
 
     # norm folded once per input vector; posexplode replicates the value
     base = corpus.select(
@@ -236,18 +234,23 @@ def neardup_pairs_ann(
     )
 
 
-def hyperplane_buckets_udf(planes_by_table: "np.ndarray"):
+def hyperplane_buckets_udf(dim: int, n_planes: int, n_tables: int, seed: int):
     """pandas_udf: embedding -> array<long> of bucket keys, one per table.
 
-    One numpy matmul covers every (table, plane) pair — the Arrow-batched
-    replacement for chaining n_tables*n_planes ``aggregate`` expressions
-    (which blows up codegen size and wall time).  Planes are broadcast as
-    a serialized constant (seed-frozen, partition-safe).
+    Draws the ``(n_tables, n_planes, dim)`` hyperplanes from
+    ``default_rng(seed)`` — the one place they are drawn, so every caller
+    with the same seed buckets identically.  One numpy matmul covers
+    every (table, plane) pair — the Arrow-batched replacement for
+    chaining n_tables*n_planes ``aggregate`` expressions (which blows up
+    codegen size and wall time).  Planes are broadcast as a serialized
+    constant (seed-frozen, partition-safe).
     """
     from pyspark.sql.types import ArrayType, LongType
 
-    n_tables, n_planes, _dim = planes_by_table.shape
-    flat = planes_by_table.reshape(n_tables * n_planes, -1)  # (T*P, dim)
+    planes = np.random.default_rng(seed).standard_normal(
+        (n_tables, n_planes, dim)
+    )
+    flat = planes.reshape(n_tables * n_planes, -1)  # (T*P, dim)
     weights = (1 << np.arange(n_planes, dtype=np.int64))
 
     @F.pandas_udf(ArrayType(LongType()))
@@ -281,9 +284,7 @@ def ann_lsh_topk(
     the per-table equi-join key is (table_idx, bucket) via posexplode —
     the same unified-bucket-table shape as the MinHash LSH stage.
     """
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_tables, n_planes, dim))
-    buckets = hyperplane_buckets_udf(planes)
+    buckets = hyperplane_buckets_udf(dim, n_planes, n_tables, seed)
 
     qb = queries.select(
         F.col(id_left).alias("query_id"),

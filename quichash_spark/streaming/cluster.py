@@ -316,10 +316,9 @@ def stream_embed_neardup_assign(
     )
     from quichash_spark.operators.similarity import hyperplane_buckets_udf
 
-    planes = np.random.default_rng(EMB_SEED).standard_normal(
-        (EMB_N_TABLES, EMB_N_PLANES, EMBED_DIM)
+    buckets = hyperplane_buckets_udf(
+        EMBED_DIM, EMB_N_PLANES, EMB_N_TABLES, EMB_SEED
     )
-    buckets = hyperplane_buckets_udf(planes)
     emb = compute_audio_embeddings(
         file_stream(spark, source_dir, max_files_per_trigger)
     )

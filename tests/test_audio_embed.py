@@ -163,12 +163,16 @@ def test_audio_sem_dedup_matches_union_find(spark):
     assert got == exp
 
 
+@pytest.mark.parametrize("bad_rate", [None, 0, -8000])
 @pytest.mark.parametrize("kernel", ["embeddings", "quality"])
-def test_null_sr_hz_degrades_like_failed_decode(spark, kernel):
-    """A null sr_hz degrades that ROW like a failed decode instead of
-    killing the whole Arrow batch: the embedding kernel drops the row,
-    the quality kernel keeps it with decode_ok=false and null metrics.
-    Every other row comes through exactly as with the rates intact."""
+def test_bad_sr_hz_degrades_like_failed_decode(spark, kernel, bad_rate):
+    """A null, zero or negative sr_hz degrades that ROW like a failed
+    decode instead of killing the whole Arrow batch (a zero rate divided
+    by zero in the resampler) or inventing values (a negative rate
+    embedded, and both made up quality frame counts): the embedding
+    kernel drops the row, the quality kernel keeps it with
+    decode_ok=false and null metrics.  Every other row comes through
+    exactly as with the rates intact."""
     from pyspark.sql import functions as F
 
     from quichash_spark.fixtures import clips_dataframe
@@ -178,17 +182,15 @@ def test_null_sr_hz_degrades_like_failed_decode(spark, kernel):
     )
 
     intact = clips_dataframe(spark, 16)
+    hit = F.pmod(F.xxhash64("clip_id"), F.lit(2)) == 0
     clips = intact.withColumn(
         "sr_hz",
-        F.when(F.pmod(F.xxhash64("clip_id"), F.lit(2)) == 0, None).otherwise(
-            F.col("sr_hz")
-        ),
+        F.when(hit, F.lit(bad_rate).cast("int")).otherwise(F.col("sr_hz")),
     )
-    nulled = {
-        r["clip_id"]
-        for r in clips.filter(F.col("sr_hz").isNull()).select("clip_id").collect()
+    bad_ids = {
+        r["clip_id"] for r in intact.filter(hit).select("clip_id").collect()
     }
-    assert 0 < len(nulled) < 16  # the fixture split actually exercised both
+    assert 0 < len(bad_ids) < 16  # the fixture split actually exercised both
     if kernel == "embeddings":
         def run(df):
             return {
@@ -201,13 +203,81 @@ def test_null_sr_hz_degrades_like_failed_decode(spark, kernel):
                 r["clip_id"]: r.asDict() for r in compute_audio_quality(df).collect()
             }
     got, exp = run(clips), run(intact)
-    assert {c: v for c, v in got.items() if c not in nulled} == {
-        c: v for c, v in exp.items() if c not in nulled
+    assert {c: v for c, v in got.items() if c not in bad_ids} == {
+        c: v for c, v in exp.items() if c not in bad_ids
     }
     if kernel == "embeddings":
-        assert nulled & set(exp) and not nulled & set(got)
+        assert bad_ids & set(exp) and not bad_ids & set(got)
     else:
         assert len(got) == 16
-        for cid in nulled:
+        for cid in bad_ids:
             assert not got[cid]["decode_ok"]
             assert all(got[cid][c] is None for c in METRIC_COLS)
+
+
+@pytest.mark.parametrize(
+    "kernel", ["embeddings", "quality", "fingerprints", "segments", "pcm_cdc"]
+)
+def test_hostile_payloads_degrade_in_every_per_clip_kernel(spark, kernel):
+    """Every per-clip audio kernel runs through ``audio.map_decoded``: an
+    mp3 row (no decoder), null bytes (the Arrow null-mask path), a
+    truncated WAV, a truncated FLAC and an unknown codec come out as no
+    embedding, a decode_ok=false quality row with null metrics, no
+    landmarks, zero segment windows and no CDC chunks — and every good
+    row is identical to a run without the bad rows."""
+    from collections import defaultdict
+
+    from quichash_spark.fixtures import CLIPS_SCHEMA, clips_dataframe
+    from quichash_spark.functions.audio import encode_wav
+    from quichash_spark.functions.audio_embed import compute_audio_embeddings
+    from quichash_spark.functions.audio_quality import (
+        METRIC_COLS, compute_audio_quality,
+    )
+    from quichash_spark.functions.fingerprint import compute_fingerprints
+    from quichash_spark.functions.flac import encode_flac
+    from quichash_spark.operators.cdc_dedup import compute_pcm_cdc_chunks
+    from quichash_spark.operators.segment_containment import (
+        compute_segment_hashes,
+    )
+
+    op = {
+        "embeddings": compute_audio_embeddings,
+        "quality": compute_audio_quality,
+        "fingerprints": compute_fingerprints,
+        "segments": compute_segment_hashes,
+        "pcm_cdc": compute_pcm_cdc_chunks,
+    }[kernel]
+    pcm = (np.sin(np.arange(4000) / 7.0) * 8000).astype(np.int16)
+    bad = [
+        ("bad_mp3", b"\xff\xfb\x90\x00" * 64, "mp3"),
+        ("bad_null", None, "pcm16"),
+        ("bad_wav_trunc", encode_wav(pcm)[:-1], "wav"),
+        ("bad_flac_trunc", encode_flac(pcm)[:2000], "flac"),
+        ("bad_unknown", pcm.tobytes(), "nope"),
+    ]
+    good = clips_dataframe(spark, 16)
+    clips = good.unionByName(spark.createDataFrame(
+        [(cid, b, 8000, 500, codec, "some words") for cid, b, codec in bad],
+        CLIPS_SCHEMA,
+    ))
+
+    def run(df):
+        out = defaultdict(list)
+        for r in op(df).collect():
+            d = r.asDict()
+            out[d.pop("clip_id")].append(tuple(
+                tuple(v) if isinstance(v, list) else v for v in d.values()
+            ))
+        return {cid: sorted(rows) for cid, rows in out.items()}
+
+    got, exp = run(clips), run(good)
+    bad_ids = {cid for cid, *_ in bad}
+    assert exp and {c: v for c, v in got.items() if c not in bad_ids} == exp
+    if kernel == "quality":
+        n = len(METRIC_COLS)
+        for cid in bad_ids:
+            assert got[cid] == [(False, *[None] * n, 500, "some words")], cid
+    elif kernel == "segments":
+        assert {c: got[c] for c in bad_ids} == {c: [(0, ())] for c in bad_ids}
+    else:
+        assert not bad_ids & set(got)
