@@ -692,18 +692,12 @@ def q_sem_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zero-pad so string min == numeric min, cast back after
     pad = lambda c: F.lpad(F.col(c).cast("string"), 8, "0")  # noqa: E731
     edges = pairs.select(pad("id_a").alias("clip_a"), pad("id_b").alias("clip_b"))
-    assigned = connected_components(edges).select(
+    return connected_components(
+        edges, nodes=emb.select(pad("vec_id").alias("clip_id"))
+    ).select(
         F.col("clip_id").cast("long").alias("vec_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),
-    )
-    singles = (
-        emb.select(F.col("vec_id").cast("long").alias("vec_id"))
-        .join(assigned.select("vec_id"), "vec_id", "left_anti")
-        .select("vec_id", F.col("vec_id").alias("cluster_id"))
-    )
-    return assigned.unionByName(singles).select(
-        "vec_id", "cluster_id",
-        (F.col("vec_id") == F.col("cluster_id")).alias("is_rep"),
+        (F.col("clip_id") == F.col("cluster_id")).alias("is_rep"),
     )
 
 
@@ -1018,8 +1012,7 @@ def q_audio_pair_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquets with the same case expression."""
     from quichash_spark.fixtures import materialized_clips
     from quichash_spark.functions.audio_embed import (
-        ANN_NEARDUP_PARAMS, EMBED_DIM, NEARDUP_THRESHOLD,
-        compute_audio_embeddings,
+        EMBED_DIM, NEARDUP_THRESHOLD, compute_audio_embeddings,
     )
     from quichash_spark.functions.fingerprint import compute_fingerprints
     from quichash_spark.operators.fingerprint_match import fingerprint_pairs
@@ -1031,8 +1024,7 @@ def q_audio_pair_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emb = compute_audio_embeddings(clips).localCheckpoint(eager=True)
     ep = neardup_pairs_ann(
-        emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id",
-        **ANN_NEARDUP_PARAMS,
+        emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id"
     ).select(
         F.col("id_a").alias("clip_a"), F.col("id_b").alias("clip_b"), "cosine"
     )
@@ -1133,16 +1125,16 @@ def q_audio_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine, candidates from a bucket equi-join, no CartesianProduct/BNLJ
     node; plan-asserted in tests/test_plans.py).  Complements
     audio_fp_pairs: landmarks match the same *recording*; this matches
-    similar *spectral envelopes*.  ANN params sit above the recall knee
-    for the 0.985 threshold (ANN_NEARDUP_PARAMS — measured recall 1.0
-    vs all-pairs at the 5000-clip fixture, min 3/16 table collisions
-    per true pair), so the output rows equal the all-pairs baseline.
+    similar *spectral envelopes*.  The operator's fixed plane/table
+    counts sit above the recall knee for the 0.985 threshold (measured
+    recall 1.0 vs all-pairs at the 5000-clip fixture, min 3/16 table
+    collisions per true pair), so the output rows equal the all-pairs
+    baseline.
     Oracle: the same frozen kernel sequentially + Spark-fold-order
     cosine (oracle/fixture.py::sequential_audio_embed_pairs)."""
     from quichash_spark.fixtures import materialized_clips
     from quichash_spark.functions.audio_embed import (
-        ANN_NEARDUP_PARAMS, EMBED_DIM, NEARDUP_THRESHOLD,
-        compute_audio_embeddings,
+        EMBED_DIM, NEARDUP_THRESHOLD, compute_audio_embeddings,
     )
     from quichash_spark.operators.similarity import neardup_pairs_ann
 
@@ -1151,10 +1143,7 @@ def q_audio_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # batches instead of running the MFCC kernel twice (same pattern as
     # fingerprint_pairs)
     emb = compute_audio_embeddings(clips).localCheckpoint(eager=True)
-    return neardup_pairs_ann(
-        emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id",
-        **ANN_NEARDUP_PARAMS,
-    )
+    return neardup_pairs_ann(emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id")
 
 
 def q_audio_sem_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1167,28 +1156,18 @@ def q_audio_sem_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     must agree with an independent engine on real string clip ids."""
     from quichash_spark.fixtures import materialized_clips
     from quichash_spark.functions.audio_embed import (
-        ANN_NEARDUP_PARAMS, EMBED_DIM, NEARDUP_THRESHOLD,
-        compute_audio_embeddings,
+        EMBED_DIM, NEARDUP_THRESHOLD, compute_audio_embeddings,
     )
     from quichash_spark.operators.connected_components import connected_components
     from quichash_spark.operators.similarity import neardup_pairs_ann
 
     clips = materialized_clips(spark, _clips_n(sf_dir))
     emb = compute_audio_embeddings(clips).localCheckpoint(eager=True)
-    pairs = neardup_pairs_ann(
-        emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id",
-        **ANN_NEARDUP_PARAMS,
-    )
+    pairs = neardup_pairs_ann(emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id")
     edges = pairs.select(
         F.col("id_a").alias("clip_a"), F.col("id_b").alias("clip_b")
     )
-    assigned = connected_components(edges)
-    singles = (
-        emb.select("clip_id")
-        .join(assigned.select("clip_id"), "clip_id", "left_anti")
-        .select("clip_id", F.col("clip_id").alias("cluster_id"))
-    )
-    return assigned.unionByName(singles).select(
+    return connected_components(edges, nodes=emb).select(
         "clip_id", "cluster_id",
         (F.col("clip_id") == F.col("cluster_id")).alias("is_rep"),
     )

@@ -5,9 +5,10 @@ the same recording, possibly shifted or noisy.  This module adds the
 *perceptual* channel: a fixed-length embedding summarizing a clip's
 spectral envelope, so near-identical-sounding clips land close in
 cosine space and feed the existing embedding dedup stack
-(operators/similarity.py: ``neardup_pairs`` baseline, ``ann_lsh_topk``
-/ ``ivf_topk`` / ``pq_topk`` as the 100 TB candidate paths, and the
-SemDeDup-style connected-components representative selection).
+(operators/similarity.py: ``neardup_pairs`` baseline,
+``neardup_pairs_ann`` / ``ann_lsh_topk`` / ``ivf_topk`` / ``pq_topk`` as
+the 100 TB candidate paths, and the SemDeDup-style connected-components
+representative selection).
 
 The kernel is the textbook MFCC construction from public formulas:
 
@@ -75,19 +76,13 @@ class AudioEmbedConfig:
 EMBED_CONFIG = AudioEmbedConfig()
 
 #: cosine floor for the perceptual near-dup channel (see module
-#: docstring for the measured fixture separation behind this value)
+#: docstring for the measured fixture separation behind this value);
+#: operators/similarity.neardup_pairs_ann fixes its LSH tables above
+#: the recall knee for it
 NEARDUP_THRESHOLD = 0.985
 
 #: embedding dimensionality: [mean || std] over MFCC c1..c(n_mfcc-1)
 EMBED_DIM = 2 * (EMBED_CONFIG.n_mfcc - 1)
-
-#: hyperplane-LSH candidate-generation parameters for the perceptual
-#: channel (operators/similarity.neardup_pairs_ann).  Chosen above the
-#: recall knee for NEARDUP_THRESHOLD on this kernel's embeddings:
-#: measured recall 1.0 at the 5000-clip fixture, minimum 3/16 table
-#: collisions per true pair, recall 1.0 across 6 alternative seeds
-#: (tests/test_similarity.py::test_neardup_ann_matches_allpairs).
-ANN_NEARDUP_PARAMS = {"n_planes": 12, "n_tables": 16, "seed": 7}
 
 
 @lru_cache(maxsize=32)  # few distinct (sr, cfg) per corpus; ~20%/clip

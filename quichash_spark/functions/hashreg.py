@@ -124,29 +124,11 @@ def resolve_batch_kernels(
 KERNEL_PROVENANCE, _BATCH = resolve_batch_kernels()
 
 
-def _jvm(fn: Callable[[Column], Column]) -> Callable[[Column], Column]:
-    return fn
-
-
 def _hashlib_udf(algo: str) -> Callable[[Column], Column]:
     @F.pandas_udf(StringType())
     def _h(s: pd.Series) -> pd.Series:
         return s.map(
             lambda v: hashlib.new(algo, v if isinstance(v, bytes) else str(v).encode("utf-8")).hexdigest()
-            if v is not None
-            else None
-        )
-
-    return lambda col: _h(col)
-
-
-def _pure_udf(fn: Callable[[bytes], str]) -> Callable[[Column], Column]:
-    """Arrow-batched wrapper for the pure-Python spec kernels."""
-
-    @F.pandas_udf(StringType())
-    def _h(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda v: fn(v if isinstance(v, bytes) else str(v).encode("utf-8"))
             if v is not None
             else None
         )
@@ -178,14 +160,14 @@ def _batch_udf(fn_batch: Callable[[list[bytes]], list[str]]) -> Callable[[Column
 #: marked; the reference's full catalog is covered (src/hash.rs:346-439).
 HASH_REGISTRY: dict[str, Callable[[Column], Column]] = {
     # JVM built-ins (whole-stage codegen)
-    "md5": _jvm(lambda c: F.md5(c)),
-    "sha1": _jvm(lambda c: F.sha1(c)),
-    "sha256": _jvm(lambda c: F.sha2(c, 256)),
-    "sha224": _jvm(lambda c: F.sha2(c, 224)),
-    "sha384": _jvm(lambda c: F.sha2(c, 384)),
-    "sha512": _jvm(lambda c: F.sha2(c, 512)),
-    "crc32": _jvm(lambda c: F.lower(F.hex(F.crc32(c)))),
-    "xxh64": _jvm(lambda c: F.lower(F.hex(F.xxhash64(c)))),
+    "md5": lambda c: F.md5(c),
+    "sha1": lambda c: F.sha1(c),
+    "sha256": lambda c: F.sha2(c, 256),
+    "sha224": lambda c: F.sha2(c, 224),
+    "sha384": lambda c: F.sha2(c, 384),
+    "sha512": lambda c: F.sha2(c, 512),
+    "crc32": lambda c: F.lower(F.hex(F.crc32(c))),
+    "xxh64": lambda c: F.lower(F.hex(F.xxhash64(c))),
     # Arrow-vectorized hashlib kernels
     "sha3-224": _hashlib_udf("sha3_224"),
     "sha3-256": _hashlib_udf("sha3_256"),

@@ -109,13 +109,15 @@ def _local_finish(edges: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame, max_iters: int = 25, local_finish_threshold: int = 5_000_000,
-    max_edges: int | None = None,
+    max_edges: int | None = None, *, nodes: DataFrame | None = None,
 ) -> DataFrame:
     """edges(clip_a, clip_b) -> assignments(clip_id, cluster_id).
 
-    ``cluster_id`` is the minimum member id of each component.  Nodes that
-    appear in no edge are NOT emitted — callers union isolated nodes with
-    self-labels (see pipeline).
+    ``cluster_id`` is the minimum member id of each component.  Without
+    ``nodes`` only ids that appear in an edge are emitted.  With
+    ``nodes`` (a frame with a ``clip_id`` column covering every edge
+    endpoint) the output has exactly one row per node, and a node in no
+    edge is its own cluster.
 
     Two-level strategy: alternating large-star/small-star rounds while the
     frontier exceeds ``local_finish_threshold`` edges, then one
@@ -132,6 +134,21 @@ def connected_components(
     ``edges`` itself, so pass the bound for cheap inputs such as
     checkpoint reads.
     """
+    assign = _components(edges, max_iters, local_finish_threshold, max_edges)
+    if nodes is None:
+        return assign
+    return (
+        nodes.select("clip_id")
+        .join(assign, "clip_id", "left")
+        .select("clip_id", F.coalesce("cluster_id", "clip_id").alias("cluster_id"))
+    )
+
+
+def _components(
+    edges: DataFrame, max_iters: int, local_finish_threshold: int,
+    max_edges: int | None,
+) -> DataFrame:
+    """Assignments of the ids that appear in ``edges``."""
     if max_edges is not None and max_edges <= local_finish_threshold:
         return _local_finish(
             edges.select(F.col("clip_a").alias("u"), F.col("clip_b").alias("v"))

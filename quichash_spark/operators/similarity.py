@@ -1,18 +1,33 @@
-"""Embedding similarity search: brute-force cosine top-k baseline + a
-random-hyperplane-LSH bucketed variant as the scale path.
+"""Embedding similarity search over an ``embedding`` array column.
+
+Operators (top-k ranks by cosine desc, ties by neighbor id asc; every
+output cosine is rounded to 6 places):
+
+- ``topk_bruteforce``: exact top-k of a small query set against the
+  corpus — a cross join with the query side broadcast; the ground truth;
+- ``neardup_pairs``: all unordered pairs with cosine >= threshold (a
+  self cross join, right side broadcast), and ``neardup_pairs_ann``, the
+  same rows from random-hyperplane LSH candidates (a bucket equi-join);
+- ``ann_lsh_topk`` / ``ivf_topk`` / ``pq_topk``: approximate top-k from
+  hyperplane buckets, from probed k-means cells, and from product
+  quantization codes with an exact re-rank.
+
+One core serves them all:
+
+- ``_side`` projects (id, vector, norm) below every join, so the norm
+  folds once per input vector, not once per pair; it drops rows whose
+  ``embedding`` is null (``_vectors``), so such a row is never a query,
+  a neighbor or a training point;
+- ``_cosine`` is the one pair score, JVM-side (``zip_with`` +
+  ``aggregate``, no Python);
+- ``_top_k`` is the one rank window;
+- ``_kmeans`` trains both the IVF quantizer and every PQ codebook
+  driver-side on a bounded ``_sample``;
+- ``_matrix`` and ``_sq_dists`` are the one vector conversion and the
+  one distance inside the pandas kernels.
 
 Not in the reference (its similarity notion is exact-hash equality); this
 is part of the training-data-pipeline extension the engine targets.
-
-Scale notes:
-- dot products and norms are JVM-side (``zip_with`` + ``aggregate``
-  higher-order functions over array columns) — no Python;
-- the brute-force variant is an explicit cross join: correct baseline,
-  quadratic — use it for small query sets against large corpora (queries
-  side broadcast);
-- the LSH variant buckets by ``n_planes`` random-hyperplane sign bits and
-  only scores within buckets (multi-probe via ``n_tables`` independent
-  tables), turning the cross join into an equi-join.
 """
 
 from __future__ import annotations
@@ -23,6 +38,44 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+_ID = "vec_id"
+_VEC = "embedding"
+#: hyperplane seed of both LSH operators (oracle replicas draw the same)
+_LSH_SEED = 7
+#: ``neardup_pairs_ann`` tables: above the recall knee of the audio MFCC
+#: channel (threshold 0.985, dim 30) — measured recall 1.0 at the
+#: 5000-clip fixture, every true pair colliding in >= 3 of the 16
+#: tables, recall 1.0 across 6 alternative seeds
+#: (tests/test_similarity.py::test_neardup_ann_matches_allpairs)
+_ANN_PLANES, _ANN_TABLES = 12, 16
+#: driver-side training sample bound and k-means budget (IVF and PQ)
+_SAMPLE_LIMIT = 10_000
+_KMEANS_ITERS = 10
+_IVF_SEED = 11
+#: PQ subspaces and bits per code
+_PQ_M, _PQ_NBITS = 16, 6
+
+
+def _vectors(df: DataFrame) -> DataFrame:
+    """Rows that have a vector: the embeddings table comes from outside
+    the program, and one null row must not fail or pollute a query."""
+    return df.filter(F.col(_VEC).isNotNull())
+
+
+def _matrix(vecs) -> "np.ndarray":
+    return np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
+
+
+def _sq_dists(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
+    """(n, k) squared euclidean distances of ``a``'s rows to ``b``'s."""
+    return ((a[:, None, :] - b[None, :, :]) ** 2).sum(axis=2)
+
+
+def _sample(corpus: DataFrame) -> "np.ndarray":
+    """The first ``_SAMPLE_LIMIT`` corpus vectors, collected to train on."""
+    rows = _vectors(corpus).select(_VEC).limit(_SAMPLE_LIMIT).collect()
+    return _matrix(r[0] for r in rows)
 
 
 def _kmeans_update(points: "np.ndarray", assign: "np.ndarray",
@@ -44,6 +97,25 @@ def _kmeans_update(points: "np.ndarray", assign: "np.ndarray",
             cent[c] = pts[lo:hi].mean(axis=0)
 
 
+def _kmeans(points: "np.ndarray", n_cent: int, iters: int,
+            rng: "np.random.Generator") -> "np.ndarray":
+    """Seeded Lloyd k-means: ``n_cent`` distinct rows drawn by ``rng``,
+    then up to ``iters`` assign/update rounds.  At the assignment
+    fixpoint the update recomputes identical means and every later round
+    is a no-op, so breaking there is bit-identical to running out the
+    budget (test-asserted)."""
+    cent = points[rng.choice(len(points), size=min(n_cent, len(points)),
+                             replace=False)]
+    prev = None
+    for _ in range(iters):
+        assign = _sq_dists(points, cent).argmin(axis=1)
+        if prev is not None and np.array_equal(assign, prev):
+            break
+        prev = assign
+        _kmeans_update(points, assign, cent)
+    return cent
+
+
 def _dot(a: str, b: str):
     return F.aggregate(
         F.zip_with(F.col(a), F.col(b), lambda x, y: x.cast("double") * y.cast("double")),
@@ -62,120 +134,103 @@ def _norm(col: str):
     )
 
 
-def cosine_pairs(
-    left: DataFrame,
-    right: DataFrame,
-    id_left: str = "vec_id",
-    id_right: str = "vec_id",
-    vec: str = "embedding",
-    broadcast_left: bool = True,
-) -> DataFrame:
-    """All (left x right) cosine scores; left side broadcast by default
-    (the small query set)."""
-    # norms are projected BELOW the join: one fold per input vector, not
-    # one per output pair (the join node blocks CollapseProject from
-    # inlining them back into the per-pair expression).  Same doubles —
-    # identical fold — so oracle value-hashes are unchanged.
-    l = left.select(
-        F.col(id_left).alias("query_id"), F.col(vec).alias("qv"),
-        _norm(vec).alias("qn"),
-    )
-    r = right.select(
-        F.col(id_right).alias("neighbor_id"), F.col(vec).alias("nv"),
-        _norm(vec).alias("nn"),
-    )
-    if broadcast_left:
-        l = F.broadcast(l)
-    return (
-        l.crossJoin(r)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot("qv", "nv") / (F.col("qn") * F.col("nn"))).alias("cosine"),
-        )
+def _side(df: DataFrame, id: str, id_as: str, v: str, *extra) -> DataFrame:
+    """(``id_as``, ``v``, norm, *extra) of every row with a vector; the
+    norm column is ``v[0] + "n"``.  Projected BELOW the join: one fold
+    per input vector, not per output pair (the join node blocks
+    CollapseProject from inlining it back into the pair expression)."""
+    return _vectors(df).select(
+        F.col(id).alias(id_as), F.col(_VEC).alias(v),
+        _norm(_VEC).alias(v[0] + "n"), *extra,
     )
 
 
-def topk_bruteforce(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    id_left: str = "vec_id",
-    id_right: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
-    """Exact top-k neighbors per query (rank by cosine desc, ties by
-    neighbor id asc for full determinism)."""
-    scored = cosine_pairs(queries, corpus, id_left, id_right, vec)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+def _cosine():
+    """The pair score of a joined ``qv``/``qn`` x ``nv``/``nn`` row."""
+    return (_dot("qv", "nv") / (F.col("qn") * F.col("nn"))).alias("cosine")
+
+
+def _top_k(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """Ranks 1..k of each query's neighbors by ``score`` desc, ties by
+    neighbor id asc (fully deterministic), score rounded to 6."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
+        .select("query_id", "neighbor_id", "rank", F.round(score, 6).alias(score))
     )
 
 
-def neardup_pairs(corpus: DataFrame, threshold: float, id_col: str = "vec_id",
-                  vec: str = "embedding", broadcast: bool = False) -> DataFrame:
+def _rerank(cands: DataFrame, k: int) -> DataFrame:
+    """Exact-cosine top-k over candidate rows that may repeat (a pair
+    can share several tables or probed cells): dedup BEFORE the fold so
+    each survivor pays it once."""
+    return _top_k(
+        cands.filter(F.col("query_id") != F.col("neighbor_id"))
+        .dropDuplicates(["query_id", "neighbor_id"])
+        .select("query_id", "neighbor_id", _cosine()),
+        k,
+    )
+
+
+def _above(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Scored (id_a, id_b) pairs at cosine >= threshold, rounded to 6."""
+    return (
+        pairs.select("id_a", "id_b", _cosine())
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+    )
+
+
+def topk_bruteforce(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
+    """Exact top-k neighbors per query; the (small) query side is
+    broadcast into a cross join with the corpus."""
+    q = F.broadcast(_side(queries, _ID, "query_id", "qv"))
+    scored = (
+        q.crossJoin(_side(corpus, _ID, "neighbor_id", "nv"))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", _cosine())
+    )
+    return _top_k(scored, k)
+
+
+def neardup_pairs(corpus: DataFrame, threshold: float,
+                  id_col: str = _ID) -> DataFrame:
     """All unordered pairs with cosine >= threshold (embedding near-dup
     channel of the dedup stack).  Baseline all-pairs form; the scale path
     with the identical output contract is ``neardup_pairs_ann``.
 
-    ``broadcast`` hints the build side explicitly.  Needed when
-    ``corpus`` has no catalog stats (e.g. a localCheckpoint'd kernel
-    output): without it Spark falls back to a P x P-task CartesianProduct
-    (24-partition input -> 576 tiny tasks); with it, one
-    BroadcastNestedLoopJoin pass over P stream partitions.  Only valid
-    while n_vectors x dim fits in executor memory — the ANN family is
-    the path beyond that."""
-    # per-vector norms below the self-join (see cosine_pairs)
-    a = corpus.select(
-        F.col(id_col).alias("id_a"), F.col(vec).alias("qv"),
-        _norm(vec).alias("na"),
-    )
-    b = corpus.select(
-        F.col(id_col).alias("id_b"), F.col(vec).alias("nv"),
-        _norm(vec).alias("nb"),
-    )
-    if broadcast:
-        b = F.broadcast(b)
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", _dot("qv", "nv") / (F.col("na") * F.col("nb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
+    The right side is always broadcast: ``corpus`` may carry no catalog
+    stats (e.g. a localCheckpoint'd kernel output), and without the hint
+    Spark falls back to a P x P-task CartesianProduct (24-partition input
+    -> 576 tiny tasks); with it, one BroadcastNestedLoopJoin pass over P
+    stream partitions.  Only valid while n_vectors x dim fits in
+    executor memory — the ANN family is the path beyond that."""
+    a = _side(corpus, id_col, "id_a", "qv")
+    b = F.broadcast(_side(corpus, id_col, "id_b", "nv"))
+    return _above(a.crossJoin(b).filter(F.col("id_a") < F.col("id_b")), threshold)
 
 
 def neardup_pairs_ann(
     corpus: DataFrame,
     threshold: float,
     dim: int,
-    n_planes: int = 12,
-    n_tables: int = 16,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec: str = "embedding",
+    id_col: str = _ID,
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """``neardup_pairs`` with LSH candidate generation instead of the
     quadratic self cross join: same output contract (unordered pairs,
     exact fold-order cosine >= threshold, round 6), but candidates come
     from an equi-join on random-hyperplane sign buckets across
-    ``n_tables`` independent tables, so the plan has NO
+    ``_ANN_TABLES`` independent tables, so the plan has NO
     CartesianProduct / BroadcastNestedLoopJoin node and the pair count
     scales with bucket collisions, not n^2.
 
     Recall: a pair at cosine ``s`` collides in one table with
-    probability ``(1 - acos(s)/pi)^n_planes``; union over tables.  For
-    the audio MFCC channel (threshold 0.985, dim 30) the defaults give
-    measured recall 1.0 at the 5000-clip fixture with every true pair
-    colliding in >= 3 of the 16 tables (and recall 1.0 across 6
-    alternative plane seeds) — see tests/test_similarity.py.  Raise
-    ``n_tables`` (or lower ``n_planes``) to push the knee further for
-    lower thresholds.
+    probability ``(1 - acos(s)/pi)^_ANN_PLANES``; union over tables.
+    The table count sits above the recall knee of the audio MFCC
+    channel (see ``_ANN_TABLES``); lower thresholds need more tables or
+    fewer planes.
 
     Scale notes (10^12 rows):
     - candidate pairs carry both embedding vectors through ONE shuffle
@@ -192,14 +247,11 @@ def neardup_pairs_ann(
     - the join key is (table_idx, bucket): AQE skew-join can split a
       residual hot bucket below the cap.
     """
-    buckets = hyperplane_buckets_udf(dim, n_planes, n_tables, seed)
-
+    buckets = hyperplane_buckets_udf(dim, _ANN_PLANES, _ANN_TABLES, _LSH_SEED)
     # norm folded once per input vector; posexplode replicates the value
-    base = corpus.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec).alias("v"),
-        _norm(vec).alias("vn"),
-        F.posexplode(buckets(F.col(vec))).alias("table_idx", "bucket"),
+    base = _side(
+        corpus, id_col, "vid", "v",
+        F.posexplode(buckets(F.col(_VEC))).alias("table_idx", "bucket"),
     )
     if bucket_cap is not None:
         sizes = base.groupBy("table_idx", "bucket").agg(
@@ -209,29 +261,21 @@ def neardup_pairs_ann(
             sizes.filter(F.col("bucket_n") <= bucket_cap).drop("bucket_n"),
             ["table_idx", "bucket"],
         )
-    a = base.select(
-        "table_idx", "bucket",
-        F.col("vid").alias("id_a"), F.col("v").alias("qv"),
-        F.col("vn").alias("na"),
-    )
-    b = base.select(
-        "table_idx", "bucket",
-        F.col("vid").alias("id_b"), F.col("v").alias("nv"),
-        F.col("vn").alias("nb"),
-    )
+
+    def side(id_as: str, v: str) -> DataFrame:
+        return base.select(
+            "table_idx", "bucket", F.col("vid").alias(id_as),
+            F.col("v").alias(v), F.col("vn").alias(v[0] + "n"),
+        )
+
     cands = (
-        a.join(b, ["table_idx", "bucket"])
+        side("id_a", "qv").join(side("id_b", "nv"), ["table_idx", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         # same pair can collide in several tables; dedup BEFORE the
         # cosine fold so each survivor pays it once
         .dropDuplicates(["id_a", "id_b"])
     )
-    return (
-        cands
-        .withColumn("cosine", _dot("qv", "nv") / (F.col("na") * F.col("nb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-    )
+    return _above(cands, threshold)
 
 
 def hyperplane_buckets_udf(dim: int, n_planes: int, n_tables: int, seed: int):
@@ -255,7 +299,7 @@ def hyperplane_buckets_udf(dim: int, n_planes: int, n_tables: int, seed: int):
 
     @F.pandas_udf(ArrayType(LongType()))
     def _buckets(vecs: pd.Series) -> pd.Series:
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
+        mat = _matrix(vecs)
         signs = (mat @ flat.T) > 0  # (n, T*P)
         bits = signs.reshape(len(mat), n_tables, n_planes) @ weights  # (n, T)
         return pd.Series(list(bits.astype(np.int64)))
@@ -263,18 +307,8 @@ def hyperplane_buckets_udf(dim: int, n_planes: int, n_tables: int, seed: int):
     return _buckets
 
 
-def ann_lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    dim: int,
-    n_planes: int = 12,
-    n_tables: int = 4,
-    seed: int = 7,
-    id_left: str = "vec_id",
-    id_right: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
+def ann_lsh_topk(queries: DataFrame, corpus: DataFrame, k: int, dim: int,
+                 n_planes: int = 12, n_tables: int = 4) -> DataFrame:
     """Approximate top-k: score only within matching hyperplane buckets
     across ``n_tables`` independent tables (union of candidates), then
     exact cosine + rank.  Recall grows with n_tables; scale path for the
@@ -284,52 +318,15 @@ def ann_lsh_topk(
     the per-table equi-join key is (table_idx, bucket) via posexplode —
     the same unified-bucket-table shape as the MinHash LSH stage.
     """
-    buckets = hyperplane_buckets_udf(dim, n_planes, n_tables, seed)
-
-    qb = queries.select(
-        F.col(id_left).alias("query_id"),
-        F.col(vec).alias("qv"),
-        _norm(vec).alias("qn"),
-        F.posexplode(buckets(F.col(vec))).alias("table_idx", "bucket"),
-    )
-    cb = corpus.select(
-        F.col(id_right).alias("neighbor_id"),
-        F.col(vec).alias("nv"),
-        _norm(vec).alias("nn"),
-        F.posexplode(buckets(F.col(vec))).alias("table_idx", "bucket"),
-    )
-    cands = (
-        qb.join(cb, ["table_idx", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    # norms folded once per (vector, table) below the join, not per pair
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        (_dot("qv", "nv") / (F.col("qn") * F.col("nn"))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    buckets = hyperplane_buckets_udf(dim, n_planes, n_tables, _LSH_SEED)
+    bucket = F.posexplode(buckets(F.col(_VEC))).alias("table_idx", "bucket")
+    qb = _side(queries, _ID, "query_id", "qv", bucket)
+    cb = _side(corpus, _ID, "neighbor_id", "nv", bucket)
+    return _rerank(qb.join(cb, ["table_idx", "bucket"]), k)
 
 
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    n_centroids: int = 16,
-    n_probe: int = 3,
-    kmeans_iters: int = 10,
-    seed: int = 11,
-    sample_limit: int = 10_000,
-    id_left: str = "vec_id",
-    id_right: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
+def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int,
+             n_centroids: int = 16, n_probe: int = 3) -> DataFrame:
     """IVF (inverted-file) approximate top-k.
 
     Coarse quantizer: tiny k-means trained driver-side on a bounded
@@ -341,67 +338,24 @@ def ivf_topk(
     """
     from pyspark.sql.types import ArrayType, IntegerType
 
-    sample = np.asarray(
-        [
-            np.asarray(r[0], dtype=np.float64)
-            for r in corpus.select(vec).limit(sample_limit).collect()
-        ]
-    )
-    rng = np.random.default_rng(seed)
-    centroids = sample[rng.choice(len(sample), size=min(n_centroids, len(sample)), replace=False)]
-    prev_assign = None
-    for _ in range(kmeans_iters):
-        d = ((sample[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        # assignment fixpoint => the update recomputes identical means and
-        # every later iteration is a no-op; breaking here is bit-identical
-        # to running out the iteration budget (test-asserted)
-        if prev_assign is not None and np.array_equal(assign, prev_assign):
-            break
-        prev_assign = assign
-        _kmeans_update(sample, assign, centroids)
+    centroids = _kmeans(_sample(corpus), n_centroids, _KMEANS_ITERS,
+                        np.random.default_rng(_IVF_SEED))
 
     @F.pandas_udf(IntegerType())
     def nearest_cell(vecs: pd.Series) -> pd.Series:
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        d2 = ((mat[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
+        d2 = _sq_dists(_matrix(vecs), centroids)
         return pd.Series(d2.argmin(axis=1).astype(np.int32))
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def probe_cells(vecs: pd.Series) -> pd.Series:
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
-        d2 = ((mat[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-        order = np.argsort(d2, axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(order))
+        d2 = _sq_dists(_matrix(vecs), centroids)
+        return pd.Series(list(np.argsort(d2, axis=1)[:, :n_probe].astype(np.int32)))
 
-    cb = corpus.select(
-        F.col(id_right).alias("neighbor_id"),
-        F.col(vec).alias("nv"),
-        _norm(vec).alias("nn"),
-        nearest_cell(F.col(vec)).alias("cell"),
-    )
-    qb = queries.select(
-        F.col(id_left).alias("query_id"),
-        F.col(vec).alias("qv"),
-        _norm(vec).alias("qn"),
-        F.explode(probe_cells(F.col(vec))).alias("cell"),
-    )
-    scored = (
-        qb.join(cb, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot("qv", "nv") / (F.col("qn") * F.col("nn"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cosine", 6).alias("cosine"))
-    )
+    cb = _side(corpus, _ID, "neighbor_id", "nv",
+               nearest_cell(F.col(_VEC)).alias("cell"))
+    qb = _side(queries, _ID, "query_id", "qv",
+               F.explode(probe_cells(F.col(_VEC))).alias("cell"))
+    return _rerank(qb.join(cb, "cell"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -419,23 +373,10 @@ def train_pq_codebooks(sample: "np.ndarray", m: int, n_cent: int,
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
     rng = np.random.default_rng(seed)
-    books = []
-    for s in range(m):
-        sub = sample[:, s * dsub : (s + 1) * dsub]
-        cent = sub[
-            rng.choice(len(sub), size=min(n_cent, len(sub)), replace=False)
-        ].copy()
-        prev_a = None
-        for _ in range(iters):
-            d = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            a = d.argmin(axis=1)
-            # fixpoint => identical means from here on (see ivf_topk)
-            if prev_a is not None and np.array_equal(a, prev_a):
-                break
-            prev_a = a
-            _kmeans_update(sub, a, cent)
-        books.append(cent)
-    return np.stack(books)
+    return np.stack([
+        _kmeans(sample[:, s * dsub : (s + 1) * dsub], n_cent, iters, rng)
+        for s in range(m)
+    ])
 
 
 def pq_encode_batch(mat: "np.ndarray", books: "np.ndarray") -> "np.ndarray":
@@ -444,9 +385,7 @@ def pq_encode_batch(mat: "np.ndarray", books: "np.ndarray") -> "np.ndarray":
     m, _, dsub = books.shape
     codes = np.empty((mat.shape[0], m), dtype=np.int32)
     for s in range(m):
-        sub = mat[:, s * dsub : (s + 1) * dsub]
-        d = ((sub[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-        codes[:, s] = d.argmin(axis=1)
+        codes[:, s] = _sq_dists(mat[:, s * dsub : (s + 1) * dsub], books[s]).argmin(axis=1)
     return codes
 
 
@@ -473,20 +412,8 @@ def pq_score_batch(codes: "np.ndarray", books: "np.ndarray",
         return dot / (np.sqrt(norm2)[:, None] * qnorm[None, :])
 
 
-def pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    m: int = 16,
-    nbits: int = 6,
-    kmeans_iters: int = 10,
-    seed: int = 13,
-    sample_limit: int = 10_000,
-    refine_factor: int = 4,
-    id_left: str = "vec_id",
-    id_right: str = "vec_id",
-    vec: str = "embedding",
-) -> DataFrame:
+def pq_topk(queries: DataFrame, corpus: DataFrame, k: int,
+            refine_factor: int = 4) -> DataFrame:
     """Product-quantization approximate top-k (asymmetric distance,
     optional exact refine — the FAISS IVFPQ+refine shape).
 
@@ -499,22 +426,22 @@ def pq_topk(
     vectors are re-read for exact cosine re-ranking (output column
     ``cosine``); r = 0 returns raw ADC scores (``cosine_pq``).
     ``queries`` is the small probe set (collected driver-side to build
-    LUTs; bounded by contract like IVF's sample).
+    LUTs; bounded by contract like IVF's sample).  Ids come out as
+    strings, and both ranks tie-break on them.
 
     Measured on the 500-vector sf0.001 embeddings (tiny 0.01-wide
-    cosine margins, the hard case): defaults give shortlist recall 0.96
+    cosine margins, the hard case): refine_factor=4 gives shortlist recall 0.96
     -> refined recall@5 0.96, vs 0.64 for raw ADC ranking.
     """
     from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-    sample = np.asarray(
-        [np.asarray(r[0], dtype=np.float64)
-         for r in corpus.select(vec).limit(sample_limit).collect()]
+    queries, corpus = (
+        df.withColumn(_ID, F.col(_ID).cast("string")) for df in (queries, corpus)
     )
-    books = train_pq_codebooks(sample, m, 1 << nbits, kmeans_iters, seed)
-    qrows = queries.select(id_left, vec).collect()
-    qids = [str(r[0]) for r in qrows]
-    qmat = np.asarray([np.asarray(r[1], dtype=np.float64) for r in qrows])
+    books = train_pq_codebooks(_sample(corpus), _PQ_M, 1 << _PQ_NBITS)
+    qrows = _vectors(queries).select(_ID, _VEC).collect()
+    qids = [r[0] for r in qrows]
+    qmat = _matrix(r[1] for r in qrows)
 
     out_schema = StructType([
         StructField("query_id", StringType()),
@@ -524,60 +451,26 @@ def pq_topk(
 
     def score(it):
         for pdf in it:
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec]]
-            )
-            codes = pq_encode_batch(mat, books)
+            codes = pq_encode_batch(_matrix(pdf[_VEC]), books)
             cos = pq_score_batch(codes, books, qmat)  # (n, nq)
-            n = mat.shape[0]
             yield pd.DataFrame({
-                "query_id": np.repeat(qids, n),
-                "neighbor_id": np.tile(pdf[id_right].astype(str).values,
-                                       len(qids)),
+                "query_id": np.repeat(qids, len(pdf)),
+                "neighbor_id": np.tile(pdf[_ID].values, len(qids)),
                 "cosine_pq": cos.T.reshape(-1),
             })
 
     scored = (
-        corpus.select(F.col(id_right).cast("string").alias(id_right), vec)
+        _vectors(corpus).select(_ID, _VEC)
         .mapInPandas(score, out_schema)
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_pq"), F.asc("neighbor_id")
-    )
-    ranked = scored.withColumn("rank", F.row_number().over(w))
+    ranked = _top_k(scored, (refine_factor or 1) * k, "cosine_pq")
     if not refine_factor:
-        return (
-            ranked.filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("cosine_pq", 6).alias("cosine_pq"))
-        )
-    shortlist = ranked.filter(F.col("rank") <= refine_factor * k).select(
-        "query_id", "neighbor_id"
-    )
-    qside = queries.select(
-        F.col(id_left).cast("string").alias("query_id"), F.col(vec).alias("qv"),
-        _norm(vec).alias("qn"),
-    )
-    nside = corpus.select(
-        F.col(id_right).cast("string").alias("neighbor_id"),
-        F.col(vec).alias("nv"),
-        _norm(vec).alias("nn"),
-    )
+        return ranked
     exact = (
-        shortlist.join(F.broadcast(qside), "query_id")
-        .join(nside, "neighbor_id")  # nq*r*k rows: a tiny probe-side join
-        .select(
-            "query_id", "neighbor_id",
-            (_dot("qv", "nv") / (F.col("qn") * F.col("nn"))).alias("cosine"),
-        )
+        ranked.select("query_id", "neighbor_id")
+        .join(F.broadcast(_side(queries, _ID, "query_id", "qv")), "query_id")
+        .join(_side(corpus, _ID, "neighbor_id", "nv"), "neighbor_id")  # nq*r*k rows
+        .select("query_id", "neighbor_id", _cosine())
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank",
-                F.round("cosine", 6).alias("cosine"))
-    )
+    return _top_k(exact, k)

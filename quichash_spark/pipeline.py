@@ -233,17 +233,9 @@ def _run_stages(
             )
             edges = edges.unionByName(prior_edges)
             bound += [prior.rows("signatures"), prior.rows("clusters")]
-        assign = connected_components(
+        return connected_components(
             edges, cfg.cc_max_iters,
-            max_edges=None if None in bound else sum(bound),
-        )
-        return (
-            signatures.select("clip_id")
-            .join(assign, "clip_id", "left")
-            .select(
-                "clip_id",
-                F.coalesce("cluster_id", "clip_id").alias("cluster_id"),
-            )
+            max_edges=None if None in bound else sum(bound), nodes=signatures,
         )
 
     clusters = _stage(store, "clusters", build_clusters, timings)

@@ -254,13 +254,16 @@ def test_verify_matrix(spark, tiny_clips, signatures):
 
 
 def test_connected_components_shapes(spark):
-    def cc(edges: list[tuple[str, str]]) -> dict[str, str]:
+    def cc(edges: list[tuple[str, str]], nodes=None) -> dict[str, str]:
         df = spark.createDataFrame(
             [Row(clip_a=a, clip_b=b) for a, b in edges] or [],
             schema="clip_a string, clip_b string",
         )
+        if nodes is not None:
+            nodes = spark.createDataFrame([(n,) for n in nodes], "clip_id string")
         return {
-            r["clip_id"]: r["cluster_id"] for r in connected_components(df).collect()
+            r["clip_id"]: r["cluster_id"]
+            for r in connected_components(df, nodes=nodes).collect()
         }
 
     # chain a-b-c-d collapses to min
@@ -274,6 +277,8 @@ def test_connected_components_shapes(spark):
     # star already
     got = cc([("m", "n"), ("m", "o")])
     assert got == {"m": "m", "n": "m", "o": "m"}
+    # a node in no edge is its own cluster
+    assert cc([("a", "b")], nodes=["a", "b", "z"]) == {"a": "a", "b": "a", "z": "z"}
 
 
 def test_connected_components_long_chain(spark):

@@ -77,8 +77,7 @@ def test_neardup_ann_matches_allpairs(spark, tiny_clips):
     contract that let the registered audio queries drop the cross join
     without touching their oracle fixtures."""
     from quichash_spark.functions.audio_embed import (
-        ANN_NEARDUP_PARAMS, EMBED_DIM, NEARDUP_THRESHOLD,
-        compute_audio_embeddings,
+        EMBED_DIM, NEARDUP_THRESHOLD, compute_audio_embeddings,
     )
     from quichash_spark.operators.similarity import (
         neardup_pairs, neardup_pairs_ann,
@@ -87,14 +86,12 @@ def test_neardup_ann_matches_allpairs(spark, tiny_clips):
     emb = compute_audio_embeddings(tiny_clips).localCheckpoint(eager=True)
     exact = {
         (r["id_a"], r["id_b"], r["cosine"])
-        for r in neardup_pairs(emb, NEARDUP_THRESHOLD, id_col="clip_id",
-                               broadcast=True).collect()
+        for r in neardup_pairs(emb, NEARDUP_THRESHOLD, id_col="clip_id").collect()
     }
     ann = {
         (r["id_a"], r["id_b"], r["cosine"])
         for r in neardup_pairs_ann(
-            emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id",
-            **ANN_NEARDUP_PARAMS,
+            emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id"
         ).collect()
     }
     assert exact, "fixture produced no near-dup pairs — test is vacuous"
@@ -106,24 +103,22 @@ def test_neardup_ann_bucket_cap_drops_only_capped(spark, tiny_clips):
     no-op — cap-before-expansion semantics, same as the MinHash LSH
     stage."""
     from quichash_spark.functions.audio_embed import (
-        ANN_NEARDUP_PARAMS, EMBED_DIM, NEARDUP_THRESHOLD,
-        compute_audio_embeddings,
+        EMBED_DIM, NEARDUP_THRESHOLD, compute_audio_embeddings,
     )
     from quichash_spark.operators.similarity import neardup_pairs_ann
 
     emb = compute_audio_embeddings(tiny_clips).localCheckpoint(eager=True)
     none = neardup_pairs_ann(
         emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id",
-        bucket_cap=1, **ANN_NEARDUP_PARAMS,
+        bucket_cap=1,
     )
     assert none.count() == 0
     uncapped = neardup_pairs_ann(
-        emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id",
-        **ANN_NEARDUP_PARAMS,
+        emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id"
     ).count()
     generous = neardup_pairs_ann(
         emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id",
-        bucket_cap=10_000, **ANN_NEARDUP_PARAMS,
+        bucket_cap=10_000,
     ).count()
     assert generous == uncapped > 0
 
@@ -151,3 +146,38 @@ def test_kmeans_update_bit_identical_to_masked_means():
         d2 = ((pts[:, None, :] - cent_new[None, :, :]) ** 2).sum(axis=2)
         _kmeans_update(pts, d2.argmin(axis=1), cent_new)
         assert np.array_equal(cent_ref, cent_new)
+
+
+#: ten vectors nulled out, three of them queries (vec_id < 10)
+NULLED = [1, 4, 7, 42, 99, 150, 233, 310, 404, 470]
+
+NULL_CASES = {
+    "topk": lambda S, q, t: S.topk_bruteforce(q, t, k=5),
+    "neardup": lambda S, q, t: S.neardup_pairs(t.filter(F.col("vec_id") < 200), 0.35),
+    "ann_lsh": lambda S, q, t: S.ann_lsh_topk(q, t, k=5, dim=64, n_planes=6, n_tables=16),
+    "neardup_ann": lambda S, q, t: S.neardup_pairs_ann(t, 0.0, dim=64),
+    "ivf": lambda S, q, t: S.ivf_topk(q, t, k=5, n_centroids=16, n_probe=4),
+    "pq": lambda S, q, t: S.pq_topk(q, t, k=5),
+}
+
+
+@pytest.mark.parametrize("op", list(NULL_CASES))
+def test_null_embedding_is_never_a_query_or_neighbor(emb, op):
+    """The embeddings table is outside input: a row with a null vector
+    must neither fail an operator nor show up in its output — every
+    operator returns exactly its rows on the table without those rows."""
+    from quichash_spark.operators import similarity as S
+
+    gone = F.col("vec_id").isin(NULLED)
+    nulled = emb.withColumn(
+        "embedding", F.when(gone, F.lit(None)).otherwise(F.col("embedding"))
+    )
+    clean = emb.filter(~gone)
+
+    def rows(t):
+        df = NULL_CASES[op](S, t.filter(F.col("vec_id") < 10), t)
+        return sorted(tuple(r) for r in df.collect())
+
+    want = rows(clean)
+    assert want, "no rows on the clean table — test is vacuous"
+    assert rows(nulled) == want

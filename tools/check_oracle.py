@@ -8,6 +8,7 @@ row count + schema + order-insensitive values.  Usage:
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import time
 
@@ -21,6 +22,11 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
+
+#: pipeline checkpoints the clips queries reuse while the manifest's
+#: config_hash matches, so they outlive changes to stage code.  Each sweep
+#: deletes them first; the queries of one sweep still share one run.
+CKPT_ROOT = "/tmp/quichash_ckpt"
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -47,6 +53,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from quichash_spark.session import get_spark
 
+    shutil.rmtree(CKPT_ROOT, ignore_errors=True)
     spark = get_spark("local[8]", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
