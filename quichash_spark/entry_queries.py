@@ -367,7 +367,7 @@ def _markers_sql(lang: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# verify / compare / moved / anti (reference J1-J3, U2-U3)
+# verify / compare / moved / anti (reference J1-J3, U2)
 # ---------------------------------------------------------------------------
 
 
@@ -1022,7 +1022,7 @@ def q_audio_pair_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = fingerprint_pairs(compute_fingerprints(clips)).select(
         "clip_a", "clip_b", "aligned_matches"
     )
-    emb = compute_audio_embeddings(clips).localCheckpoint(eager=True)
+    emb = compute_audio_embeddings(clips)
     ep = neardup_pairs_ann(
         emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id"
     ).select(
@@ -1139,10 +1139,8 @@ def q_audio_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quichash_spark.operators.similarity import neardup_pairs_ann
 
     clips = materialized_clips(spark, _clips_n(sf_dir))
-    # eager checkpoint: both self-join branches reuse the embedding
-    # batches instead of running the MFCC kernel twice (same pattern as
-    # fingerprint_pairs)
-    emb = compute_audio_embeddings(clips).localCheckpoint(eager=True)
+    # neardup_pairs_ann reads its input once, into its own checkpoint
+    emb = compute_audio_embeddings(clips)
     return neardup_pairs_ann(emb, NEARDUP_THRESHOLD, EMBED_DIM, id_col="clip_id")
 
 

@@ -37,16 +37,6 @@ import numpy as np
 
 FLAC_MAGIC = b"fLaC"
 
-#: fixed-predictor coefficients per order (spec §9.2.1)
-_FIXED_COEFS = {
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
-
-
 def _crc8(data: bytes) -> int:
     """CRC-8, poly x^8+x^2+x+1 (0x07), init 0 — frame header CRC."""
     crc = 0

@@ -23,7 +23,6 @@ import numpy as np
 from quichash_spark.config import MIX64, DedupConfig
 
 _U64 = np.uint64
-_MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 
 # ---------------------------------------------------------------------------

@@ -45,16 +45,6 @@ def encode_raw_rgb8(img: np.ndarray) -> bytes:
     return np.array([w, h], dtype="<i4").tobytes() + np.ascontiguousarray(img, np.uint8).tobytes()
 
 
-def _stub(codec: str) -> Callable[[bytes], np.ndarray]:
-    def _raise(_: bytes) -> np.ndarray:
-        raise NotImplementedError(
-            f"image codec {codec!r} needs an imaging library not present in "
-            "this environment; register a real kernel in IMAGE_CODECS"
-        )
-
-    return _raise
-
-
 from quichash_spark.functions.imaging import decode_bmp, decode_png  # noqa: E402
 from quichash_spark.functions.jpeg import decode_jpeg  # noqa: E402
 from quichash_spark.functions.vp8l import decode_webp  # noqa: E402

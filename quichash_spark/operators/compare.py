@@ -1,5 +1,5 @@
 """Verify / compare / moved-detection joins — the reference's three join
-operators re-expressed as Spark joins (SURVEY.md §2.3 J1-J3, §2.6 U1-U3).
+operators re-expressed as Spark joins (SURVEY.md §2.3 J1-J3, §2.6 U1-U2).
 
 The reference builds driver-memory HashMaps and walks them
 (/root/reference/src/verify.rs:183-261, src/compare.rs:417-553); here each
@@ -77,15 +77,6 @@ def new_files(fs: DataFrame, db: DataFrame, key: str = "path") -> DataFrame:
     """Reference U2: anti-join — files on disk not present in the DB
     (src/verify.rs:249-253)."""
     return fs.join(db.select(key), key, "left_anti")
-
-
-def retained_after_moves(side: DataFrame, moved: DataFrame, key: str,
-                         moved_key: str) -> DataFrame:
-    """Reference U3: subtract moved pairs from removed/added lists
-    (src/compare.rs:521-522)."""
-    return side.join(
-        moved.select(F.col(moved_key).alias(key)), key, "left_anti"
-    )
 
 
 def analyze_summary(entries: DataFrame, hash_col: str = "hash",

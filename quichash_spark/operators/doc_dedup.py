@@ -260,7 +260,7 @@ def simhash_pairs(
     )
     return (
         raw.filter(
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
             <= cfg.simhash_hamming_r
         )
         .select(

@@ -6,15 +6,18 @@ anchor-time offset — the alignment test that separates shared audio
 content from random hash collisions (a true match concentrates its
 collisions on a single delta; noise spreads them).
 
-Scale shape (the same story as the LSH band join, operators/lsh.py):
+Scale shape: the pair expansion IS the LSH band join — each landmark
+is a bucket row ``(clip_id, band_idx 0, band_key fp_hash, t_anchor)``
+fed to ``lsh._capped_self_join``, the one capped-bucket self-join:
 
 - **cap before pair expansion**: a hash occurring in more than
   ``max_bucket`` landmarks is non-discriminative (spectrally common
   pattern) and would expand quadratically — it is dropped BEFORE the
-  self-join, and the drop count is observable via ``bucket_stats``.
-- one hash-partitioned exchange for the join (AQE handles residual
-  skew), one aggregation for the alignment histogram, both map-side
-  combinable.
+  self-join, and the drop count is observable via ``bucket_stats``;
+  singleton hashes (about half the landmarks) are dropped by the same
+  sizes pass, since they can never pair.
+- one hash-partitioned self-join (AQE handles residual skew), one
+  aggregation for the alignment histogram, map-side combinable.
 - no collect(), no cartesian product: worst-case pair expansion is
   bounded by ``max_bucket**2 / 2`` per hash.
 """
@@ -25,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from quichash_spark.functions.fingerprint import FP_CONFIG, FingerprintConfig
+from quichash_spark.operators.lsh import _capped_self_join
 
 
 def bucket_stats(fps: DataFrame, cfg: FingerprintConfig = FP_CONFIG) -> DataFrame:
@@ -52,27 +56,14 @@ def fingerprint_pairs(
     it, instead of running the STFT kernel three times.
     """
     fps = fps.localCheckpoint(eager=True)
-    # n_occ > 1 additionally drops singleton hashes (roughly half the
-    # landmark table) before the self-join — they can never form a pair,
-    # so the join shuffles half the bytes for identical output (guide
-    # §2.3); same counts pass as the cap filter
-    counts = fps.groupBy("fp_hash").agg(F.count("*").alias("n_occ"))
-    capped = fps.join(
-        counts.filter(
-            (F.col("n_occ") > 1) & (F.col("n_occ") <= cfg.max_bucket)
-        ),
-        "fp_hash",
-    ).drop("n_occ")
-    a = capped.alias("a")
-    b = capped.alias("b")
-    collisions = (
-        a.join(b, "fp_hash")
-        .filter(F.col("a.clip_id") < F.col("b.clip_id"))
-        .select(
-            F.col("a.clip_id").alias("clip_a"),
-            F.col("b.clip_id").alias("clip_b"),
-            (F.col("a.t_anchor") - F.col("b.t_anchor")).alias("delta_frames"),
-        )
+    buckets = fps.select(
+        "clip_id", F.lit(0).alias("band_idx"), F.col("fp_hash").alias("band_key"),
+        "t_anchor",
+    )
+    _, raw, _ = _capped_self_join(buckets, cfg.max_bucket)
+    collisions = raw.select(
+        "clip_a", "clip_b",
+        (F.col("t_anchor_a") - F.col("t_anchor_b")).alias("delta_frames"),
     )
     per_delta = collisions.groupBy("clip_a", "clip_b", "delta_frames").agg(
         F.count("*").alias("n_at_delta")

@@ -10,19 +10,24 @@ Scale design (10^12 rows):
 - Band keys are computed once, vectorized, in the signature kernels
   (``hashing.band_hashes_batch``, clips and documents alike); this
   module only explodes them — no hashing and no Python in this hot path.
-- Every caller — :func:`unified_candidates` for the pipeline, the
-  documents suite's text bands and SimHash chunks, the containment
-  scan's kept rows — goes through ONE capped-bucket self-join,
-  :func:`_capped_self_join`: a self-equi-join on ``(band_idx,
-  band_key)`` that AQE can skew-split.  An incremental run tags its
-  signatures with a boolean ``is_new`` column and the self-join keeps
-  the new rows on one side; without the column every row is new.
+- Every bucket-join operator — :func:`unified_candidates` for the
+  pipeline, the documents suite's text bands and SimHash chunks, the
+  containment scan's kept rows, audio landmark matching
+  (``fingerprint_match.fingerprint_pairs``) and the hyperplane ANN
+  near-dup join (``similarity.neardup_pairs_ann``) — goes through ONE
+  capped-bucket self-join, :func:`_capped_self_join`: a self-equi-join
+  on ``(band_idx, band_key)`` that AQE can skew-split.  An incremental
+  run tags its signatures with a boolean ``is_new`` column and the
+  self-join keeps the new rows on one side; without the column every
+  row is new.  Any other column rides along as a payload, oriented so
+  ``<col>_a`` belongs to ``clip_a``.
 - Hot bands (e.g. a constant transcript owned by millions of clips) are
-  capped: bucket sizes are counted first and buckets larger than
-  ``cfg.band_bucket_cap`` are EXCLUDED from pair generation, with the drop
-  logged to the metrics table (north_rule requires explicit skew handling
-  + lineage).  Exact duplicates inside a dropped bucket are still found by
-  the content-hash stage, which has no quadratic blow-up.
+  capped: bucket sizes are counted first and buckets larger than the
+  cap (``cfg.band_bucket_cap`` in the pipeline) are EXCLUDED from pair
+  generation, with the drop logged to the metrics table (north_rule
+  requires explicit skew handling + lineage).  Exact duplicates inside a
+  dropped bucket are still found by the content-hash stage, which has no
+  quadratic blow-up.
 - There is no module default cache: the bucket summary is persisted
   only into a :class:`CacheScope` the caller passes and releases.
 """
@@ -37,12 +42,12 @@ from quichash_spark.operators.cache_scope import CacheScope
 
 
 def _bucket_table(signatures: DataFrame, keys: Column) -> DataFrame:
-    """(clip_id, is_new, simhash, band_idx, band_key) — one row per
-    element of the array column ``keys``.  ``is_new`` is the input's
-    column, else the literal True (every row new)."""
-    is_new = F.col("is_new") if "is_new" in signatures.columns else F.lit(True)
+    """(clip_id, [is_new], simhash, band_idx, band_key) — one row per
+    element of the array column ``keys``; ``is_new`` only when the input
+    carries it."""
+    is_new = ["is_new"] if "is_new" in signatures.columns else []
     return signatures.select(
-        "clip_id", is_new.alias("is_new"), "simhash",
+        "clip_id", *is_new, "simhash",
         F.posexplode(keys).alias("band_idx", "band_key"),
     )
 
@@ -97,26 +102,41 @@ def unified_bucket_table(
 
 
 def _capped_self_join(
-    buckets: DataFrame, cap: int, scope: CacheScope | None = None
+    buckets: DataFrame, cap: int | None, scope: CacheScope | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The capped-bucket self-join every LSH caller shares.
+    """The capped-bucket self-join every bucket-join operator shares.
+
+    Input: ``(clip_id, band_idx, band_key, [is_new], *payload)``, one
+    row per (member, bucket).  Without ``is_new`` every row is new.
+    ``cap=None`` sets no upper bound on the bucket size; buckets of one
+    row are dropped either way.
 
     Returns ``(kept, raw, dropped)``: ``kept`` is the bucket table
     restricted to buckets of 2..``cap`` rows holding a new row; ``raw``
-    is ``(band_idx, clip_a, clip_b, sh_a, sh_b)``, one row per pair per
-    shared bucket (``clip_a < clip_b``, at least one side new); and
+    is ``(band_idx, clip_a, clip_b, <p>_a, <p>_b per payload column
+    p)``, one row per pair per shared bucket (``clip_a < clip_b``, at
+    least one side new, ``<p>_a`` always ``clip_a``'s value); and
     ``dropped`` is ``(band_idx, band_key, bucket_n)`` for the buckets over
     the cap.
 
     Plan: a sizes aggregate (which also records whether a new row sits
-    in each bucket) kept as the >1-member summary, a kept-keys join, then
-    ONE band self-join with the new rows on one side.  The other side
-    keeps rows that are old or have a larger ``clip_id``, so each pair
-    expands exactly once per shared band, and old-x-old pairs never do;
-    with every row new the condition reduces to ``a.clip_id <
-    b.clip_id``.  The cap filter runs before the self-join, so a hot
-    bucket never fans out.  The summary is persisted only into ``scope``.
+    in each bucket) kept as the >1-member summary, a left-semi kept-keys
+    join (the keys come from a ``groupBy``, so they are unique: the semi
+    join keeps an inner join's rows, but its size estimate is the bucket
+    side's, not a product of both sides, so the self-join above it can
+    still broadcast), then ONE band self-join with the new rows on one
+    side.
+    The other side keeps rows that are old or have a larger ``clip_id``,
+    so each pair expands exactly once per shared band, and old-x-old
+    pairs never do; with every row new the condition reduces to
+    ``a.clip_id < b.clip_id``.  The cap filter runs before the
+    self-join, so a hot bucket never fans out.  The summary is persisted
+    only into ``scope``.
     """
+    if "is_new" not in buckets.columns:
+        buckets = buckets.withColumn("is_new", F.lit(True))
+    key = ("clip_id", "band_idx", "band_key", "is_new")
+    payload = [c for c in buckets.columns if c not in key]
     summary = (
         buckets.groupBy("band_idx", "band_key")
         .agg(F.count("*").alias("bucket_n"), F.max("is_new").alias("has_new"))
@@ -124,15 +144,20 @@ def _capped_self_join(
     )
     if scope is not None:
         summary = scope.persist(summary)
+    fits = F.lit(True) if cap is None else F.col("bucket_n") <= cap
     # a bucket without a new row cannot emit a pair touching one
-    kept_keys = summary.filter(
-        (F.col("bucket_n") <= cap) & F.col("has_new")
-    ).select("band_idx", "band_key")
-    dropped = summary.filter(F.col("bucket_n") > cap).select(
-        "band_idx", "band_key", "bucket_n"
+    kept_keys = summary.filter(fits & F.col("has_new")).select(
+        "band_idx", "band_key"
     )
-    kept = buckets.join(kept_keys, ["band_idx", "band_key"])
+    dropped = summary.filter(~fits).select("band_idx", "band_key", "bucket_n")
+    kept = buckets.join(kept_keys, ["band_idx", "band_key"], "left_semi")
     a, b = kept.alias("a"), kept.alias("b")
+    # the new row sits on side a, so a pair may arrive either way round
+    swap = F.col("b.clip_id") < F.col("a.clip_id")
+
+    def oriented(p: str, side: str, other: str) -> Column:
+        return F.when(swap, F.col(f"{other}.{p}")).otherwise(F.col(f"{side}.{p}"))
+
     # in a flagged run the is_new filter prunes the prior branch of the
     # signature union, so the left side explodes only the increment
     raw = a.filter(F.col("a.is_new")).join(
@@ -145,9 +170,8 @@ def _capped_self_join(
         F.col("a.band_idx").alias("band_idx"),
         F.least("a.clip_id", "b.clip_id").alias("clip_a"),
         F.greatest("a.clip_id", "b.clip_id").alias("clip_b"),
-        # the Hamming filter is symmetric: no need to order the simhashes
-        F.col("a.simhash").alias("sh_a"),
-        F.col("b.simhash").alias("sh_b"),
+        *(oriented(p, "a", "b").alias(f"{p}_a") for p in payload),
+        *(oriented(p, "b", "a").alias(f"{p}_b") for p in payload),
     )
     return kept, raw, dropped
 
@@ -202,7 +226,7 @@ def _pairs_from_raw(
         .filter(
             (F.col("band_idx") < n_channels)
             | (
-                F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+                F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
                 <= cfg.simhash_hamming_r
             )
         )

@@ -109,14 +109,14 @@ def segment_containment_pairs(
         "n_windows",
         F.posexplode("seg_hashes").alias("win_idx", "h"),
     )
-    # ONE exchange for size-count + cap-filter + member lists (the
-    # operators/lsh.py "window" shape): the window count partitions by
-    # (win_idx, h), size-1 groups (the overwhelming majority) and hot
-    # keys above the cap are dropped BEFORE any array is built, and the
-    # member-list groupBy reuses the window's partitioning.  Replaces
-    # the previous hot-key aggregation + anti-join + self-join cascade
-    # (3 exchanges + 2 sort-merge joins over the same exploded table —
-    # guide §2.4: two operations keyed the same way share one exchange).
+    # ONE exchange for size-count + cap-filter + member lists: the
+    # window count partitions by (win_idx, h), size-1 groups (the
+    # overwhelming majority) and hot keys above the cap are dropped
+    # BEFORE any array is built, and the member-list groupBy reuses the
+    # window's partitioning.  This is the one bucket join NOT on
+    # lsh._capped_self_join on purpose: that helper reads the exploded
+    # table three times (sizes aggregate, kept-keys join, self-join),
+    # this shape partitions it once and expands pairs inside each row.
     w = Window.partitionBy("win_idx", "h")
     members = (
         seg.withColumn("gn", F.count("*").over(w))

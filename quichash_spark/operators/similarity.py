@@ -7,7 +7,8 @@ output cosine is rounded to 6 places):
   corpus — a cross join with the query side broadcast; the ground truth;
 - ``neardup_pairs``: all unordered pairs with cosine >= threshold (a
   self cross join, right side broadcast), and ``neardup_pairs_ann``, the
-  same rows from random-hyperplane LSH candidates (a bucket equi-join);
+  same rows from random-hyperplane LSH candidates (the capped-bucket
+  self-join of ``operators/lsh.py``);
 - ``ann_lsh_topk`` / ``ivf_topk`` / ``pq_topk``: approximate top-k from
   hyperplane buckets, from probed k-means cells, and from product
   quantization codes with an exact re-rank.
@@ -38,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from quichash_spark.operators.lsh import _capped_self_join
 
 _ID = "vec_id"
 _VEC = "embedding"
@@ -233,49 +236,41 @@ def neardup_pairs_ann(
     fewer planes.
 
     Scale notes (10^12 rows):
-    - candidate pairs carry both embedding vectors through ONE shuffle
-      (the bucket equi-join) plus a dedup exchange; at dim 30 that is
+    - the bucket UDF and the norm fold run once per input vector: their
+      output (id, vector, norm, one key per table) is materialized once
+      (eager localCheckpoint) BEFORE the posexplode, so neither the
+      Python kernel nor the stored vectors are repeated per table or
+      per join side.
+    - candidates come from ``lsh._capped_self_join``, the one
+      capped-bucket self-join of the MinHash LSH stage, with band
+      ``(table_idx, bucket)``: singleton buckets never reach the join,
+      and ``bucket_cap`` excludes buckets with more members from pair
+      generation (a degenerate embedding owned by millions of rows
+      would otherwise expand quadratically; ``None`` sets no bound).
+      Capped-out true pairs are still reachable via the other tables.
+      AQE skew-join can split a residual hot bucket below the cap.
+    - candidate pairs carry both embedding vectors through the
+      self-join's shuffle plus a dedup exchange; at dim 30 that is
       ~0.5 KB/pair.  For very high-dim embeddings generate slim
       (id_a, id_b) pairs instead and re-join vectors (two extra
       shuffles, less I/O per pair).
-    - ``bucket_cap`` applies the same cap-BEFORE-pair-expansion
-      discipline as the MinHash LSH stage (operators/lsh.py): buckets
-      with more than ``bucket_cap`` members are excluded from pair
-      generation (a degenerate embedding owned by millions of rows
-      would otherwise expand quadratically).  Capped-out true pairs are
-      still reachable via the other tables.
-    - the join key is (table_idx, bucket): AQE skew-join can split a
-      residual hot bucket below the cap.
     """
     buckets = hyperplane_buckets_udf(dim, _ANN_PLANES, _ANN_TABLES, _LSH_SEED)
-    # norm folded once per input vector; posexplode replicates the value
     base = _side(
-        corpus, id_col, "vid", "v",
-        F.posexplode(buckets(F.col(_VEC))).alias("table_idx", "bucket"),
+        corpus, id_col, "clip_id", "v", buckets(F.col(_VEC)).alias("keys")
+    ).localCheckpoint(eager=True)
+    table = base.select(
+        "clip_id", F.posexplode("keys").alias("band_idx", "band_key"), "v", "vn"
     )
-    if bucket_cap is not None:
-        sizes = base.groupBy("table_idx", "bucket").agg(
-            F.count("*").alias("bucket_n")
-        )
-        base = base.join(
-            sizes.filter(F.col("bucket_n") <= bucket_cap).drop("bucket_n"),
-            ["table_idx", "bucket"],
-        )
-
-    def side(id_as: str, v: str) -> DataFrame:
-        return base.select(
-            "table_idx", "bucket", F.col("vid").alias(id_as),
-            F.col("v").alias(v), F.col("vn").alias(v[0] + "n"),
-        )
-
-    cands = (
-        side("id_a", "qv").join(side("id_b", "nv"), ["table_idx", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        # same pair can collide in several tables; dedup BEFORE the
-        # cosine fold so each survivor pays it once
-        .dropDuplicates(["id_a", "id_b"])
+    _, raw, _ = _capped_self_join(table, bucket_cap)
+    cands = raw.select(
+        F.col("clip_a").alias("id_a"), F.col("clip_b").alias("id_b"),
+        F.col("v_a").alias("qv"), F.col("vn_a").alias("qn"),
+        F.col("v_b").alias("nv"), F.col("vn_b").alias("nn"),
     )
-    return _above(cands, threshold)
+    # same pair can collide in several tables; dedup BEFORE the cosine
+    # fold so each survivor pays it once
+    return _above(cands.dropDuplicates(["id_a", "id_b"]), threshold)
 
 
 def hyperplane_buckets_udf(dim: int, n_planes: int, n_tables: int, seed: int):
@@ -442,6 +437,8 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, k: int,
     qrows = _vectors(queries).select(_ID, _VEC).collect()
     qids = [r[0] for r in qrows]
     qmat = _matrix(r[1] for r in qrows)
+    if not qids:  # no probe vector: the same plan over no corpus rows
+        corpus = corpus.limit(0)
 
     out_schema = StructType([
         StructField("query_id", StringType()),

@@ -96,7 +96,7 @@ def test_simhash_chunk_pairs_equal_bruteforce(signatures):
         simhash_chunk_table(signatures, CLIPS_CONFIG), CLIPS_CONFIG.band_bucket_cap
     )
     pairs = raw.filter(
-        F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
         <= CLIPS_CONFIG.simhash_hamming_r
     )
     got = {(r["clip_a"], r["clip_b"]) for r in pairs.collect()}

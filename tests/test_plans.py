@@ -111,6 +111,19 @@ def test_ann_plan_build_submits_no_probe_job(spark):
     assert df.count() > 0  # the plan still runs
 
 
+def test_ann_neardup_runs_bucket_udf_at_most_once(spark):
+    """The hyperplane-bucket UDF of neardup_pairs_ann is evaluated once
+    per vector, not once per side of the bucket self-join."""
+    from quichash_spark.operators.similarity import neardup_pairs_ann
+    from quichash_spark.plans.inspect import plan_nodes
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    df = neardup_pairs_ann(emb, 0.0, dim=64)
+    names = [n.getClass().getSimpleName() for n in plan_nodes(df)]
+    assert names.count("ArrowEvalPythonExec") <= 1, names
+    assert df.count() > 0
+
+
 def test_audio_embed_queries_have_no_quadratic_join(spark):
     """VERDICT r4 #1: the registered audio-embedding queries must build
     candidates via the hyperplane-bucket equi-join — no CartesianProduct

@@ -181,3 +181,14 @@ def test_null_embedding_is_never_a_query_or_neighbor(emb, op):
     want = rows(clean)
     assert want, "no rows on the clean table — test is vacuous"
     assert rows(nulled) == want
+
+    # every query vector null: the same rows as with no query row at all,
+    # which for a query operator is none
+    queries = F.col("vec_id") < 10
+    no_query_vec = emb.withColumn(
+        "embedding", F.when(queries, F.lit(None)).otherwise(F.col("embedding"))
+    )
+    got = rows(no_query_vec)
+    assert got == rows(emb.filter(~queries))
+    if op not in ("neardup", "neardup_ann"):
+        assert got == []

@@ -90,3 +90,39 @@ def test_unified_candidates_is_new_equals_postfilter(spark, tiny_clips):
             assert got == want and want, cfg.band_bucket_cap
             assert dropped_set(got_dropped) == dropped_set(full_dropped)
     assert dropped_set(got_dropped)
+
+
+def test_capped_self_join_orients_payload_and_cap_none_keeps_all(spark):
+    """``<p>_a`` is clip_a's payload even when the new row sits on the
+    larger id (the new side joins first); ``cap=None`` keeps a bucket a
+    finite cap drops; a bucket with no new row never expands."""
+    from quichash_spark.operators.lsh import _capped_self_join
+
+    rows = [
+        # bucket (0, 7): an old row with the smallest id, two new rows
+        ("c1", 0, 7, False, 10),
+        ("c2", 0, 7, True, 20),
+        ("c3", 0, 7, True, 30),
+        # bucket (1, 9): old rows only
+        ("c1", 1, 9, False, 10),
+        ("c4", 1, 9, False, 40),
+        # a singleton bucket
+        ("c2", 1, 5, True, 20),
+    ]
+    buckets = spark.createDataFrame(
+        rows, "clip_id string, band_idx int, band_key long, is_new boolean, p long"
+    )
+    payload = {r[0]: r[4] for r in rows}
+
+    _, raw, dropped = _capped_self_join(buckets, 2)
+    assert raw.count() == 0
+    assert {tuple(r) for r in dropped.collect()} == {(0, 7, 3)}
+
+    _, raw, dropped = _capped_self_join(buckets, None)
+    got = raw.collect()
+    assert sorted((r["clip_a"], r["clip_b"]) for r in got) == [
+        ("c1", "c2"), ("c1", "c3"), ("c2", "c3"),
+    ]
+    for r in got:
+        assert (r["p_a"], r["p_b"]) == (payload[r["clip_a"]], payload[r["clip_b"]])
+    assert dropped.count() == 0
