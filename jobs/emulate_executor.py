@@ -65,8 +65,7 @@ def _run_kernel_mode(args) -> None:
         done = 0
         for rb in pq.ParquetFile(src).iter_batches(batch_size=128, columns=cols):
             out = signature_record_batch(
-                rb.select(cols), CLIPS_CONFIG, a_params, b_params,
-                include_minhash=False,
+                rb.select(cols), CLIPS_CONFIG, a_params, b_params
             )
             if writer is None:
                 writer = pq.ParquetWriter(
@@ -162,15 +161,14 @@ def main() -> None:
     # Worker-private dirs: no cross-process race on a shared cache.
     warm_src = os.path.join(args.sync_dir, f"warmsrc_{args.idx}")
     clips_dataframe(spark, 2000, partitions=2).write.mode("overwrite").parquet(warm_src)
-    warm = compute_signatures(spark.read.parquet(warm_src),
-                              CLIPS_CONFIG, include_minhash=False)
+    warm = compute_signatures(spark.read.parquet(warm_src), CLIPS_CONFIG)
     warm.write.mode("overwrite").parquet(os.path.join(args.sync_dir, f"warm_{args.idx}"))
 
     if args.mode == "sign":
         _barrier(args.sync_dir, args.idx)
         t0 = time.monotonic()
         clips = spark.read.parquet(*inputs)
-        sigs = compute_signatures(clips, CLIPS_CONFIG, include_minhash=False)
+        sigs = compute_signatures(clips, CLIPS_CONFIG)
         sigs.write.mode("overwrite").parquet(args.output)
         wall = time.monotonic() - t0
     else:

@@ -5,7 +5,7 @@ Cluster usage (multi-executor):
     zip -r quichash_spark.zip quichash_spark
     spark-submit --py-files quichash_spark.zip jobs/run_pipeline.py \
         --input <iceberg-table-or-parquet-path> \
-        --checkpoint-dir <path-or-catalog-namespace> \
+        --checkpoint-dir <path> \
         [--iceberg] [--synthetic-n 5000]
 
 Local smoke:
@@ -29,7 +29,8 @@ def main() -> None:
     ap.add_argument("--input", help="parquet path or (with --iceberg) table name of the clips table")
     ap.add_argument("--checkpoint-dir", required=True)
     ap.add_argument("--iceberg", action="store_true",
-                    help="read/write Iceberg tables (requires iceberg runtime on the cluster)")
+                    help="read --input as an Iceberg table with spark.read.table "
+                         "(requires iceberg runtime on the cluster); checkpoints stay parquet")
     ap.add_argument("--synthetic-n", type=int, default=0,
                     help="generate the deterministic fixture corpus of this size instead of --input")
     ap.add_argument("--master", default=None, help="override master (default: from spark-submit)")

@@ -802,9 +802,9 @@ def q_clips_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     clips = materialized_clips(spark, _clips_n(sf_dir))
     # scalar columns only: the driver's canonicalizer sorts every column,
-    # so array columns (minhash/band_keys) must not reach it
+    # so the band-key arrays must not reach it
     return compute_signatures(clips, CLIPS_CONFIG).drop(
-        "minhash_text", "minhash_pcm", "band_keys_text", "band_keys_pcm"
+        "band_keys_text", "band_keys_pcm"
     )
 
 

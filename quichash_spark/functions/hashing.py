@@ -77,6 +77,12 @@ def hash64_str(s: str) -> int:
 # tokenization / shingling
 # ---------------------------------------------------------------------------
 
+def canon(t: str | None) -> str:
+    """The canonical text every kernel hashes: whitespace runs collapsed
+    to one space, no leading or trailing space; a null is empty."""
+    return " ".join(t.split()) if isinstance(t, str) else ""
+
+
 def tokens_of(transcript: str) -> list[str]:
     """Whitespace tokenization (the frozen tokenizer)."""
     return transcript.split()
@@ -216,6 +222,30 @@ def simhash64_i64(transcript: str) -> int:
     return _to_i64(u)
 
 
+def text_signatures(
+    texts: list[str | None], cfg: DedupConfig, a: np.ndarray, b: np.ndarray
+) -> tuple[list[str], np.ndarray, np.ndarray]:
+    """One batch of texts -> (canonical texts, MinHash band keys
+    ``(n, cfg.bands)`` int64, SimHash int64[n]).
+
+    THE text half of the signature kernel: the clips kernel
+    (``udfs.signature_record_batch``) and the documents kernel
+    (``doc_dedup.minhash_signatures``) both call it.  ``(a, b)`` are
+    :func:`minhash_params` of ``cfg``.  One MinHash multiply-reduceat and
+    one band-key fold for the whole batch; per row identical to the
+    scalar kernels (test-asserted).
+    """
+    canons = [canon(t) for t in texts]
+    sigs = minhash_signature_batch(
+        [shingle_hashes(c, cfg.k_shingle) for c in canons], a, b
+    )
+    keys = band_hashes_batch(sigs, cfg.bands, cfg.rows)
+    sim = np.fromiter(
+        (simhash64_i64(c) for c in canons), dtype=np.int64, count=len(canons)
+    )
+    return canons, keys, sim
+
+
 def hamming64(a: int, b: int) -> int:
     """Hamming distance between two signed-int64 bit patterns."""
     return int(bin((a & 0xFFFFFFFFFFFFFFFF) ^ (b & 0xFFFFFFFFFFFFFFFF)).count("1"))
@@ -239,6 +269,7 @@ __all__ = [
     "content_hash",
     "hash64",
     "hash64_str",
+    "canon",
     "tokens_of",
     "shingle_hashes",
     "minhash_params",
@@ -248,6 +279,7 @@ __all__ = [
     "band_hashes_batch",
     "minhash_jaccard",
     "simhash64_i64",
+    "text_signatures",
     "hamming64",
     "simhash_chunks_i64",
     "EMPTY_SLOT",

@@ -1,4 +1,4 @@
-"""Arrow-vectorized Spark kernels (pandas UDF / mapInPandas wrappers).
+"""Arrow-vectorized Spark kernels (mapInArrow wrappers).
 
 Per BASELINE.json input_hint: NO per-row Python UDFs — every Python kernel
 here receives Arrow batches.  The heavy math is numpy inside
@@ -14,13 +14,10 @@ factory — decode never materializes more than one bounded batch per task.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -34,13 +31,14 @@ from pyspark.sql.types import (
 from quichash_spark.config import DedupConfig
 from quichash_spark.functions import audio, hashing
 
+#: the one signature format: band keys and scalars, no raw 128-perm
+#: MinHash vectors (nothing downstream reads them, and they would cost
+#: ~2 KB/row of incompressible longs in every exchange and checkpoint)
 SIGNATURE_SCHEMA = StructType(
     [
         StructField("clip_id", StringType()),
         StructField("content_hash", StringType()),
         StructField("pcm_hash", StringType()),
-        StructField("minhash_text", ArrayType(LongType())),
-        StructField("minhash_pcm", ArrayType(LongType())),
         StructField("band_keys_text", ArrayType(LongType())),
         StructField("band_keys_pcm", ArrayType(LongType())),
         StructField("simhash", LongType()),
@@ -52,17 +50,17 @@ SIGNATURE_SCHEMA = StructType(
 )
 
 
-#: pipeline-internal projection: the dedup stages read band keys and
-#: scalars only, so the checkpoint need not carry the raw 128-perm
-#: MinHash vectors (~2 KB/row of incompressible longs — ~400 MB of
-#: write+read+exchange per 200k clips)
-SLIM_SIGNATURE_SCHEMA = StructType(
-    [f for f in SIGNATURE_SCHEMA.fields if not f.name.startswith("minhash_")]
-)
+def list_arr(mat: np.ndarray) -> pa.ListArray:
+    """(n, w) uint64/int64 -> list<int64> with zero-copy values."""
+    n = mat.shape[0]
+    w = mat.shape[1] if mat.ndim == 2 else 0
+    flat = pa.array(np.ascontiguousarray(mat).reshape(-1).view(np.int64))
+    offsets = pa.array(np.arange(0, (n + 1) * w, w, dtype=np.int32))
+    return pa.ListArray.from_arrays(offsets, flat)
 
 
 def signature_record_batch(
-    rb, cfg: DedupConfig, a_params, b_params, include_minhash: bool = True
+    rb, cfg: DedupConfig, a_params, b_params, include_minhash: bool = False
 ):
     """One input RecordBatch (clip_id, bytes, codec, transcript) -> one
     signature RecordBatch.  THE signature kernel — shared verbatim by the
@@ -76,44 +74,32 @@ def signature_record_batch(
     the pandas conversion that materializes every payload as a Python
     bytes object on the way in and re-encodes arrays on the way out —
     measured ~27% of the exchange cost at 4 workers.
-    """
-    import pyarrow as pa
 
-    schema = SIGNATURE_SCHEMA if include_minhash else SLIM_SIGNATURE_SCHEMA
+    ``include_minhash`` is ignored: ``perfbench/tracing.py`` still passes
+    it, and the next benchmark change drops it there and then here.
+    """
     n = rb.num_rows
-    canons = [
-        " ".join(t.split()) if isinstance(t, str) else ""
-        for t in rb.column(3).to_pylist()
-    ]
+    # the text half (canonicalize, shingles, MinHash, band keys, SimHash)
+    # is the documents kernel's too — one implementation in ``hashing``
+    canons, bk_text, simhash = hashing.text_signatures(
+        rb.column(3).to_pylist(), cfg, a_params, b_params
+    )
     pcms = audio.decode_column(rb.column(1), rb.column(2).to_pylist())
     # batched execution, output-identical to the row-at-a-time
     # kernels (tests assert equality): decode per row (variable
-    # length), per-clip FFT, ONE multiply-reduceat per MinHash
-    # channel, ONE band-key fold.
+    # length), per-clip FFT, ONE multiply-reduceat, ONE band-key fold.
     words_list = audio.pcm_frame_bits_batch(pcms, cfg)
-    text_sets = [hashing.shingle_hashes(c, cfg.k_shingle) for c in canons]
     pcm_sets = [
         audio.shingles_from_words(w, cfg)
         if p is not None
         else np.empty(0, dtype=np.uint64)
         for p, w in zip(pcms, words_list)
     ]
-    mh_text = hashing.minhash_signature_batch(text_sets, a_params, b_params)
     mh_pcm = hashing.minhash_signature_batch(pcm_sets, a_params, b_params)
     # band keys precomputed here (vectorized numpy) so the LSH
     # stage is a pure explode+shuffle — no per-row JVM hashing
     # re-evaluated on every plan branch
-    bk_text = hashing.band_hashes_batch(mh_text, cfg.bands, cfg.rows)
     bk_pcm = hashing.band_hashes_batch(mh_pcm, cfg.bands, cfg.rows)
-
-    def list_arr(mat: np.ndarray) -> "pa.ListArray":
-        # (n, w) uint64 -> list<int64> with zero-copy values
-        w = mat.shape[1] if mat.ndim == 2 else 0
-        flat = pa.array(
-            np.ascontiguousarray(mat).reshape(-1).view(np.int64)
-        )
-        offsets = pa.array(np.arange(0, (n + 1) * w, w, dtype=np.int32))
-        return pa.ListArray.from_arrays(offsets, flat)
 
     # both digests share the `pcm || 0x00` sha256 prefix — one payload
     # pass + a hashlib state copy instead of two full passes (r6)
@@ -127,16 +113,9 @@ def signature_record_batch(
         # pcm-only digest: lets verification decide
         # identical-audio pairs without ever re-reading bytes
         pa.array([d[1] for d in digest_pairs], pa.string()),
-        *([list_arr(mh_text), list_arr(mh_pcm)] if include_minhash else []),
         list_arr(bk_text),
         list_arr(bk_pcm),
-        pa.array(
-            np.fromiter(
-                (hashing.simhash64_i64(c) for c in canons),
-                dtype=np.int64,
-                count=n,
-            )
-        ),
+        pa.array(simhash),
         pa.array(
             np.fromiter((w.size for w in words_list), np.int32, count=n)
         ),
@@ -151,13 +130,13 @@ def signature_record_batch(
         pa.array([p is not None for p in pcms], pa.bool_()),
     ]
     return pa.RecordBatch.from_arrays(
-        arrays, names=[f.name for f in schema.fields]
+        arrays, names=SIGNATURE_SCHEMA.fieldNames()
     )
 
-def compute_signatures(
-    clips: DataFrame, cfg: DedupConfig, include_minhash: bool = True
-) -> DataFrame:
-    """clips -> signatures (stage 1 of SURVEY.md §7.0).
+
+def compute_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """clips -> signatures (stage 1 of SURVEY.md §7.0), in
+    :data:`SIGNATURE_SCHEMA`.
 
     One pass over the bytes computes every signature (the reference's
     single-read multi-hash pattern, /root/reference/src/hash.rs:814-967,
@@ -174,12 +153,13 @@ def compute_signatures(
 
     def batches(it):
         for rb in it:
-            yield signature_record_batch(rb, cfg, a_params, b_params, include_minhash)
+            yield signature_record_batch(rb, cfg, a_params, b_params)
 
-    schema = SIGNATURE_SCHEMA if include_minhash else SLIM_SIGNATURE_SCHEMA
     cols = ["clip_id", "bytes", "codec", "transcript"]
     # few fat Python tasks: each Arrow-exchange task pays fixed protocol
     # overhead, so target ~3 tasks/core (coalesce = no shuffle; it only
     # ever reduces the scan's partition count)
     target = clips.sparkSession.sparkContext.defaultParallelism * 3
-    return clips.select(*cols).coalesce(target).mapInArrow(batches, schema)
+    return clips.select(*cols).coalesce(target).mapInArrow(
+        batches, SIGNATURE_SCHEMA
+    )

@@ -16,25 +16,31 @@ Both LSH channels run the clip pipeline's one capped-bucket self-join
 (``operators/lsh.py``) — one LSH implementation for both corpora.
 
 Shingling for the exact baseline is pure JVM (split/sequence/transform/
-array_distinct in whole-stage codegen); only MinHash needs an Arrow UDF.
+array_distinct in whole-stage codegen); only MinHash needs an Arrow UDF,
+and it is the clips kernel's text half (``hashing.text_signatures``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import StructType
 
 from quichash_spark.config import DOCS_CONFIG, DedupConfig
 from quichash_spark.functions import hashing
+from quichash_spark.functions.udfs import SIGNATURE_SCHEMA, list_arr
 from quichash_spark.operators.lsh import (
     _capped_self_join,
     band_table,
     simhash_chunk_table,
+)
+
+#: the documents kernel's output: the clips signature format's text
+#: columns, ``clip_id`` holding the zero-padded ``doc_id``
+DOC_SIGNATURE_SCHEMA = StructType(
+    [SIGNATURE_SCHEMA[c] for c in ("clip_id", "band_keys_text", "simhash")]
 )
 
 
@@ -143,46 +149,25 @@ def _as_fraction(threshold: float, den: int = 1000) -> tuple[int, int]:
 def minhash_signatures(
     documents: DataFrame, cfg: DedupConfig = DOCS_CONFIG, id_col: str = "doc_id"
 ) -> DataFrame:
-    """(doc_id as clip_id, band_keys_text array<long>, simhash long) via
-    Arrow UDF.
+    """(doc_id as clip_id, band_keys_text, simhash) — the
+    :data:`DOC_SIGNATURE_SCHEMA` projection of the clips signatures.
 
-    ``band_keys_text`` are the MinHash signature's band keys, folded by
-    ``hashing.band_hashes_batch`` as in the clips kernel, so
-    ``lsh.band_table`` applies unchanged.
+    The text half of the clips kernel (``hashing.text_signatures``) over
+    Arrow batches of ``text``, so ``lsh.band_table`` and
+    ``lsh.simhash_chunk_table`` apply unchanged.
     """
     a_params, b_params = hashing.minhash_params(cfg)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            canons = [
-                " ".join(t.split()) if isinstance(t, str) else ""
-                for t in pdf["text"]
-            ]
-            # one vectorized multiply-reduceat across the whole Arrow
-            # batch (the clips-path kernel; per-row equality to the
-            # scalar kernel is pinned in tests) instead of a per-doc
-            # Python loop over 128 permutations
-            sets = [hashing.shingle_hashes(c, cfg.k_shingle) for c in canons]
-            sigs = hashing.minhash_signature_batch(sets, a_params, b_params)
-            keys = hashing.band_hashes_batch(sigs, cfg.bands, cfg.rows)
-            sim = [hashing.simhash64_i64(c) for c in canons]
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf[id_col],
-                    "band_keys_text": list(keys),
-                    "simhash": sim,
-                }
+    def batches(it):
+        for rb in it:
+            _, keys, sim = hashing.text_signatures(
+                rb.column(1).to_pylist(), cfg, a_params, b_params
+            )
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), list_arr(keys), pa.array(sim)],
+                names=DOC_SIGNATURE_SCHEMA.fieldNames(),
             )
 
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("clip_id", StringType()),
-            StructField("band_keys_text", ArrayType(LongType())),
-            StructField("simhash", LongType()),
-        ]
-    )
     # zero-padded string ids so lexicographic clip_id order == numeric
     # doc_id order (pair orientation must match the integer-keyed oracle)
     #
@@ -195,7 +180,7 @@ def minhash_signatures(
     par = documents.sparkSession.sparkContext.defaultParallelism
     return documents.select(
         F.lpad(F.col(id_col).cast("string"), 12, "0").alias(id_col), "text"
-    ).repartition(par).mapInPandas(batches, schema)
+    ).repartition(par).mapInArrow(batches, DOC_SIGNATURE_SCHEMA)
 
 
 def minhash_lsh_pairs(

@@ -87,17 +87,22 @@ def unified_bucket_table(
 
     band_idx ranges encode the channel:
       [0, bands)            text MinHash bands
-      [bands, 2*bands)      pcm MinHash bands           (if use_pcm)
+      [bands, 2*bands)      pcm MinHash bands
       [2*bands, +chunks)    SimHash pigeonhole chunks
 
     Rows carry ``simhash`` so the Hamming-radius filter for chunk-channel
     pairs applies directly after the self-join.
+
+    ``use_pcm`` is ignored: ``perfbench/tracing.py`` still passes it, and
+    the next benchmark change drops it there and then here.
     """
     # band keys were precomputed (vectorized) in the signature stage;
     # this is a pure explode — no hashing re-evaluated per plan branch
-    pcm = [F.col("band_keys_pcm")] if use_pcm else []
     return _bucket_table(
-        signatures, F.concat(F.col("band_keys_text"), *pcm, _simhash_chunks(cfg))
+        signatures,
+        F.concat(
+            F.col("band_keys_text"), F.col("band_keys_pcm"), _simhash_chunks(cfg)
+        ),
     )
 
 
@@ -177,8 +182,7 @@ def _capped_self_join(
 
 
 def unified_candidates(
-    signatures: DataFrame, cfg: DedupConfig, use_pcm: bool = True, *,
-    scope: CacheScope,
+    signatures: DataFrame, cfg: DedupConfig, *, scope: CacheScope,
 ) -> tuple[DataFrame, DataFrame]:
     """All candidate channels in one shuffle plan.
 
@@ -196,8 +200,6 @@ def unified_candidates(
     flagged run emits exactly the batch pairs that touch a new clip
     (test-asserted).
     """
-    nb = cfg.bands
-    n_channels = nb * (2 if use_pcm else 1)
     # The full bucket table is NOT persisted (caching 68 deserialized
     # rows/clip measured SLOWER than recomputing the codegen explode over
     # the page-cached parquet checkpoint).  The >1-member bucket SUMMARY
@@ -206,17 +208,17 @@ def unified_candidates(
     # read after the candidates write) — read it, so the sizes shuffle
     # runs once.
     _, raw, dropped = _capped_self_join(
-        unified_bucket_table(signatures, cfg, use_pcm), cfg.band_bucket_cap, scope
+        unified_bucket_table(signatures, cfg), cfg.band_bucket_cap, scope
     )
-    return _pairs_from_raw(raw, cfg, nb, n_channels, use_pcm), dropped
+    return _pairs_from_raw(raw, cfg), dropped
 
 
-def _pairs_from_raw(
-    raw: DataFrame, cfg: DedupConfig, nb: int, n_channels: int, use_pcm: bool
-) -> DataFrame:
+def _pairs_from_raw(raw: DataFrame, cfg: DedupConfig) -> DataFrame:
+    # the channel layout of unified_bucket_table
+    n_channels = 2 * cfg.bands
     channel = (
-        F.when(F.col("band_idx") < nb, F.lit("lsh_text"))
-        .when(F.col("band_idx") < n_channels, F.lit("lsh_pcm") if use_pcm else F.lit("simhash"))
+        F.when(F.col("band_idx") < cfg.bands, F.lit("lsh_text"))
+        .when(F.col("band_idx") < n_channels, F.lit("lsh_pcm"))
         .otherwise(F.lit("simhash"))
     )
     return (

@@ -59,10 +59,6 @@ VERIFIED_SCHEMA = StructType(
 )
 
 
-def _canon(t: str | None) -> str:
-    return " ".join(t.split()) if isinstance(t, str) else ""
-
-
 def _token_contained(a: str, b: str) -> bool:
     if not a or not b or a == b:
         return False
@@ -82,7 +78,7 @@ def verify_pair(
     The distributed fast/slow split below is an execution strategy for
     exactly this function; tests assert the equivalence.
     """
-    ca, cb = _canon(transcript_a), _canon(transcript_b)
+    ca, cb = hashing.canon(transcript_a), hashing.canon(transcript_b)
     if pcm_a is None or pcm_b is None:
         snr = float("-inf")
     else:

@@ -149,15 +149,8 @@ def _run_stages(
     run, else the completed prior checkpoint an increment extends."""
     timings: dict[str, float] = {}
 
-    # include_minhash=False: the dedup stages consume band keys + scalars
-    # only, so the checkpoint (and the Python->JVM exchange) skips the raw
-    # 128-perm MinHash vectors — ~400 MB of incompressible longs per 200k
-    # clips.
     new_sigs = _stage(
-        store,
-        "signatures",
-        lambda: compute_signatures(new_clips, cfg, include_minhash=False),
-        timings,
+        store, "signatures", lambda: compute_signatures(new_clips, cfg), timings
     )
     sig_stores = [store]
     signatures = new_sigs

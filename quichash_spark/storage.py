@@ -6,11 +6,12 @@ this — its persisted "hash database" is a resumable artifact consumed by
 verify/compare (/root/reference/src/database.rs:177-401) — generalized
 here to one table per stage plus a manifest.
 
-Backend: Iceberg (``writeTo(...).createOrReplace()``) when a catalog is
-configured on the cluster; parquet directories with identical overwrite
-semantics otherwise (this sandbox has no Iceberg jar — SURVEY.md §7.0).
-Both are idempotent per (stage, config_hash): re-running a completed stage
-is a no-op, so a killed driver resumes by skipping completed stages.
+Backend: parquet directories.  ``CheckpointStore(use_iceberg=True)``
+writes Iceberg tables (``writeTo(...).createOrReplace()``) with the same
+overwrite semantics instead; it needs an Iceberg catalog on the cluster,
+and no caller in this package sets the flag.  Both are idempotent per
+(stage, config_hash): re-running a completed stage is a no-op, so a
+killed driver resumes by skipping completed stages.
 """
 
 from __future__ import annotations
@@ -76,7 +77,7 @@ class CheckpointStore:
     def _table_path(self, stage: str) -> str:
         return str(self.base / stage)
 
-    def write(self, df: DataFrame, stage: str, wall_ms: float | None = None,
+    def write(self, df: DataFrame, stage: str,
               lineage: dict[str, DataFrame] | None = None) -> DataFrame:
         """Idempotent overwrite of a stage table; marks the stage complete.
 
@@ -118,7 +119,7 @@ class CheckpointStore:
             "config_hash": self.cfg_hash,
             "rows": rows,
             "schema": df.schema.jsonValue(),
-            "wall_ms": round(wall_ms if wall_ms is not None else (time.monotonic() - t0) * 1000, 1),
+            "wall_ms": round((time.monotonic() - t0) * 1000, 1),
             "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
         }
         self._write_manifest(manifest)

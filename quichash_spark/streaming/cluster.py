@@ -94,9 +94,7 @@ def stream_cluster_assign(
     """File-stream clips -> (clip_id, content_hash, cluster_id, member_n,
     is_first), one row per decodable arrival, drained into memory."""
     stream = file_stream(spark, source_dir, max_files_per_trigger)
-    sigs = compute_signatures(stream, cfg, include_minhash=False).filter(
-        F.col("decode_ok")
-    )
+    sigs = compute_signatures(stream, cfg).filter(F.col("decode_ok"))
     assigned = (
         sigs.select("clip_id", "content_hash")
         .groupBy("content_hash")
@@ -175,9 +173,7 @@ def stream_near_dup_assign(
     clusters.
     """
     stream = file_stream(spark, source_dir, max_files_per_trigger)
-    sigs = compute_signatures(stream, cfg, include_minhash=False).filter(
-        F.col("decode_ok")
-    )
+    sigs = compute_signatures(stream, cfg).filter(F.col("decode_ok"))
     bands = sigs.select(
         "clip_id",
         F.posexplode(F.concat("band_keys_text", "band_keys_pcm")).alias(

@@ -459,9 +459,7 @@ def test_cache_scopes_release_independently(spark):
     from quichash_spark.operators.cache_scope import CacheScope
     from quichash_spark.operators.lsh import unified_candidates
 
-    sigs = compute_signatures(
-        clips_dataframe(spark, 20), CLIPS_CONFIG, include_minhash=False
-    )
+    sigs = compute_signatures(clips_dataframe(spark, 20), CLIPS_CONFIG)
     a, b = CacheScope(), CacheScope()
     unified_candidates(sigs, CLIPS_CONFIG, scope=a)
     unified_candidates(sigs, CLIPS_CONFIG, scope=b)
@@ -508,6 +506,64 @@ def test_docs_kernel_band_keys_equal_scalar_band_hashes(spark):
         )
         want = hashing.band_hashes(sig, 64, 2)
         np.testing.assert_array_equal(np.array(got[doc_id], dtype=np.int64), want)
+
+
+def test_one_signature_format_and_text_kernel(spark, tiny_clips, signatures):
+    """Pins the one signature format: ``compute_signatures`` emits exactly
+    SIGNATURE_SCHEMA (no raw MinHash vectors), the documents kernel its
+    (clip_id, band_keys_text, simhash) projection, and both kernels give
+    equal text band keys and SimHash for the same texts under one config.
+    The two legacy call shapes ``perfbench/tracing.py`` still uses (an
+    ignored ``include_minhash`` and ``use_pcm``) run and change nothing."""
+    from quichash_spark.functions import hashing
+    from quichash_spark.functions.udfs import (
+        SIGNATURE_SCHEMA,
+        signature_record_batch,
+    )
+    from quichash_spark.operators.doc_dedup import (
+        DOC_SIGNATURE_SCHEMA,
+        minhash_signatures,
+    )
+    from quichash_spark.operators.lsh import unified_bucket_table
+
+    assert signatures.schema == SIGNATURE_SCHEMA
+    assert not [c for c in signatures.columns if c.startswith("minhash_")]
+    assert DOC_SIGNATURE_SCHEMA.fields == [
+        SIGNATURE_SCHEMA[c] for c in ("clip_id", "band_keys_text", "simhash")
+    ]
+
+    cols = ["clip_id", "bytes", "codec", "transcript"]
+    rb = (
+        tiny_clips.select(*cols).orderBy("clip_id").limit(64)
+        .toArrow().combine_chunks().to_batches()[0]
+    )
+    a, b = hashing.minhash_params(CLIPS_CONFIG)
+    clips_out = signature_record_batch(rb, CLIPS_CONFIG, a, b)
+    assert clips_out.schema.names == SIGNATURE_SCHEMA.fieldNames()
+    assert clips_out.equals(
+        signature_record_batch(rb, CLIPS_CONFIG, a, b, include_minhash=False)
+    )
+
+    texts = rb.column(3).to_pylist()
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    doc_sigs = minhash_signatures(docs, CLIPS_CONFIG)
+    assert doc_sigs.schema == DOC_SIGNATURE_SCHEMA
+    got = {
+        int(r["clip_id"]): (r["band_keys_text"], r["simhash"])
+        for r in doc_sigs.collect()
+    }
+    want = dict(enumerate(zip(
+        clips_out.column("band_keys_text").to_pylist(),
+        clips_out.column("simhash").to_pylist(),
+    )))
+    assert got == want
+
+    n_keys = 2 * CLIPS_CONFIG.bands + CLIPS_CONFIG.simhash_chunks
+    assert (
+        unified_bucket_table(signatures, CLIPS_CONFIG, True).count()
+        == unified_bucket_table(signatures, CLIPS_CONFIG).count()
+        == 200 * n_keys
+    )
 
 
 def test_shingle_table_equals_inline_shingle_array(spark):

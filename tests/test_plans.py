@@ -187,9 +187,7 @@ def test_verify_plan_build_with_hints_submits_no_job(spark, tiny_clips):
     from quichash_spark.functions.udfs import compute_signatures
     from quichash_spark.operators.verify import verify_candidates
 
-    sigs = compute_signatures(
-        tiny_clips, CLIPS_CONFIG, include_minhash=False
-    ).localCheckpoint(eager=True)
+    sigs = compute_signatures(tiny_clips, CLIPS_CONFIG).localCheckpoint(eager=True)
     cands = spark.createDataFrame(
         [("clip_00000000", "clip_00000001", "lsh_text")],
         "clip_a string, clip_b string, source string",

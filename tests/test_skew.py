@@ -17,7 +17,7 @@ def test_unified_candidates_drops_hot_and_reports(spark, tiny_clips):
     sigs = compute_signatures(tiny_clips, CLIPS_CONFIG).cache()
     capped = replace(CLIPS_CONFIG, band_bucket_cap=5)
     with CacheScope() as scope:
-        pairs, dropped = unified_candidates(sigs, capped, use_pcm=True, scope=scope)
+        pairs, dropped = unified_candidates(sigs, capped, scope=scope)
         # the "ok" hot band exceeds cap on all 32 text bands AND all 4
         # simhash chunks (identical simhash)
         assert dropped.count() >= 36
@@ -27,26 +27,6 @@ def test_unified_candidates_drops_hot_and_reports(spark, tiny_clips):
         for r in sigs.filter(F.col("transcript") == "ok").select("clip_id").collect()
     }
     assert not {(a, b) for a in ok_ids for b in ok_ids if a < b} & got
-
-
-def test_slim_signatures_equivalent_buckets(spark, tiny_clips):
-    """Pipeline checkpoints omit the raw MinHash vectors; bucket-based
-    operators must behave identically off the precomputed band keys."""
-    from quichash_spark.config import CLIPS_CONFIG
-    from quichash_spark.functions.udfs import compute_signatures
-    from quichash_spark.operators.containment import containment_candidates
-    from quichash_spark.operators.lsh import unified_candidates
-
-    full = compute_signatures(tiny_clips, CLIPS_CONFIG).cache()
-    slim = compute_signatures(tiny_clips, CLIPS_CONFIG, include_minhash=False).cache()
-    assert "minhash_text" not in slim.columns
-    with CacheScope() as scope:
-        pf, _ = unified_candidates(full, CLIPS_CONFIG, scope=scope)
-        ps, _ = unified_candidates(slim, CLIPS_CONFIG, scope=scope)
-        assert {tuple(r) for r in pf.collect()} == {tuple(r) for r in ps.collect()}
-    cf = {tuple(r) for r in containment_candidates(full, CLIPS_CONFIG).collect()}
-    cs = {tuple(r) for r in containment_candidates(slim, CLIPS_CONFIG).collect()}
-    assert cf == cs and cf
 
 
 def test_unified_candidates_is_new_equals_postfilter(spark, tiny_clips):
@@ -63,8 +43,7 @@ def test_unified_candidates_is_new_equals_postfilter(spark, tiny_clips):
     from quichash_spark.functions.udfs import compute_signatures
     from quichash_spark.operators.lsh import unified_candidates
 
-    sigs = compute_signatures(tiny_clips, CLIPS_CONFIG, include_minhash=False)
-    sigs = sigs.localCheckpoint(eager=True)
+    sigs = compute_signatures(tiny_clips, CLIPS_CONFIG).localCheckpoint(eager=True)
     new = F.col("clip_id") >= "clip_00000150"
     flagged = (
         sigs.filter(~new).withColumn("is_new", F.lit(False))

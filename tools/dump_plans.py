@@ -40,7 +40,7 @@ def main() -> None:
         )
 
         sections = {
-            "signature extraction (mapInPandas over coalesced scan)": sigs,
+            "signature extraction (mapInArrow over coalesced scan)": sigs,
             "unified candidate generation (one bucket table, capped)": cands,
             "verification (JVM fast path UNION grouped slow path)": verified,
             "query: pricing_summary (pushdown + partial agg)": QUERIES["pricing_summary"](spark, sf_dir),
