@@ -11,8 +11,9 @@ its slice of the corpus.  The coordinator (bench.py) launches 1 or 4 of
 these concurrently on disjoint file slices and takes the max in-process
 wall — legitimate for the signatures stage because it is shuffle-free
 (pure map), and for the verify slow path because its only exchange key is
-``pair_id`` and each process takes a disjoint ``pmod(xxhash64(pair_id))``
-residue class, exactly the rows a hash shuffle would route to executor i.
+the pair ``(clip_a, clip_b, source)`` and each process takes a disjoint
+residue class of ``pmod(xxhash64(clip_a|clip_b))``: whole pairs, as a hash
+shuffle on the pair routes them to one executor each.
 
 Barrier protocol (so "concurrent" means actually-overlapping walls):
 after session startup + warmup, touch ``<sync>/ready_<idx>``; poll for
@@ -118,7 +119,7 @@ def main() -> None:
     ap.add_argument("--sync-dir", required=True)
     ap.add_argument("--idx", type=int, required=True)
     ap.add_argument("--n-procs", type=int, default=1,
-                    help="verify mode: total residue classes of pair_id")
+                    help="verify mode: total residue classes of the pair key")
     ap.add_argument("--candidates", help="verify mode: candidates checkpoint dir")
     ap.add_argument("--signatures", help="verify mode: signatures checkpoint dir")
     ap.add_argument("--n-candidates", type=int, default=None,
@@ -178,9 +179,9 @@ def main() -> None:
 
         candidates = spark.read.parquet(args.candidates)
         signatures = spark.read.parquet(args.signatures)
-        # executor i of n: the residue class of pairs a hash shuffle on
-        # pair_id would route to it.  Fast-path (pure-JVM) pairs are
-        # partitioned across workers exactly like slow-path pairs — the
+        # executor i of n: one residue class of the pair key, so every
+        # pair lands whole on exactly one executor.  Fast-path (pure-JVM)
+        # pairs are partitioned across workers like slow-path pairs — the
         # residue filter applies uniformly, and the classes are disjoint
         # and exhaustive (test_emulate_executor_verify_mode_partitions_
         # exactly).

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+from quichash_spark.operators.lsh import _capped_self_join
+
 K_GRAM = 8          # characters per gram
 WINDOW = 6          # hashes per winnowing window
 _BASE = np.uint64(1099511628211)   # FNV-ish multiplier
@@ -100,8 +102,9 @@ def winnow_fingerprints(documents: DataFrame, id_col: str = "doc_id",
 
 def fingerprint_overlap_pairs(documents: DataFrame, min_shared: int = 2) -> DataFrame:
     """Pairs sharing >= min_shared winnowing fingerprints — the
-    copy-detection join: explode fingerprints, self-join on the hash,
-    count shared per pair (same shuffle shape as MinHash LSH banding)."""
+    copy-detection join: explode fingerprints, self-join on the hash
+    through the shared capped-bucket self-join (fingerprints held by
+    more than 300 documents are skipped), count shared per pair."""
     # NOT checkpointed (r6, measured): the winnow kernel is cheap (~0.1 s
     # per pass at sf0.1), and a localCheckpoint here erases the parquet
     # size statistics the planner needs to broadcast the size/kept joins —
@@ -109,13 +112,14 @@ def fingerprint_overlap_pairs(documents: DataFrame, min_shared: int = 2) -> Data
     # per branch is the cheaper side of that trade, unlike the 128-perm
     # MinHash kernel in doc_dedup.
     fp = winnow_fingerprints(documents)
-    ex = fp.select("doc_id", F.explode("fingerprints").alias("fp"))
-    sizes = ex.groupBy("fp").agg(F.count("*").alias("n"))
-    kept = ex.join(sizes.filter((F.col("n") > 1) & (F.col("n") <= 300)).select("fp"), "fp")
-    a, b = kept.alias("a"), kept.alias("b")
+    buckets = fp.select(
+        F.col("doc_id").alias("clip_id"),
+        F.lit(0).alias("band_idx"),
+        F.explode("fingerprints").alias("band_key"),
+    )
+    _, raw, _ = _capped_self_join(buckets, 300)
     return (
-        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        raw.groupBy(F.col("clip_a").alias("doc_a"), F.col("clip_b").alias("doc_b"))
         .agg(F.count("*").alias("shared_fingerprints"))
         .filter(F.col("shared_fingerprints") >= min_shared)
     )

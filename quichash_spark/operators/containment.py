@@ -50,14 +50,16 @@ _PAIR_SCHEMA = StructType(
 )
 
 
-def _contains(small: str, big: str) -> bool:
+def token_contained(small: str, big: str) -> bool:
+    """``small`` is a contiguous token slice of ``big`` (canonical
+    transcripts): padded-substring match, small != big, small non-empty."""
     return bool(small) and small != big and f" {big} ".find(f" {small} ") >= 0
 
 
 def _aho_corasick_pairs(texts: list[tuple[str, int]]) -> tuple[list[int], list[int]]:
     """Complete containment scan for large buckets: automaton of all padded
     transcripts, one pass per transcript.  Same token-slice semantics as
-    :func:`_contains` (padded-substring match, a != b, a non-empty)."""
+    :func:`token_contained` (padded-substring match, a != b, a non-empty)."""
     from collections import deque
 
     goto: list[dict[str, int]] = [{}]
@@ -142,8 +144,8 @@ def _suffix_array_pairs(texts: list[tuple[str, int]]) -> tuple[list[int], list[i
     """Containment scan via a suffix array over the bucket's concatenated
     padded transcripts (the north_rule's named technique): binary-search
     each padded pattern in the SA, map hit positions to owning
-    transcripts.  Same token-slice semantics as :func:`_contains`; proven
-    pair-identical to the matrix and Aho-Corasick strategies in
+    transcripts.  Same token-slice semantics as :func:`token_contained`;
+    proven pair-identical to the matrix and Aho-Corasick strategies in
     tests/test_operators.py."""
     import numpy as np
 
@@ -222,7 +224,7 @@ def _bucket_pairs(pdf: pd.DataFrame, strategy: str = "auto") -> pd.DataFrame:
         for i in range(n):
             ti, hi = texts[i]
             for j in range(n):
-                if i != j and _contains(ti, texts[j][0]):
+                if i != j and token_contained(ti, texts[j][0]):
                     out_s.append(hi)
                     out_b.append(texts[j][1])
     elif strategy == "aho":

@@ -152,10 +152,8 @@ def _run_stages(
     new_sigs = _stage(
         store, "signatures", lambda: compute_signatures(new_clips, cfg), timings
     )
-    sig_stores = [store]
     signatures = new_sigs
     if prior is not None:
-        sig_stores.append(prior)
         signatures = (
             prior.read("signatures").withColumn("is_new", F.lit(False))
             .unionByName(new_sigs.withColumn("is_new", F.lit(True)))
@@ -194,17 +192,15 @@ def _run_stages(
     # hash) but they also cost nothing: identical pcm_hash routes them
     # through the JVM fast path where transcript equality accepts them —
     # so no anti-join barrier is spent carving them out
-    def build_verified() -> DataFrame:
-        # sizing hints without a job: the manifest's candidate count and
-        # the longest clip from the signature footers (16-bit samples)
-        longest = [s.column_max("signatures", "n_samples") for s in sig_stores]
-        return verify_candidates(
+    # the manifest's candidate count bounds the pairs without a job
+    verified = _stage(
+        store, "verified_edges",
+        lambda: verify_candidates(
             candidates, all_clips, cfg, signatures=signatures,
             n_candidates=store.rows("candidates"),
-            clip_bytes=None if None in longest else 2 * max(longest),
-        )
-
-    verified = _stage(store, "verified_edges", build_verified, timings)
+        ),
+        timings,
+    )
 
     def build_clusters() -> DataFrame:
         edges = (

@@ -41,10 +41,6 @@ def read_schema(df: DataFrame) -> str:
     return ""
 
 
-def uses_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in explain_str(df) or "BroadcastNestedLoopJoin" in explain_str(df)
-
-
 def codegen_stage_count(df: DataFrame) -> int:
     """Number of whole-stage-codegen spans (bigger spans = fewer stages).
 
@@ -84,6 +80,12 @@ def plan_nodes(df: DataFrame) -> list:
         else:
             stack.extend(_seq(node.children()))
     return out
+
+
+def node_names(df: DataFrame) -> list[str]:
+    """The class simple names of :func:`plan_nodes` (e.g.
+    ``"BroadcastHashJoinExec"``), one per node."""
+    return [n.getClass().getSimpleName() for n in plan_nodes(df)]
 
 
 def expression_count(df: DataFrame, class_name: str) -> int:

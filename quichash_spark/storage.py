@@ -25,9 +25,22 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    IntegerType, LongType, StringType, StructField, StructType,
+)
 
 from quichash_spark.config import DedupConfig
+
+#: the per-partition lineage rows of ``<base>/_metrics``; files written
+#: before ``batch_ms`` existed read back with it null
+_METRICS_SCHEMA = StructType([
+    StructField("stage", StringType()),
+    StructField("partition_id", IntegerType()),
+    StructField("rows_out", LongType()),
+    StructField("config_hash", StringType()),
+    StructField("ts", StringType()),
+    StructField("batch_ms", LongType()),
+])
 
 
 def config_hash(cfg: DedupConfig) -> str:
@@ -145,27 +158,6 @@ class CheckpointStore:
             reader = reader.schema(StructType.fromJson(ent["schema"]))
         return reader.parquet(self._table_path(stage))
 
-    def column_max(self, stage: str, column: str) -> int | None:
-        """Maximum of a numeric column from the stage's parquet footer
-        statistics — driver-side metadata, no Spark job.  None when the
-        stage has no files or a row group lacks statistics."""
-        import pyarrow.parquet as pq
-
-        best = None
-        for f in sorted(Path(self._table_path(stage)).glob("part-*")):
-            md = pq.ParquetFile(str(f)).metadata
-            paths = [md.schema.column(i).path for i in range(md.num_columns)]
-            idx = paths.index(column)
-            for g in range(md.num_row_groups):
-                rg = md.row_group(g)
-                st = rg.column(idx).statistics
-                if st is not None and st.has_null_count and st.null_count == rg.num_rows:
-                    continue  # empty or all-null row group
-                if st is None or not st.has_min_max:
-                    return None
-                best = st.max if best is None else max(best, st.max)
-        return best
-
     def invalidate(self, stage: str) -> None:
         manifest = self._read_manifest()
         manifest.pop(stage, None)
@@ -194,6 +186,7 @@ class CheckpointStore:
         but costs no Spark job."""
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         mdir = self.base / "_metrics"
         mdir.mkdir(parents=True, exist_ok=True)
@@ -203,15 +196,16 @@ class CheckpointStore:
         # and consumers must be able to pick the latest unambiguously
         # (the second-resolution ts can collide across a fast rerun)
         batch_ms = int(time.time() * 1000)
-        table = pa.table(
+        table = pa.Table.from_pydict(
             {
-                "stage": pa.array([stage] * len(parts), pa.string()),
-                "partition_id": pa.array([p for p, _ in parts], pa.int32()),
-                "rows_out": pa.array([n for _, n in parts], pa.int64()),
-                "config_hash": pa.array([self.cfg_hash] * len(parts), pa.string()),
-                "ts": pa.array([ts] * len(parts), pa.string()),
-                "batch_ms": pa.array([batch_ms] * len(parts), pa.int64()),
-            }
+                "stage": [stage] * len(parts),
+                "partition_id": [p for p, _ in parts],
+                "rows_out": [n for _, n in parts],
+                "config_hash": [self.cfg_hash] * len(parts),
+                "ts": [ts] * len(parts),
+                "batch_ms": [batch_ms] * len(parts),
+            },
+            schema=to_arrow_schema(_METRICS_SCHEMA),
         )
         pq.write_table(table, mdir / f"{stage}_{batch_ms}.parquet")
 
@@ -231,16 +225,9 @@ class CheckpointStore:
         self._append_metrics_rows(stage, [(r["partition_id"], r["rows_out"]) for r in per_part])
 
     def metrics(self) -> DataFrame:
-        # mergeSchema: metrics dirs written before the batch_ms column
-        # existed read back with batch_ms null (treated as batch 0); a
-        # dir holding ONLY pre-batch_ms files surfaces no column at all
-        df = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(str(self.base / "_metrics"))
+        return self.spark.read.schema(_METRICS_SCHEMA).parquet(
+            str(self.base / "_metrics")
         )
-        if "batch_ms" not in df.columns:
-            df = df.withColumn("batch_ms", F.lit(None).cast("long"))
-        return df
 
     def latest_metrics(self) -> DataFrame:
         """One lineage row per (stage, partition) — only each stage's

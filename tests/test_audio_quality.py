@@ -133,21 +133,24 @@ class TestSparkSide:
         from quichash_spark.functions.audio_quality import (
             compute_audio_quality,
         )
+        from quichash_spark.plans.inspect import node_names
 
-        plan = compute_audio_quality(tiny_clips)._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert "PythonUDF" not in plan  # mapInPandas, not per-row UDFs
+        names = node_names(compute_audio_quality(tiny_clips))
+        assert not any("Exchange" in n or "QueryStage" in n for n in names), names
+        # one Arrow map over the scan, not per-row UDFs
+        assert not any(n.endswith("EvalPythonExec") for n in names), names
+        assert names.count("MapInArrowExec") == 1, names
 
     def test_segment_join_has_no_cartesian(self, spark, tiny_clips):
         from quichash_spark.operators.segment_containment import (
             compute_segment_hashes,
             segment_containment_pairs,
         )
+        from quichash_spark.plans.inspect import node_names
 
-        df = segment_containment_pairs(compute_segment_hashes(tiny_clips))
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
+        names = node_names(segment_containment_pairs(compute_segment_hashes(tiny_clips)))
+        assert "CartesianProductExec" not in names, names
+        assert "BroadcastNestedLoopJoinExec" not in names, names
 
 
 def test_bench_headline_queries_all_registered():

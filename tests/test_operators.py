@@ -151,13 +151,10 @@ def test_verify_broadcast_size_guard(spark, tiny_clips, signatures):
     whole plan falls back to shuffle joins, and results are identical on
     both paths."""
     from quichash_spark.operators.verify import verify_candidates
-    from quichash_spark.plans.inspect import plan_nodes
+    from quichash_spark.plans.inspect import node_names
 
     def broadcasts(df) -> bool:
-        return any(
-            n.getClass().getSimpleName() == "BroadcastHashJoinExec"
-            for n in plan_nodes(df)
-        )
+        return "BroadcastHashJoinExec" in node_names(df)
 
     pairs = sorted(_planted("audio_near")) + sorted(_planted("containment"))
     cands = spark.createDataFrame(
@@ -251,6 +248,43 @@ def test_verify_matrix(spark, tiny_clips, signatures):
     # SNR gates behaved as designed
     assert all(r["snr_db"] >= 30 for r in by_source["audio_near"])
     assert all(r["snr_db"] < 30 for r in by_source["neg_snr"])
+
+
+def test_verify_absent_and_null_payload_members(spark, tiny_clips, signatures):
+    """A slow-path pair whose clip is missing from ``clips`` gets the fixed
+    reject verdict; one whose clip has null ``bytes`` is verified with no
+    audio (``verify_pair(None, ...)``), so its text relations still hold."""
+    from quichash_spark.operators.verify import verify_candidates, verify_pair
+
+    (a1, absent), (a2, nulled) = sorted(_planted("audio_near"))[:2]
+    clips = tiny_clips.filter(F.col("clip_id") != absent).withColumn(
+        "bytes", F.when(F.col("clip_id") == nulled, None).otherwise(F.col("bytes"))
+    )
+    cands = spark.createDataFrame(
+        [(a1, absent, "lsh_text"), (a2, nulled, "lsh_text")],
+        "clip_a string, clip_b string, source string",
+    )
+    got = {
+        r["clip_b"]: r.asDict()
+        for r in verify_candidates(
+            cands, clips, CLIPS_CONFIG, signatures=signatures, n_candidates=2
+        ).collect()
+    }
+    assert got[absent] == {
+        "clip_a": a1, "clip_b": absent, "source": "lsh_text",
+        "snr_db": float("-inf"), "transcript_equal": False,
+        "containment": False, "hamming": 64, "accepted": False,
+    }
+    text = {
+        r["clip_id"]: r["transcript"]
+        for r in tiny_clips.filter(F.col("clip_id").isin(a2, nulled)).collect()
+    }
+    want = verify_pair(None, None, text[a2], text[nulled], CLIPS_CONFIG)
+    assert got[nulled] == {
+        "clip_a": a2, "clip_b": nulled, "source": "lsh_text", **want
+    }
+    assert want["snr_db"] == float("-inf") and not want["accepted"]
+    assert want["hamming"] < 64  # the text relations were computed
 
 
 def test_connected_components_shapes(spark):

@@ -134,6 +134,49 @@ def test_metrics_lineage_rows(spark, result):
         assert sums[stage] == store.read(stage).count(), stage
 
 
+def test_metrics_read_back_pre_batch_ms_files(spark, tmp_path):
+    """Lineage files written before the ``batch_ms`` column existed read
+    back through the pinned metrics schema with ``batch_ms`` null — alone
+    or mixed with new files — and the mixed dir gives the same rows as a
+    schema-merging read; the latest batch is a new file's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quichash_spark.config import CLIPS_CONFIG
+    from quichash_spark.storage import CheckpointStore
+
+    store = CheckpointStore(spark, str(tmp_path / "ck"), CLIPS_CONFIG)
+    mdir = tmp_path / "ck" / "_metrics"
+    mdir.mkdir()
+    pq.write_table(
+        pa.table({
+            "stage": pa.array(["signatures"] * 2, pa.string()),
+            "partition_id": pa.array([0, 1], pa.int32()),
+            "rows_out": pa.array([5, 7], pa.int64()),
+            "config_hash": pa.array([store.cfg_hash] * 2, pa.string()),
+            "ts": pa.array(["2024-01-01T00:00:00"] * 2, pa.string()),
+        }),
+        mdir / "signatures_old.parquet",
+    )
+    old = [tuple(r) for r in store.metrics().collect()]
+    assert sorted(old) == [
+        ("signatures", 0, 5, store.cfg_hash, "2024-01-01T00:00:00", None),
+        ("signatures", 1, 7, store.cfg_hash, "2024-01-01T00:00:00", None),
+    ]
+
+    store._append_metrics_rows("signatures", [(0, 6)])
+    m = store.metrics()
+    merged = spark.read.option("mergeSchema", "true").parquet(str(mdir))
+    cols = m.columns
+    assert sorted(map(tuple, m.collect()), key=str) == sorted(
+        map(tuple, merged.select(*cols).collect()), key=str
+    )
+    assert m.filter(F.col("batch_ms").isNull()).count() == 2
+    latest = store.latest_metrics().collect()
+    assert [(r["partition_id"], r["rows_out"]) for r in latest] == [(0, 6)]
+    assert latest[0]["batch_ms"] is not None
+
+
 def test_dropped_bucket_lineage_survives_resume(spark, tiny_clips, tmp_path):
     """The candidates write records the dropped-bucket lineage before the
     manifest marks the stage complete, so a resumed run that skips the
@@ -230,7 +273,7 @@ def test_hostile_corpus_degrades_to_decode_ok_false_singletons(spark, tmp_path):
 
 def test_emulate_executor_verify_mode_partitions_exactly(spark, tmp_path):
     """The bench harness's verify-mode executor processes (disjoint
-    pmod(xxhash64(pair_id)) residue classes) must union to exactly the
+    residue classes of the pair key) must union to exactly the
     single-session verified-edge set — the property that makes the
     process-level verify emulation a faithful shuffle stand-in."""
     import json

@@ -42,7 +42,7 @@ def main() -> None:
         sections = {
             "signature extraction (mapInArrow over coalesced scan)": sigs,
             "unified candidate generation (one bucket table, capped)": cands,
-            "verification (JVM fast path UNION grouped slow path)": verified,
+            "verification (JVM fast path UNION per-pair mapInArrow slow path)": verified,
             "query: pricing_summary (pushdown + partial agg)": QUERIES["pricing_summary"](spark, sf_dir),
             "query: revenue_by_nation (broadcast dim join)": QUERIES["revenue_by_nation"](spark, sf_dir),
             "query: dedup_minhash_lsh (banding + jaccard verify)": QUERIES["dedup_minhash_lsh"](spark, sf_dir),
