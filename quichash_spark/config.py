@@ -50,7 +50,6 @@ class DedupConfig:
     # the content-hash channel, so dropping hot buckets costs no recall on
     # true duplicates while bounding the join fan-out.
     band_bucket_cap: int = 300     # max rows per (band, band_hash) bucket
-    salt_buckets: int = 16         # containment scan tasks per core
     # pairs found ONLY by the pcm channel need >= this many matching
     # bands (of cfg.bands): random frame-word collisions hit 1 band,
     # true audio near-dups (J >~ 0.5) hit many — collision-count filter

@@ -2,8 +2,10 @@
 
 Detects pairs where one transcript is a contiguous token-slice of the
 other (FIXTURES.md: A's tokens are a prefix slice of B's) inside LSH band
-buckets — a grouped ``applyInPandas`` because a whole candidate bucket
-must be seen at once (SURVEY.md §2.9).
+buckets.  A whole candidate bucket must be seen at once (SURVEY.md §2.9),
+so each kept bucket becomes ONE row — its distinct ``(transcript,
+thash)`` members collected by the JVM — and one ``mapInArrow`` kernel
+scans the rows batch by batch.
 
 Containment is defined at TOKEN level on canonicalized transcripts
 (single-space joined):  contains(a, b)  <=>  " b " has " a " as a
@@ -14,8 +16,11 @@ an unrelated word).
 Skew/scale notes:
 - operates on DISTINCT transcripts per bucket (equal transcripts are
   handled by the exact/LSH channels), so a million-clip constant-text
-  bucket contributes ONE row here;
-- buckets above the LSH cap are already excluded upstream;
+  bucket contributes ONE member here;
+- buckets above the LSH cap are already excluded upstream, so a row
+  holds at most ``band_bucket_cap`` members and a kernel batch at most
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows — a size bound
+  Spark enforces, not one argued;
 - small buckets (<= FULL_MATRIX_LIMIT distinct texts) use the direct
   substring matrix; larger ones build an Aho-Corasick automaton over the
   padded transcripts and scan each transcript once — COMPLETE (finds
@@ -30,8 +35,6 @@ Skew/scale notes:
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -205,55 +208,63 @@ def _suffix_array_pairs(texts: list[tuple[str, int]]) -> tuple[list[int], list[i
     return out_s, out_b
 
 
-def _bucket_pairs(pdf: pd.DataFrame, strategy: str = "auto") -> pd.DataFrame:
-    """Distinct-transcript containment pairs for one bucket.
+def _bucket_pairs(
+    texts: list[tuple[str, int]], strategy: str = "auto"
+) -> tuple[list[int], list[int]]:
+    """Distinct-transcript containment pairs for one bucket of
+    ``(transcript, thash)`` members, as ``(thash_small, thash_big)`` lists.
 
     ``strategy``: 'auto' (matrix for small buckets, Aho-Corasick above
     FULL_MATRIX_LIMIT — the measured default), 'matrix', 'aho', or
     'suffix' (suffix-array substring search, the north_rule's named
     technique).  All strategies are pair-identical (tested)."""
-    texts = sorted(set(zip(pdf["transcript"], pdf["thash"])))
-    out_s: list[int] = []
-    out_b: list[int] = []
+    texts = sorted(set(texts))
     n = len(texts)
     if n <= 1:
-        return pd.DataFrame({"thash_small": out_s, "thash_big": out_b})
+        return [], []
     if strategy == "auto":
         strategy = "matrix" if n <= FULL_MATRIX_LIMIT else "aho"
     if strategy == "matrix":
+        out_s: list[int] = []
+        out_b: list[int] = []
         for i in range(n):
             ti, hi = texts[i]
             for j in range(n):
                 if i != j and token_contained(ti, texts[j][0]):
                     out_s.append(hi)
                     out_b.append(texts[j][1])
-    elif strategy == "aho":
-        out_s, out_b = _aho_corasick_pairs(texts)
-    elif strategy == "suffix":
-        out_s, out_b = _suffix_array_pairs(texts)
-    else:
-        raise ValueError(f"unknown containment strategy {strategy!r}")
-    return pd.DataFrame({"thash_small": out_s, "thash_big": out_b})
+        return out_s, out_b
+    if strategy == "aho":
+        return _aho_corasick_pairs(texts)
+    if strategy == "suffix":
+        return _suffix_array_pairs(texts)
+    raise ValueError(f"unknown containment strategy {strategy!r}")
 
 
-def _scan_task_pairs(pdf: pd.DataFrame, strategy: str) -> pd.DataFrame:
-    """Run :func:`_bucket_pairs` for every exact (band_idx, band_key)
-    bucket inside one hash-bucketed task frame — output-identical to one
-    applyInPandas group per bucket, minus the per-group framework cost."""
-    # drop empty per-bucket frames before concat: a bare [] column
-    # defaults to float64 and pd.concat would upcast the int64 hashes
-    # (silent low-bit loss on values above 2^53)
-    frames = [
-        f
-        for _, g in pdf.groupby(["band_idx", "band_key"], sort=False)
-        if len(f := _bucket_pairs(g, strategy))
-    ]
-    if not frames:
-        return pd.DataFrame({
-            "thash_small": pd.Series([], dtype="int64"),
-            "thash_big": pd.Series([], dtype="int64"),
-        })
-    return pd.concat(frames, ignore_index=True)
+def _scan_buckets(batches):
+    """The scan kernel: each row's ``members`` list is one kept bucket's
+    distinct ``(transcript, thash)`` structs; one output batch of
+    ``(thash_small, thash_big)`` int64 pairs per input batch."""
+    from itertools import islice
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(_PAIR_SCHEMA)
+    for rb in batches:
+        members = rb.column("members")
+        transcripts, thashes = members.flatten().flatten()
+        texts = zip(transcripts.to_pylist(), thashes.to_pylist())
+        out_s: list[int] = []
+        out_b: list[int] = []
+        for n in members.value_lengths().to_pylist():
+            s, b = _bucket_pairs(list(islice(texts, n)))
+            out_s += s
+            out_b += b
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(out_s, pa.int64()), pa.array(out_b, pa.int64())],
+            schema=schema,
+        )
 
 
 def containment_candidates(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -274,33 +285,12 @@ def containment_candidates(signatures: DataFrame, cfg: DedupConfig) -> DataFrame
     texts = signatures.select(
         "clip_id", "transcript", F.xxhash64("transcript").alias("thash")
     )
-    bucket_texts = (
-        kept.join(texts, "clip_id")
-        .select("band_idx", "band_key", "transcript", "thash")
-        .dropDuplicates(["band_idx", "band_key", "thash"])
-    )
-    # Group by a HASH BUCKET of the band key, not the key itself (r6; the
-    # verify-stage pattern): one applyInPandas group per (band_idx,
-    # band_key) means one Arrow exchange + pandas frame per LSH bucket —
-    # tens of thousands of ~0.2 ms framework round-trips that dominated
-    # the operator (measured 15.1 s -> 3.5 s at sf0.1).
-    # _scan_task_pairs resolves the exact buckets inside each frame, so
-    # the per-bucket computation (and output) is unchanged.  Skew: kept
-    # buckets are already capped upstream (<= band_bucket_cap members),
-    # so a task bucket holds a bounded mix of bounded groups — the
-    # previous salt-then-regroup shuffle is subsumed by the hash
-    # distribution over n_tasks.
-    par = signatures.sparkSession.sparkContext.defaultParallelism
-    n_tasks = par * cfg.salt_buckets
     text_pairs = (
-        bucket_texts.withColumn(
-            "task_bucket",
-            F.pmod(F.xxhash64("band_idx", "band_key"), F.lit(n_tasks)),
-        )
-        .groupBy("task_bucket")
-        .applyInPandas(
-            lambda pdf: _scan_task_pairs(pdf, "auto"), _PAIR_SCHEMA
-        )
+        kept.join(texts, "clip_id")
+        .groupBy("band_idx", "band_key")
+        .agg(F.collect_set(F.struct("transcript", "thash")).alias("members"))
+        .select("members")
+        .mapInArrow(_scan_buckets, _PAIR_SCHEMA)
         .dropDuplicates(["thash_small", "thash_big"])
     )
     # expand transcript pairs back to clip pairs

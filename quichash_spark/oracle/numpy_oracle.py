@@ -43,10 +43,6 @@ class UnionFind:
             self.parent[max(ra, rb)] = min(ra, rb)
 
 
-def _token_contained(a: str, b: str) -> bool:
-    return bool(a) and a != b and f" {b} ".find(f" {a} ") >= 0
-
-
 def oracle_corpus(n: int) -> list[dict]:
     rows = []
     for i in range(n):

@@ -31,7 +31,7 @@ from pyspark.sql.types import (
 
 from quichash_spark.config import DedupConfig
 
-#: the per-partition lineage rows of ``<base>/_metrics``; files written
+#: the per-partition lineage rows of ``<base>/metrics``; files written
 #: before ``batch_ms`` existed read back with it null
 _METRICS_SCHEMA = StructType([
     StructField("stage", StringType()),
@@ -188,7 +188,7 @@ class CheckpointStore:
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        mdir = self.base / "_metrics"
+        mdir = self.base / "metrics"
         mdir.mkdir(parents=True, exist_ok=True)
         ts = time.strftime("%Y-%m-%dT%H:%M:%S")
         # batch_ms: one millisecond stamp per APPEND (also the file name)
@@ -226,7 +226,7 @@ class CheckpointStore:
 
     def metrics(self) -> DataFrame:
         return self.spark.read.schema(_METRICS_SCHEMA).parquet(
-            str(self.base / "_metrics")
+            str(self.base / "metrics")
         )
 
     def latest_metrics(self) -> DataFrame:

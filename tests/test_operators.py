@@ -184,17 +184,13 @@ def test_containment_hot_bucket_mid_slice():
     """Adversarial hot bucket (> FULL_MATRIX_LIMIT distinct texts): the
     Aho-Corasick path must find mid-slice containment ("A inside the middle
     of B"), which the round-1 prefix scan missed by design."""
-    import pandas as pd
-
     from quichash_spark.operators.containment import FULL_MATRIX_LIMIT, _bucket_pairs
 
     texts = [f"zz filler {i} xx" for i in range(FULL_MATRIX_LIMIT + 10)]
     texts.append("needle tokens here")
     texts.append("big head needle tokens here big tail")  # mid-slice
     texts.append("needle tokens here and a suffix")       # prefix-slice
-    pdf = pd.DataFrame({"transcript": texts, "thash": list(range(len(texts)))})
-    out = _bucket_pairs(pdf)
-    got = set(zip(out["thash_small"], out["thash_big"]))
+    got = set(zip(*_bucket_pairs(list(zip(texts, range(len(texts)))))))
     needle = len(texts) - 3
     assert (needle, needle + 1) in got  # mid-slice found
     assert (needle, needle + 2) in got  # prefix-slice still found
@@ -411,7 +407,6 @@ def test_containment_strategies_pair_identical():
     the identical pair set on randomized buckets with planted slices,
     unicode tokens, empty and duplicate transcripts."""
     import numpy as np
-    import pandas as pd
 
     from quichash_spark.operators.containment import _bucket_pairs
 
@@ -430,13 +425,11 @@ def test_containment_strategies_pair_identical():
                 texts.append(" ".join(toks[a:b]))
         texts.append("")                        # empty transcript
         texts.append(texts[0])                  # duplicate text
-        pdf = pd.DataFrame(
-            {"transcript": texts, "thash": [hash(t) & 0x7FFFFFFF for t in texts]}
-        )
-        results = {}
-        for strat in ("matrix", "aho", "suffix"):
-            out = _bucket_pairs(pdf, strategy=strat)
-            results[strat] = set(zip(out["thash_small"], out["thash_big"]))
+        members = [(t, hash(t) & 0x7FFFFFFF) for t in texts]
+        results = {
+            strat: set(zip(*_bucket_pairs(members, strategy=strat)))
+            for strat in ("matrix", "aho", "suffix")
+        }
         assert results["matrix"] == results["aho"] == results["suffix"], trial
         assert results["matrix"], f"trial {trial} planted no containment?"
 
@@ -635,38 +628,40 @@ def test_shingle_table_equals_inline_shingle_array(spark):
     assert expression_count(two_step, "StringSplit") == 1
 
 
-def test_scan_task_pairs_equals_per_bucket_scan():
-    """The r6 task-bucketed containment scan must reproduce the
-    per-(band_idx, band_key) applyInPandas groups exactly — including
-    int64 thash fidelity above 2^53 (a bare [] column is float64 and a
-    careless concat upcasts, silently mangling hash low bits)."""
-    import numpy as np
-    import pandas as pd
+def test_scan_buckets_kernel_keeps_int64_hashes():
+    """The containment scan kernel over a hand-built Arrow batch: one
+    ``members`` row per bucket, int64 thash fidelity above 2^53 (a hash
+    that passed through float64 would lose its low bits), and a batch
+    with no containment pair still yields int64 columns."""
+    import pyarrow as pa
 
-    from quichash_spark.operators.containment import (
-        _bucket_pairs, _scan_task_pairs,
-    )
+    from quichash_spark.operators.containment import _bucket_pairs, _scan_buckets
 
-    big = np.int64(-5123798661256609751)  # not float64-representable
-    pdf = pd.DataFrame({
-        "band_idx": [0, 0, 1, 1, 2],
-        "band_key": [5, 5, 7, 7, 9],
-        "transcript": ["a b c d", "b c", "a b c d", "b c", "lone"],
-        "thash": [np.int64(11), big, np.int64(11), big, np.int64(33)],
-        "task_bucket": [3, 3, 3, 3, 3],
-    })
-    got = _scan_task_pairs(pdf, "auto")
-    want = pd.concat(
-        [
-            _bucket_pairs(g, "auto")
-            for _, g in pdf.groupby(["band_idx", "band_key"], sort=False)
-            if len(_bucket_pairs(g, "auto"))
-        ],
-        ignore_index=True,
-    )
-    assert got["thash_small"].dtype == np.int64
-    pd.testing.assert_frame_equal(got, want)
-    assert big in set(got["thash_small"])
-    # all-empty input keeps int64 columns (never float64)
-    empty = _scan_task_pairs(pdf[pdf.band_idx == 2], "auto")
-    assert len(empty) == 0 and empty["thash_small"].dtype == np.int64
+    big = -5123798661256609751  # not float64-representable
+    member = pa.struct([("transcript", pa.string()), ("thash", pa.int64())])
+    buckets = [
+        [("a b c d", 11), ("b c", big)],
+        [("a b c d", 11), ("b c", big), ("c d", 22)],
+        [("lone", 33)],
+    ]
+
+    def batch(rows):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(
+                [[{"transcript": t, "thash": h} for t, h in b] for b in rows],
+                pa.list_(member),
+            )],
+            names=["members"],
+        )
+
+    (out,) = _scan_buckets(iter([batch(buckets)]))
+    assert out.schema.field("thash_small").type == pa.int64()
+    want = [p for b in buckets for p in zip(*_bucket_pairs(b))]
+    got = list(zip(out.column("thash_small").to_pylist(),
+                   out.column("thash_big").to_pylist()))
+    assert got == want
+    assert (big, 11) in got  # the large hash comes out unchanged
+    (empty,) = _scan_buckets(iter([batch(buckets[2:])]))
+    assert empty.num_rows == 0
+    assert empty.schema.field("thash_small").type == pa.int64()
+    assert empty.schema.field("thash_big").type == pa.int64()

@@ -146,7 +146,7 @@ def test_metrics_read_back_pre_batch_ms_files(spark, tmp_path):
     from quichash_spark.storage import CheckpointStore
 
     store = CheckpointStore(spark, str(tmp_path / "ck"), CLIPS_CONFIG)
-    mdir = tmp_path / "ck" / "_metrics"
+    mdir = tmp_path / "ck" / "metrics"
     mdir.mkdir()
     pq.write_table(
         pa.table({

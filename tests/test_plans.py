@@ -75,6 +75,21 @@ def test_verify_fast_path_is_jvm_only(spark, tiny_clips):
     assert names.count("MapInArrowExec") == 1, names
 
 
+def test_containment_scans_buckets_in_one_arrow_map(spark, tiny_clips):
+    """Containment collects each kept bucket into one row and scans the
+    rows through one Arrow map: no grouped Python anywhere."""
+    from quichash_spark.config import CLIPS_CONFIG
+    from quichash_spark.functions.udfs import compute_signatures
+    from quichash_spark.operators.containment import containment_candidates
+
+    # checkpointed, so the signature kernel's own Arrow map is not in the
+    # plan: the one left belongs to the containment scan
+    sigs = compute_signatures(tiny_clips, CLIPS_CONFIG).localCheckpoint(eager=True)
+    names = node_names(containment_candidates(sigs, CLIPS_CONFIG))
+    assert not any(n.startswith("FlatMapGroupsIn") for n in names), names
+    assert names.count("MapInArrowExec") == 1, names
+
+
 def test_scan_agg_stays_in_codegen(spark):
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     q = (

@@ -57,6 +57,7 @@ def main() -> None:
             "query: audio_seg_containment (window-hash equi-join, capped before expansion, r5)": QUERIES["audio_seg_containment"](spark, sf_dir),
             "query: cdc_dup_stats (CDC chunking, count-only dup aggregation, r5)": QUERIES["cdc_dup_stats"](spark, sf_dir),
             "query: audio_cdc_dup (CDC over decoded PCM, r5)": QUERIES["audio_cdc_dup"](spark, sf_dir),
+            "query: clips_containment (one row per kept bucket, batch-bounded mapInArrow scan)": QUERIES["clips_containment"](spark, sf_dir),
         }
         out = ["# PLANS — formatted physical plans of flagship stages",
                "",
