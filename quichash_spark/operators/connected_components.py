@@ -159,9 +159,11 @@ def _components(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # Driver-barrier economy: localCheckpoint is LAZY — the per-round
-    # checksum action is what materializes it, so each round costs ONE
-    # Spark job instead of two (checkpoint job + checksum job).
+    # localCheckpoint(eager=False) cuts the lineage without a separate
+    # checkpoint action, but under AQE it is not free: the call itself
+    # runs the round's shuffle map stages as jobs (7 on a 20k-edge round
+    # at local[4]), and the checksum then runs 2 more, which also fill
+    # the checkpoint.
     n_edges, _h = _edge_checksum(cur)  # also materializes the checkpoint
     prev_sig: tuple[int, int] | None = None
     for _ in range(max_iters):

@@ -12,6 +12,8 @@ pushdown-friendly.  Semantics mirror `Gitignore::matched` (the method the
 reference calls): the decision is for the given path itself — parent
 directories are not consulted (use the dir-pattern on the directory row,
 exactly like the reference's `should_ignore(path, is_dir)`).
+Patterns arrive as text (:func:`parse_hashignore`); finding the
+`.hashignore` files is left to the caller.
 
 Supported gitignore features (public gitignore spec):
 - blank lines and `#` comments (escape a literal leading `#`/`!` with `\\`)
@@ -25,7 +27,6 @@ Supported gitignore features (public gitignore spec):
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass
 
@@ -164,37 +165,3 @@ def hashignore_filter(
             rules, F.col(path_col), F.col(is_dir_col) if is_dir_col else None
         )
     )
-
-
-def load_hashignore(root: str) -> list[Rule]:
-    """Collect `.hashignore` files from ``root`` and its parents, like the
-    reference's parent-directory search (ignore_handler.rs:39-55), plus the
-    always-on `.hashignore` self-exclusion (ignore_handler.rs:31-35).
-
-    Parent files are applied FIRST and the root's file LAST, so the rules
-    closest to the data win — standard gitignore precedence.
-
-    DELIBERATE deviation from the reference (documented, not a bug): its
-    GitignoreBuilder adds the ROOT file first and parents after
-    (ignore_handler.rs:39-55 + last-match-wins), giving parent rules
-    precedence over the root's, and it anchors each file's '/'-prefixed
-    patterns to that file's own directory.  This engine follows the
-    git-standard order (closest file wins) and anchors every pattern to
-    the scan root, because table rows carry root-relative key paths with
-    no per-directory file hierarchy to anchor against.  Rule sets with
-    conflicting negations or anchored patterns across parent files can
-    therefore resolve differently from the reference CLI.
-    """
-    chain: list[str] = []
-    cur: str | None = os.path.abspath(root)
-    while cur:
-        chain.append(cur)
-        parent = os.path.dirname(cur)
-        cur = parent if parent != cur else None
-    lines: list[str] = [".hashignore"]
-    for d in reversed(chain):  # outermost parent first, root last
-        p = os.path.join(d, ".hashignore")
-        if os.path.isfile(p):
-            with open(p, encoding="utf-8", errors="replace") as f:
-                lines.extend(f.read().splitlines())
-    return parse_hashignore(lines)

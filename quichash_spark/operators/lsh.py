@@ -28,8 +28,10 @@ Scale design (10^12 rows):
   requires explicit skew handling + lineage).  Exact duplicates inside a
   dropped bucket are still found by the content-hash stage, which has no
   quadratic blow-up.
-- There is no module default cache: the bucket summary is persisted
-  only into a :class:`CacheScope` the caller passes and releases.
+- The bucket-size summary is a lazy ``localCheckpoint``, the cache
+  every other reused intermediate uses: pair generation and the
+  dropped-bucket lineage both read it, and its blocks go with the
+  DataFrame.
 """
 
 from __future__ import annotations
@@ -38,7 +40,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from quichash_spark.config import DedupConfig
-from quichash_spark.operators.cache_scope import CacheScope
 
 
 def _bucket_table(signatures: DataFrame, keys: Column) -> DataFrame:
@@ -107,7 +108,7 @@ def unified_bucket_table(
 
 
 def _capped_self_join(
-    buckets: DataFrame, cap: int | None, scope: CacheScope | None = None
+    buckets: DataFrame, cap: int | None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The capped-bucket self-join every bucket-join operator shares.
 
@@ -135,8 +136,14 @@ def _capped_self_join(
     so each pair expands exactly once per shared band, and old-x-old
     pairs never do; with every row new the condition reduces to
     ``a.clip_id < b.clip_id``.  The cap filter runs before the
-    self-join, so a hot bucket never fans out.  The summary is persisted
-    only into ``scope``.
+    self-join, so a hot bucket never fans out.
+
+    The summary is a lazy ``localCheckpoint``, so ``kept`` and
+    ``dropped`` read one materialized copy and the sizes shuffle runs
+    once.  Under AQE the call is not free: it submits the sizes
+    shuffle's map stage as a job at once (measured on Spark 4.1.2).  The
+    first action on ``kept``/``raw`` or ``dropped`` then fills the
+    checkpoint, and every later read scans it.
     """
     if "is_new" not in buckets.columns:
         buckets = buckets.withColumn("is_new", F.lit(True))
@@ -146,9 +153,8 @@ def _capped_self_join(
         buckets.groupBy("band_idx", "band_key")
         .agg(F.count("*").alias("bucket_n"), F.max("is_new").alias("has_new"))
         .filter(F.col("bucket_n") > 1)
+        .localCheckpoint(eager=False)
     )
-    if scope is not None:
-        summary = scope.persist(summary)
     fits = F.lit(True) if cap is None else F.col("bucket_n") <= cap
     # a bucket without a new row cannot emit a pair touching one
     kept_keys = summary.filter(fits & F.col("has_new")).select(
@@ -182,15 +188,14 @@ def _capped_self_join(
 
 
 def unified_candidates(
-    signatures: DataFrame, cfg: DedupConfig, *, scope: CacheScope,
+    signatures: DataFrame, cfg: DedupConfig
 ) -> tuple[DataFrame, DataFrame]:
     """All candidate channels in one shuffle plan.
 
     Returns (pairs(clip_a, clip_b, source), dropped(band_idx, band_key,
     bucket_n)).  ``clip_a < clip_b``; ``source`` is the comma-joined
-    sorted set of channels that produced the pair.  ``scope``: the
-    caller's :class:`CacheScope` for the persisted bucket summary,
-    released once the outputs are materialized.
+    sorted set of channels that produced the pair.  Both outputs read
+    one checkpointed bucket summary (see :func:`_capped_self_join`).
 
     ``is_new`` contract: when ``signatures`` carries a boolean ``is_new``
     column (the INCREMENTAL shape: False on prior rows, True on the
@@ -200,15 +205,12 @@ def unified_candidates(
     flagged run emits exactly the batch pairs that touch a new clip
     (test-asserted).
     """
-    # The full bucket table is NOT persisted (caching 68 deserialized
+    # The full bucket table is NOT cached (caching 68 deserialized
     # rows/clip measured SLOWER than recomputing the codegen explode over
-    # the page-cached parquet checkpoint).  The >1-member bucket SUMMARY
-    # is: it is tiny (proportional to true-dup buckets), and both
-    # children — kept_keys (pair generation) and dropped (skew lineage,
-    # read after the candidates write) — read it, so the sizes shuffle
-    # runs once.
+    # the page-cached parquet checkpoint); only the tiny >1-member
+    # summary is checkpointed, inside _capped_self_join.
     _, raw, dropped = _capped_self_join(
-        unified_bucket_table(signatures, cfg), cfg.band_bucket_cap, scope
+        unified_bucket_table(signatures, cfg), cfg.band_bucket_cap
     )
     return _pairs_from_raw(raw, cfg), dropped
 

@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 
 from quichash_spark.config import CLIPS_CONFIG, DedupConfig
 from quichash_spark.functions.udfs import compute_signatures
-from quichash_spark.operators.cache_scope import CacheScope
 from quichash_spark.operators.connected_components import connected_components
 from quichash_spark.operators.exact_dedup import (
     exact_duplicate_edges, exact_duplicate_groups,
@@ -166,27 +165,17 @@ def _run_stages(
     # checkpoint stage
     exact_edges = exact_duplicate_edges(exact_groups)
 
-    # per-run registry: concurrent pipelines in one session each release
-    # only their own persisted bucket summaries (not each other's)
-    scope = CacheScope()
-
     def build_candidates():
         from quichash_spark.operators.lsh import unified_candidates
 
         # every channel (text LSH, pcm LSH, simhash chunks) through ONE
         # bucket table => one sizes pass, one kept-join, one self-join
-        pairs, dropped = unified_candidates(signatures, cfg, scope=scope)
-        # the dropped-bucket lineage is counted off the cached summary
-        # after the candidates write has filled it
+        pairs, dropped = unified_candidates(signatures, cfg)
+        # the dropped-bucket lineage is counted off the checkpointed
+        # summary after the candidates write has filled it
         return pairs, {"buckets_dropped": dropped}
 
-    try:
-        candidates = _stage(store, "candidates", build_candidates, timings)
-    finally:
-        # the bucket summary persisted inside unified_candidates is fully
-        # consumed once the candidates checkpoint and its lineage exist
-        # (and dead weight if the stage failed); release THIS run's caches
-        scope.release()
+    candidates = _stage(store, "candidates", build_candidates, timings)
 
     # exact pairs need no re-verification (proven identical by content
     # hash) but they also cost nothing: identical pcm_hash routes them

@@ -476,31 +476,6 @@ def test_pq_topk_matches_sequential_replica_and_has_recall(spark):
     assert recall >= 0.8, recall
 
 
-def test_cache_scopes_release_independently(spark):
-    """VERDICT r4 #8: the persist registries are pipeline-scoped now —
-    two pipelines sharing one session must not release each other's
-    cached bucket summaries."""
-    from quichash_spark.config import CLIPS_CONFIG
-    from quichash_spark.fixtures import clips_dataframe
-    from quichash_spark.functions.udfs import compute_signatures
-    from quichash_spark.operators.cache_scope import CacheScope
-    from quichash_spark.operators.lsh import unified_candidates
-
-    sigs = compute_signatures(clips_dataframe(spark, 20), CLIPS_CONFIG)
-    a, b = CacheScope(), CacheScope()
-    unified_candidates(sigs, CLIPS_CONFIG, scope=a)
-    unified_candidates(sigs, CLIPS_CONFIG, scope=b)
-    held_a, held_b = a.dataframes, b.dataframes
-    assert held_a and held_b
-    assert all(d.is_cached for d in held_a + held_b)
-    a.release()
-    assert not a.dataframes
-    assert all(not d.is_cached for d in held_a)
-    assert all(d.is_cached for d in held_b)  # pipeline B untouched
-    b.release()
-    assert all(not d.is_cached for d in held_b)
-
-
 def test_docs_kernel_band_keys_equal_scalar_band_hashes(spark):
     """The documents kernel emits band_keys_text: per document, the
     scalar band_hashes of the scalar MinHash signature (DOCS_CONFIG's 64

@@ -54,20 +54,18 @@ def test_verify_fast_path_is_jvm_only(spark, tiny_clips):
     """The fast verification path must contain no Python evaluation."""
     from quichash_spark.config import CLIPS_CONFIG
     from quichash_spark.functions.udfs import compute_signatures
-    from quichash_spark.operators.cache_scope import CacheScope
     from quichash_spark.operators.lsh import unified_candidates
     from quichash_spark.operators.verify import verify_candidates
 
     # checkpointed, so the signature kernel's own Arrow maps are not in
     # the plan: every Python node left belongs to verify
     sigs = compute_signatures(tiny_clips, CLIPS_CONFIG).localCheckpoint(eager=True)
-    with CacheScope() as scope:
-        cands, _ = unified_candidates(sigs, CLIPS_CONFIG, scope=scope)
-        verified = verify_candidates(
-            cands, tiny_clips, CLIPS_CONFIG, signatures=sigs,
-            n_candidates=cands.count(),
-        )
-        names = node_names(verified)
+    cands, _ = unified_candidates(sigs, CLIPS_CONFIG)
+    verified = verify_candidates(
+        cands, tiny_clips, CLIPS_CONFIG, signatures=sigs,
+        n_candidates=cands.count(),
+    )
+    names = node_names(verified)
     # no row-at-a-time Python and no grouped Python anywhere; exactly one
     # Arrow map (the slow-path SNR kernel) — the fast-path branch is pure JVM
     assert "BatchEvalPythonExec" not in names

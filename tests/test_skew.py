@@ -4,8 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from quichash_spark.operators.cache_scope import CacheScope
-
 
 def test_unified_candidates_drops_hot_and_reports(spark, tiny_clips):
     from dataclasses import replace
@@ -16,12 +14,11 @@ def test_unified_candidates_drops_hot_and_reports(spark, tiny_clips):
 
     sigs = compute_signatures(tiny_clips, CLIPS_CONFIG).cache()
     capped = replace(CLIPS_CONFIG, band_bucket_cap=5)
-    with CacheScope() as scope:
-        pairs, dropped = unified_candidates(sigs, capped, scope=scope)
-        # the "ok" hot band exceeds cap on all 32 text bands AND all 4
-        # simhash chunks (identical simhash)
-        assert dropped.count() >= 36
-        got = {(r["clip_a"], r["clip_b"]) for r in pairs.collect()}
+    pairs, dropped = unified_candidates(sigs, capped)
+    # the "ok" hot band exceeds cap on all 32 text bands AND all 4
+    # simhash chunks (identical simhash)
+    assert dropped.count() >= 36
+    got = {(r["clip_a"], r["clip_b"]) for r in pairs.collect()}
     ok_ids = {
         r["clip_id"]
         for r in sigs.filter(F.col("transcript") == "ok").select("clip_id").collect()
@@ -55,19 +52,18 @@ def test_unified_candidates_is_new_equals_postfilter(spark, tiny_clips):
 
     # the capped config drops the hot "ok" band's buckets
     for cfg in (CLIPS_CONFIG, replace(CLIPS_CONFIG, band_bucket_cap=5)):
-        with CacheScope() as scope:
-            full, full_dropped = unified_candidates(sigs, cfg, scope=scope)
-            want = sorted(
-                (r["clip_a"], r["clip_b"], r["source"])
-                for r in full.collect()
-                if r["clip_a"] >= "clip_00000150" or r["clip_b"] >= "clip_00000150"
-            )
-            got_df, got_dropped = unified_candidates(flagged, cfg, scope=scope)
-            got = sorted(
-                (r["clip_a"], r["clip_b"], r["source"]) for r in got_df.collect()
-            )
-            assert got == want and want, cfg.band_bucket_cap
-            assert dropped_set(got_dropped) == dropped_set(full_dropped)
+        full, full_dropped = unified_candidates(sigs, cfg)
+        want = sorted(
+            (r["clip_a"], r["clip_b"], r["source"])
+            for r in full.collect()
+            if r["clip_a"] >= "clip_00000150" or r["clip_b"] >= "clip_00000150"
+        )
+        got_df, got_dropped = unified_candidates(flagged, cfg)
+        got = sorted(
+            (r["clip_a"], r["clip_b"], r["source"]) for r in got_df.collect()
+        )
+        assert got == want and want, cfg.band_bucket_cap
+        assert dropped_set(got_dropped) == dropped_set(full_dropped)
     assert dropped_set(got_dropped)
 
 
@@ -105,3 +101,34 @@ def test_capped_self_join_orients_payload_and_cap_none_keeps_all(spark):
     for r in got:
         assert (r["p_a"], r["p_b"]) == (payload[r["clip_a"]], payload[r["clip_b"]])
     assert dropped.count() == 0
+
+
+def test_dropped_lineage_reads_the_checkpointed_summary(spark, tiny_clips):
+    """The dropped-bucket lineage scans the checkpointed bucket summary:
+    no band explode, no exchange and no sizes aggregate of its own, and
+    it names exactly the buckets over the cap."""
+    from dataclasses import replace
+
+    from quichash_spark.config import CLIPS_CONFIG
+    from quichash_spark.functions.udfs import compute_signatures
+    from quichash_spark.operators.lsh import unified_bucket_table, unified_candidates
+    from quichash_spark.plans.inspect import node_names
+
+    sigs = compute_signatures(tiny_clips, CLIPS_CONFIG).localCheckpoint(eager=True)
+    capped = replace(CLIPS_CONFIG, band_bucket_cap=5)
+    _, dropped = unified_candidates(sigs, capped)
+    names = node_names(dropped)
+    assert "GenerateExec" not in names, names
+    assert not any("Exchange" in n for n in names), names
+    assert "HashAggregateExec" not in names, names
+    assert "RDDScanExec" in names, names
+
+    want = {
+        (r["band_idx"], r["band_key"], r["count"])
+        for r in unified_bucket_table(sigs, capped)
+        .groupBy("band_idx", "band_key").count()
+        .filter(F.col("count") > 5).collect()
+    }
+    got = {(r["band_idx"], r["band_key"], r["bucket_n"]) for r in dropped.collect()}
+    # the hot "ok" band: all 32 text bands and all 4 simhash chunks
+    assert got == want and len(got) >= 36
