@@ -44,6 +44,15 @@ def _barrier(sync_dir: str, idx: int, timeout: float = 300.0) -> None:
         time.sleep(0.05)
 
 
+def _peak_rss_mb() -> float:
+    """This process's peak resident set (``VmHWM``), in MiB."""
+    with open("/proc/self/status") as f:
+        for line in f:
+            if line.startswith("VmHWM:"):
+                return round(int(line.split()[1]) / 1024, 1)
+    raise RuntimeError("no VmHWM line in /proc/self/status")
+
+
 def _run_kernel_mode(args) -> None:
     """NO-JVM control for the process-isolation experiment: the identical
     signature kernel (:func:`signature_record_batch`, shared verbatim with
@@ -52,7 +61,9 @@ def _run_kernel_mode(args) -> None:
     stage's compute + scan + parquet-write memory traffic.  If N-vs-4N
     concurrent *kernel* processes degrade the same way the Spark executor
     processes do, the degradation is host memory-bandwidth/cache
-    contention, not anything in the Spark/JVM stack."""
+    contention, not anything in the Spark/JVM stack.  ``peak_rss_mb`` is
+    the process's high-water RSS (warmup included): the kernel layer's
+    memory, with no JVM or Arrow channel in it."""
     import pyarrow.parquet as pq
 
     from quichash_spark.config import CLIPS_CONFIG
@@ -107,7 +118,8 @@ def _run_kernel_mode(args) -> None:
         writer.close()
     wall = time.monotonic() - t0
     print(json.dumps({"idx": args.idx, "mode": "kernel",
-                      "wall_sec": round(wall, 3), "rows": rows}))
+                      "wall_sec": round(wall, 3),
+                      "peak_rss_mb": _peak_rss_mb(), "rows": rows}))
 
 
 def main() -> None:

@@ -35,7 +35,6 @@ class DedupConfig:
     # --- PCM frame fingerprint ---
     frame_len: int = 512        # samples per analysis frame
     frame_hop: int = 256        # hop between frames
-    pcm_bands: int = 8          # coarse spectral bands for sign-of-diff bits
     pcm_k_shingle: int = 4      # frames per PCM shingle
 
     # --- verification gates (BASELINE.json input_hint) ---

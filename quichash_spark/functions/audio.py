@@ -536,13 +536,13 @@ def snr_db(ref: np.ndarray, other: np.ndarray, cap: float = 999.0) -> float:
 def pcm_frame_bits(pcm: np.ndarray, cfg: DedupConfig) -> np.ndarray:
     """Per-frame robust feature words (uint64, one per frame).
 
-    Frames of ``cfg.frame_len`` samples at hop ``cfg.frame_hop``; per frame
-    compute ``cfg.pcm_bands`` coarse spectral band energies (rfft magnitude
-    sums) and emit one bit per band: *is this band above the frame's mean
-    band energy*.  Dominant-band bits are gain-invariant and stable under
-    additive noise at the >=30 dB SNR the verify gate targets (the
-    sign-of-adjacent-difference variant is NOT: bands with near-zero
-    energy make those signs noise-dominated).
+    Frames of ``cfg.frame_len`` samples at hop ``cfg.frame_hop``; each
+    frame's rfft magnitude spectrum becomes one word of dominant peak
+    bin, second peak bin, their log-ratio and the spectral centroid (see
+    :func:`_frame_words`).  Peak bins and the centroid are gain-invariant
+    and stable under additive noise at the >=30 dB SNR the verify gate
+    targets.  This row-at-a-time path is the oracle's;
+    :func:`pcm_frame_bits_batch` is bit-identical to it.
     """
     if pcm is None or pcm.size < cfg.frame_len:
         return np.empty(0, dtype=np.uint64)
@@ -606,23 +606,29 @@ def _frame_words(frames: np.ndarray) -> np.ndarray:
     )
 
 
+#: float32 frame bytes per :func:`_frame_words` call on the batch path
+#: (512 frames at ``frame_len`` 512)
+_FRAME_BLOCK_BYTES = 1 << 20
+
+
 def pcm_frame_bits_batch(
     pcms: list[np.ndarray | None], cfg: DedupConfig
 ) -> list[np.ndarray]:
     """Batch API over :func:`pcm_frame_bits` (None-safe, output-identical).
 
-    All clips' frames concatenate into ONE matrix per call, so the FFT and
-    every row-wise feature op dispatch once per batch instead of once per
-    clip (r6: ~145 us/clip of numpy-dispatch overhead measured in the
-    per-clip loop).  :func:`_frame_words` is strictly frame-row-wise, so
-    the concatenated results are bit-identical to the per-clip path
-    (test-asserted).  Arrow batches are bounded (maxRecordsPerBatch=128),
-    which caps the concatenated float32 frame matrix at ~20 MB.  That
-    figure understates the peak: :func:`_frame_words` runs numpy.fft,
-    which upcasts to a complex128 spectrum (2x the frame matrix's bytes
-    for its ~n/2 bins) followed by float64 magnitude, masked-copy and
-    power arrays (1x each), so a batch call holds roughly 5x the frame
-    matrix at once.  Size any batch retuning by that footprint.
+    Clips' frames stream through ONE reusable float32 block of
+    ``_FRAME_BLOCK_BYTES``, and :func:`_frame_words` runs once per full
+    block and once on the last partial one, so the FFT and every
+    row-wise feature op dispatch per block instead of per clip (r6:
+    ~145 us/clip of numpy-dispatch overhead measured in the per-clip
+    loop).  A clip may straddle two blocks: :func:`_frame_words` is
+    strictly frame-row-wise, so the results are bit-identical to the
+    per-clip path (test-asserted).  The block bounds the working set by
+    bytes, not by the batch's clip count or lengths: numpy.fft upcasts
+    to a complex128 spectrum (2x the block's bytes for its ~n/2 bins)
+    followed by float64 magnitude, masked-copy and power arrays (1x
+    each), about 4 MB per call over the 1 MiB block (tracemalloc).
+    Only the uint64 words (8 B per frame) are kept for the whole batch.
     """
     counts: list[int] = []
     views: list[np.ndarray] = []
@@ -635,23 +641,29 @@ def pcm_frame_bits_batch(
         ]
         counts.append(w.shape[0])
         views.append(w)
-    if not views:
-        return [np.empty(0, dtype=np.uint64) for _ in pcms]
-    total = sum(v.shape[0] for v in views)
-    big = np.empty((total, cfg.frame_len), dtype=np.float32)
-    off = 0
+    total = sum(counts)
+    rows = max(1, _FRAME_BLOCK_BYTES // (4 * cfg.frame_len))
+    block = np.empty((min(rows, total), cfg.frame_len), dtype=np.float32)
+    words = np.empty(total, dtype=np.uint64)
+    done = fill = 0
     for v in views:
-        big[off : off + v.shape[0]] = v  # int16 -> float32, one copy
-        off += v.shape[0]
-    words = _frame_words(big)
+        off = 0
+        while off < v.shape[0]:
+            take = min(rows - fill, v.shape[0] - off)
+            block[fill : fill + take] = v[off : off + take]  # int16 -> float32
+            fill += take
+            off += take
+            if fill == rows:
+                words[done : done + rows] = _frame_words(block)
+                done += rows
+                fill = 0
+    if fill:
+        words[done:] = _frame_words(block[:fill])
     out: list[np.ndarray] = []
     off = 0
     for c in counts:
-        if c == 0:
-            out.append(np.empty(0, dtype=np.uint64))
-        else:
-            out.append(words[off : off + c])
-            off += c
+        out.append(words[off : off + c])
+        off += c
     return out
 
 

@@ -87,7 +87,8 @@ def signature_record_batch(
     pcms = audio.decode_column(rb.column(1), rb.column(2).to_pylist())
     # batched execution, output-identical to the row-at-a-time
     # kernels (tests assert equality): decode per row (variable
-    # length), per-clip FFT, ONE multiply-reduceat, ONE band-key fold.
+    # length), one FFT per 1 MiB block of frames, ONE multiply-reduceat,
+    # ONE band-key fold.
     words_list = audio.pcm_frame_bits_batch(pcms, cfg)
     pcm_sets = [
         audio.shingles_from_words(w, cfg)

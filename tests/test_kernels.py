@@ -225,3 +225,52 @@ def test_batch_kernels_equal_scalar():
     batch_bands = hashing.band_hashes_batch(batch_sigs, cfg.bands, cfg.rows)
     for sig, bk in zip(batch_sigs, batch_bands):
         np.testing.assert_array_equal(bk, hashing.band_hashes(sig, cfg.bands, cfg.rows))
+
+
+def test_batch_frame_bits_stream_in_bounded_blocks(monkeypatch):
+    """The batch path hands :func:`audio._frame_words` at most one block
+    of frames per call, whatever the clips' lengths, and its words still
+    equal the scalar path's for clips that straddle blocks, span more
+    than a block, or have no frames at a block edge and at the end."""
+    rows = audio._FRAME_BLOCK_BYTES // (4 * CFG.frame_len)
+    rng = np.random.default_rng(24)
+
+    def clip(n_frames: int) -> np.ndarray:
+        n = CFG.frame_len + (n_frames - 1) * CFG.frame_hop
+        t = np.arange(n) / 8000.0
+        tone = 3000 * np.sin(2 * np.pi * rng.uniform(100, 3000) * t)
+        return (tone + rng.normal(0, 500, n)).astype(np.int16)
+
+    no_frames = [
+        None,
+        np.empty(0, dtype=np.int16),
+        np.ones(CFG.frame_len - 1, dtype=np.int16),
+    ]
+    pcms = [
+        clip(100),
+        clip(rows - 100),  # ends exactly on the first block edge
+        *no_frames,
+        clip(300),
+        clip(2 * rows + 200),  # longer than a block, straddles two edges
+        clip(rows // 2),  # straddles the next edge
+        *no_frames,
+    ]
+    want = [audio.pcm_frame_bits(p, CFG) for p in pcms]
+    total = sum(w.size for w in want)
+    assert total >= 3 * rows
+
+    calls: list[int] = []
+    frame_words = audio._frame_words
+
+    def recorder(frames):
+        calls.append(frames.shape[0])
+        return frame_words(frames)
+
+    monkeypatch.setattr(audio, "_frame_words", recorder)
+    got = audio.pcm_frame_bits_batch(pcms, CFG)
+    assert max(calls) <= rows
+    assert sum(calls) == total and len(calls) == -(-total // rows)
+    assert len(got) == len(pcms)
+    for g, w in zip(got, want):
+        assert g.dtype == np.uint64
+        np.testing.assert_array_equal(g, w)
