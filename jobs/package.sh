@@ -8,12 +8,9 @@ rm -f quichash_spark.zip
 zip -qr quichash_spark.zip quichash_spark -x '*__pycache__*'
 echo "built $(pwd)/quichash_spark.zip"
 cat <<'EOF'
-submit example (cluster):
+submit example (cluster; session.get_spark sets the engine's SQL confs):
   spark-submit \
     --py-files quichash_spark.zip \
-    --conf spark.sql.adaptive.enabled=true \
-    --conf spark.sql.execution.arrow.maxRecordsPerBatch=128 \
-    --conf spark.sql.parquet.columnarReaderBatchSize=512 \
     jobs/run_pipeline.py --input <clips-table> --iceberg \
     --checkpoint-dir <warehouse-path>
 

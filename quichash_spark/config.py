@@ -54,9 +54,6 @@ class DedupConfig:
     # true audio near-dups (J >~ 0.5) hit many — collision-count filter
     min_pcm_band_hits: int = 2
 
-    # --- connected components ---
-    cc_max_iters: int = 25
-
     # --- kernel code version: bump when any signature kernel changes so
     # checkpoint config-hashes (and therefore resume) invalidate ---
     kernel_version: int = 7

@@ -33,13 +33,14 @@ from quichash_spark.functions.xxh3_pure import xxh3_64_hex, xxh3_128_hex
 _LOG = __import__("logging").getLogger(__name__)
 
 
-def resolve_native_kernels(warn: bool = True) -> dict[str, Callable[[bytes], str]]:
+def resolve_native_kernels() -> dict[str, Callable[[bytes], str]]:
     """Prefer wheel-backed C kernels when installed (``blake3``,
     ``xxhash``); fall back to the spec-implemented pure-Python kernels
-    with one log line per missing wheel.  Without the wheel, blake3 (the
-    reference's *default* dedup algorithm, src/dedup.rs:279-282) runs
-    the numpy-vectorized batch kernel at the UDF layer (~50 MB/s/core —
-    see ``blake3_pure.blake3_hex_batch``); xxh3/xxh128 remain
+    (:func:`resolve_batch_kernels` logs any algorithm left that slow).
+    Without the wheel, blake3 (the reference's *default* dedup
+    algorithm, src/dedup.rs:279-282) runs the numpy-vectorized batch
+    kernel at the UDF layer (~50 MB/s/core — see
+    ``blake3_pure.blake3_hex_batch``); xxh3/xxh128 remain
     interpreter-speed catalog closure (JVM xxh64 is the fast path)."""
     kernels: dict[str, Callable[[bytes], str]] = {}
     try:
@@ -47,13 +48,6 @@ def resolve_native_kernels(warn: bool = True) -> dict[str, Callable[[bytes], str
 
         kernels["blake3"] = lambda b: _b3.blake3(b).hexdigest()
     except ImportError:
-        if warn:
-            _LOG.warning(
-                "blake3 wheel not installed: using the numpy-vectorized "
-                "spec kernel (~50 MB/s/core). Install `blake3` on the "
-                "cluster for GB/s bulk hashing, or use the JVM-native "
-                "sha256/xxh64 algorithms."
-            )
         kernels["blake3"] = blake3_hex
     try:
         import xxhash as _xxh  # type: ignore[import-not-found]
@@ -61,28 +55,23 @@ def resolve_native_kernels(warn: bool = True) -> dict[str, Callable[[bytes], str
         kernels["xxh3"] = _xxh.xxh3_64_hexdigest
         kernels["xxh128"] = _xxh.xxh3_128_hexdigest
     except ImportError:
-        if warn:
-            _LOG.warning(
-                "xxhash wheel not installed: using the pure-Python spec "
-                "kernels for xxh3/xxh128 (~MB/s). The JVM-native xxh64 "
-                "(F.xxhash64) is the fast path on this stack."
-            )
         kernels["xxh3"] = xxh3_64_hex
         kernels["xxh128"] = xxh3_128_hex
     return kernels
 
 
-def resolve_batch_kernels(
-    warn: bool = True,
-) -> tuple[dict[str, str], dict[str, Callable[[list[bytes]], list[str]]]]:
+def resolve_batch_kernels() -> tuple[
+    dict[str, str], dict[str, Callable[[list[bytes]], list[str]]]
+]:
     """Kernel tiers for the three algorithms with no JVM built-in
     (blake3 / xxh3 / xxh128): ``wheel`` (installed C extension) >
     ``cc`` (compile-on-first-use C translation of the spec kernels,
     :mod:`cc_kernels` — ~350-3500 MB/s/core measured) > ``purevec``
     (numpy-vectorized / scalar spec Python).  Returns
     ``(provenance_by_algo, batch_kernel_by_algo)``; the registry below
-    wraps each batch kernel in one Arrow-batched pandas UDF."""
-    scalar = resolve_native_kernels(warn=False)
+    wraps each batch kernel in one Arrow-batched pandas UDF; one log
+    line names any algorithm left on the ``purevec`` tier."""
+    scalar = resolve_native_kernels()
     wheel_b3 = scalar["blake3"] is not blake3_hex
     wheel_x = scalar["xxh3"] is not xxh3_64_hex
     cc = None if (wheel_b3 and wheel_x) else cc_kernels.available()
@@ -108,7 +97,7 @@ def resolve_batch_kernels(
     else:
         prov["xxh3"], batch["xxh3"] = "purevec", _lift(xxh3_64_hex)
         prov["xxh128"], batch["xxh128"] = "purevec", _lift(xxh3_128_hex)
-    if warn and "purevec" in prov.values():
+    if "purevec" in prov.values():
         _LOG.warning(
             "no wheel and no C compiler for %s: falling back to the "
             "interpreter/numpy spec kernels (~MB/s). Install `blake3`/"

@@ -17,6 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: star rounds before the loop gives up on convergence (O(log n) rounds
+#: suffice; a 1000-node chain needs 11)
+MAX_ITERS = 25
+#: at or under this many edges the frontier finishes in one union-find task
+LOCAL_FINISH_EDGES = 5_000_000
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Connect strictly-larger neighbors to the neighborhood minimum."""
@@ -108,8 +114,7 @@ def _local_finish(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame, max_iters: int = 25, local_finish_threshold: int = 5_000_000,
-    max_edges: int | None = None, *, nodes: DataFrame | None = None,
+    edges: DataFrame, max_edges: int | None = None, *, nodes: DataFrame | None = None,
 ) -> DataFrame:
     """edges(clip_a, clip_b) -> assignments(clip_id, cluster_id).
 
@@ -120,9 +125,10 @@ def connected_components(
     edge is its own cluster.
 
     Two-level strategy: alternating large-star/small-star rounds while the
-    frontier exceeds ``local_finish_threshold`` edges, then one
-    executor-task union-find on the small tail (set the threshold to 0 to
-    force fully-distributed convergence; a test asserts both paths agree).
+    frontier exceeds ``LOCAL_FINISH_EDGES`` edges, then one
+    executor-task union-find on the small tail (a test sets the constant
+    to 0 to force fully-distributed convergence and asserts both paths
+    agree).
     At 10^12 clips the rounds do the shrinking; the tail finish replaces
     only the last O(log n) latency-bound rounds.
 
@@ -134,7 +140,7 @@ def connected_components(
     ``edges`` itself, so pass the bound for cheap inputs such as
     checkpoint reads.
     """
-    assign = _components(edges, max_iters, local_finish_threshold, max_edges)
+    assign = _components(edges, max_edges)
     if nodes is None:
         return assign
     return (
@@ -144,12 +150,9 @@ def connected_components(
     )
 
 
-def _components(
-    edges: DataFrame, max_iters: int, local_finish_threshold: int,
-    max_edges: int | None,
-) -> DataFrame:
+def _components(edges: DataFrame, max_edges: int | None) -> DataFrame:
     """Assignments of the ids that appear in ``edges``."""
-    if max_edges is not None and max_edges <= local_finish_threshold:
+    if max_edges is not None and max_edges <= LOCAL_FINISH_EDGES:
         return _local_finish(
             edges.select(F.col("clip_a").alias("u"), F.col("clip_b").alias("v"))
         )
@@ -166,8 +169,8 @@ def _components(
     # the checkpoint.
     n_edges, _h = _edge_checksum(cur)  # also materializes the checkpoint
     prev_sig: tuple[int, int] | None = None
-    for _ in range(max_iters):
-        if n_edges <= local_finish_threshold:
+    for _ in range(MAX_ITERS):
+        if n_edges <= LOCAL_FINISH_EDGES:
             return _local_finish(cur)
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
         sig = _edge_checksum(cur)

@@ -37,7 +37,6 @@ def contamination_hits(
     train_id: str = "doc_id",
     eval_id: str = "eval_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """(train_doc, eval_doc, shared k-gram count, eval shingle count).
 
@@ -46,7 +45,7 @@ def contamination_hits(
     """
     # join on xxhash64(shingle) longs, not the raw k-token strings: the
     # join key shrinks from ~8 tokens of text (~50-100 B) to 8 B, cutting
-    # the broadcast (or shuffle-fallback) width by ~10x at corpus scale.
+    # the broadcast width by ~10x at corpus scale.
     # A 64-bit collision would add a false POSITIVE hit — the conservative
     # direction for decontamination (never un-flags real contamination),
     # at ~n^2/2^65 odds per eval set.
@@ -57,9 +56,8 @@ def contamination_hits(
         eval_id, F.explode("shingles").alias("sh")
     ).select(eval_id, F.xxhash64("sh").alias("sh_key")).distinct()
     ev_sizes = ev_sh.groupBy(eval_id).agg(F.count("*").alias("eval_shingles"))
-    if broadcast_eval:
-        ev_sh = F.broadcast(ev_sh)
-        ev_sizes = F.broadcast(ev_sizes)
+    # the eval set is small: both of its sides are broadcast
+    ev_sh, ev_sizes = F.broadcast(ev_sh), F.broadcast(ev_sizes)
     tr_sh = shingle_table(train, F.col(train_id), k, text_col, train_id).select(
         train_id,
         F.explode(F.array_distinct(F.col("shingles"))).alias("sh"),

@@ -159,7 +159,6 @@ def verify_candidates(
     *,
     signatures: DataFrame,
     n_candidates: int,
-    broadcast_pair_limit: int = BROADCAST_PAIR_LIMIT,
 ) -> DataFrame:
     """candidates(clip_a, clip_b, source) -> verified edges (see module
     docstring for the fast/slow execution split).
@@ -223,7 +222,7 @@ def verify_candidates(
     # upgrades it to broadcast at runtime when the build side turns out
     # small).  Corpus bytes never shuffle un-pruned on either path.
     # n_candidates bounds the slow-pair volume without a job
-    if n_candidates <= broadcast_pair_limit:
+    if n_candidates <= BROADCAST_PAIR_LIMIT:
         # the payload scan probes the broadcast membership table directly:
         # non-participants drop inside the scan's own tasks, with no id
         # exchange and no semi-join tier in front of the tagging join

@@ -107,11 +107,12 @@ def sequential_signature_rows(n: int, cfg: DedupConfig = CLIPS_CONFIG) -> list[d
 
 
 def sequential_candidates(
-    rows: list[dict], cfg: DedupConfig = CLIPS_CONFIG, use_pcm: bool = True
+    rows: list[dict], cfg: DedupConfig = CLIPS_CONFIG
 ) -> pd.DataFrame:
-    """Dict-and-loop replica of operators.lsh.unified_candidates."""
+    """Dict-and-loop replica of operators.lsh.unified_candidates: bucket
+    channels are text bands, then pcm bands, then SimHash chunks."""
     nb = cfg.bands
-    n_channels = nb * (2 if use_pcm else 1)
+    n_channels = 2 * nb
     buckets: dict[tuple[int, int], list[str]] = defaultdict(list)
     sim: dict[str, int] = {}
     for r in rows:
@@ -120,10 +121,9 @@ def sequential_candidates(
         bk_text = hashing.band_hashes(r["mh_text"], nb, cfg.rows)
         for b in range(nb):
             buckets[(b, int(bk_text[b]))].append(cid)
-        if use_pcm:
-            bk_pcm = hashing.band_hashes(r["mh_pcm"], nb, cfg.rows)
-            for b in range(nb):
-                buckets[(nb + b, int(bk_pcm[b]))].append(cid)
+        bk_pcm = hashing.band_hashes(r["mh_pcm"], nb, cfg.rows)
+        for b in range(nb):
+            buckets[(nb + b, int(bk_pcm[b]))].append(cid)
         for ci, cv in enumerate(
             hashing.simhash_chunks_i64(int(r["simhash"]), cfg.simhash_chunks)
         ):

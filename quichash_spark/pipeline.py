@@ -99,9 +99,11 @@ def incremental_update(
 
     - old clips' SIGNATURES come from the prior run's checkpoint — the
       decode-everything stage (the dominant cost) runs on the increment
-      only, and old ``bytes`` are never re-read except for the bounded
-      set of old clips that participate in a new candidate pair (the
-      verify stage's membership join prunes the payload scan);
+      only.  Verification still scans every payload file of
+      ``all_clips``, old and new; the scan joins the broadcast pair
+      membership inside its own tasks, so clips in no slow-path pair
+      are dropped there and no old ``bytes`` enter an exchange unless
+      the clip participates in a new candidate pair;
     - CANDIDATES run the identical unified bucket machinery over the
       signature union, tagged with ``is_new`` (False on the prior
       checkpoint's rows, True on the increment).  Bucket sizes (and
@@ -211,10 +213,7 @@ def _run_stages(
             )
             edges = edges.unionByName(prior_edges)
             bound += [prior.rows("signatures"), prior.rows("clusters")]
-        return connected_components(
-            edges, cfg.cc_max_iters,
-            max_edges=None if None in bound else sum(bound), nodes=signatures,
-        )
+        return connected_components(edges, max_edges=sum(bound), nodes=signatures)
 
     clusters = _stage(store, "clusters", build_clusters, timings)
 

@@ -6,12 +6,10 @@ this — its persisted "hash database" is a resumable artifact consumed by
 verify/compare (/root/reference/src/database.rs:177-401) — generalized
 here to one table per stage plus a manifest.
 
-Backend: parquet directories.  ``CheckpointStore(use_iceberg=True)``
-writes Iceberg tables (``writeTo(...).createOrReplace()``) with the same
-overwrite semantics instead; it needs an Iceberg catalog on the cluster,
-and no caller in this package sets the flag.  Both are idempotent per
-(stage, config_hash): re-running a completed stage is a no-op, so a
-killed driver resumes by skipping completed stages.
+Backend: parquet directories, the only one; per-partition lineage comes
+from the written files' footers.  Writes are idempotent per (stage,
+config_hash): re-running a completed stage is a no-op, so a killed driver
+resumes by skipping completed stages.
 """
 
 from __future__ import annotations
@@ -50,21 +48,19 @@ def config_hash(cfg: DedupConfig) -> str:
 
 
 class CheckpointStore:
-    """Parquet-directory checkpoint store with Iceberg-compatible semantics.
+    """Parquet-directory checkpoint store.
 
     ``base_dir/<stage>/`` holds the stage table; ``base_dir/_manifest.json``
-    records ``stage -> {status, config_hash, rows, wall_ms}``.  A stage is
-    reusable iff status == 'complete' and the config hash matches.
+    records ``stage -> {status, config_hash, rows, schema, wall_ms, ts}``.
+    A stage is reusable iff status == 'complete' and the config hash
+    matches.
     """
 
-    def __init__(self, spark: SparkSession, base_dir: str, cfg: DedupConfig,
-                 use_iceberg: bool = False, iceberg_namespace: str = "quichash"):
+    def __init__(self, spark: SparkSession, base_dir: str, cfg: DedupConfig):
         self.spark = spark
         self.base = Path(base_dir)
         self.base.mkdir(parents=True, exist_ok=True)
         self.cfg_hash = config_hash(cfg)
-        self.use_iceberg = use_iceberg
-        self.iceberg_namespace = iceberg_namespace
 
     # -- manifest ----------------------------------------------------------
     @property
@@ -96,9 +92,7 @@ class CheckpointStore:
 
         Per-partition lineage comes from the written parquet FOOTERS
         (one part-file per output partition, num_rows read driver-side
-        with pyarrow) — zero extra Spark jobs per stage; Iceberg keeps
-        the read-back aggregate path (its files carry the counts in
-        manifests, but the generic route is one aggregate job).  The
+        with pyarrow) — zero extra Spark jobs per stage.  The
         manifest records the schema just written and :meth:`read` reuses
         it, so no footer-inference job follows the write.
 
@@ -110,18 +104,8 @@ class CheckpointStore:
         complete.
         """
         t0 = time.monotonic()
-        if self.use_iceberg:
-            df.writeTo(f"{self.iceberg_namespace}.{stage}").createOrReplace()
-            per_part = (
-                self.read(stage)
-                .groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(F.count("*").alias("rows_out"))
-                .collect()
-            )
-            parts = [(r["partition_id"], r["rows_out"]) for r in per_part]
-        else:
-            df.write.mode("overwrite").parquet(self._table_path(stage))
-            parts = self._footer_partition_rows(stage)
+        df.write.mode("overwrite").parquet(self._table_path(stage))
+        parts = self._footer_partition_rows(stage)
         for name, extra in (lineage or {}).items():
             self.append_metrics(name, extra)
         rows = sum(n for _, n in parts)
@@ -150,8 +134,6 @@ class CheckpointStore:
         """The stage table; parquet reads use the schema the manifest
         recorded at write time (no footer-inference job), when it has
         one."""
-        if self.use_iceberg:
-            return self.spark.read.table(f"{self.iceberg_namespace}.{stage}")
         ent = self._read_manifest().get(stage) or {}
         reader = self.spark.read
         if "schema" in ent:

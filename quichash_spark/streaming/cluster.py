@@ -35,6 +35,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from quichash_spark.config import CLIPS_CONFIG, DedupConfig
+from quichash_spark.functions.audio_embed import (
+    EMBED_DIM, NEARDUP_THRESHOLD, compute_audio_embeddings,
+)
 from quichash_spark.functions.udfs import compute_signatures
 from quichash_spark.streaming import drain, drain_to_memory, file_stream
 
@@ -238,9 +241,13 @@ EMB_N_PLANES = 12
 EMB_N_TABLES = 4
 EMB_SEED = 7
 
+#: ``verified``: the arrival's cosine to the bucket's seeder is at least
+#: NEARDUP_THRESHOLD.  Emitted as a boolean, not the cosine: PySpark pads
+#: each output batch with an all-None frame before ``pd.concat``, and pandas
+#: deprecates that concat when a float column is present.
 EMB_BAND_OUT_SCHEMA = (
     "clip_id string, band_idx int, band_key long, rep string, "
-    "is_new boolean, cosine double"
+    "is_new boolean, verified boolean"
 )
 #: rep clip_id + the rep's embedding: the bucket verifies arrivals
 #: against its seeder without any extra lookup or join
@@ -252,13 +259,14 @@ def _emb_band_assign(
 ) -> Iterator[pd.DataFrame]:
     """State per (table_idx, bucket): the seeding clip AND its embedding,
     so every later arrival's exact cosine to the bucket representative is
-    computed right here — no second stateful stage, no lookup join."""
+    computed and gated right here — no second stateful stage, no lookup
+    join."""
     rep, rep_emb = state.get if state.exists else (None, None)
     if rep_emb is not None:
         rep_emb = np.asarray(rep_emb, dtype=np.float64)
     out: dict[str, list] = {
         "clip_id": [], "band_idx": [], "band_key": [], "rep": [],
-        "is_new": [], "cosine": [],
+        "is_new": [], "verified": [],
     }
     pdf = _sorted_group(pdfs)
     if len(pdf):
@@ -276,7 +284,7 @@ def _emb_band_assign(
             out["band_key"].append(key[1])
             out["rep"].append(rep)
             out["is_new"].append(first)
-            out["cosine"].append(cos)
+            out["verified"].append(cos >= NEARDUP_THRESHOLD)
     if rep is not None:
         state.update((rep, [float(x) for x in rep_emb]))
     yield pd.DataFrame(out)
@@ -307,9 +315,6 @@ def stream_embed_neardup_assign(
     — O(distinct buckets).  Clusters remain star-shaped
     around first-seen reps (batch CC merges chains; see
     stream_near_dup_assign's tradeoff note)."""
-    from quichash_spark.functions.audio_embed import (
-        EMBED_DIM, NEARDUP_THRESHOLD, compute_audio_embeddings,
-    )
     from quichash_spark.operators.similarity import hyperplane_buckets_udf
 
     buckets = hyperplane_buckets_udf(
@@ -325,5 +330,5 @@ def stream_embed_neardup_assign(
     ).select("band_idx", "band_key", "clip_id", "embedding")
     return _run_band_stream(
         bands, _emb_band_assign, EMB_BAND_OUT_SCHEMA, EMB_BAND_STATE_SCHEMA,
-        F.col("cosine") >= NEARDUP_THRESHOLD, checkpoint_dir, out_dir,
+        F.col("verified"), checkpoint_dir, out_dir,
     )

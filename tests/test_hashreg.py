@@ -206,9 +206,9 @@ def test_native_kernel_swap(monkeypatch):
 
     fake.blake3 = _FakeHasher
     monkeypatch.setitem(sys.modules, "blake3", fake)
-    kernels = hashreg.resolve_native_kernels(warn=False)
+    kernels = hashreg.resolve_native_kernels()
     assert kernels["blake3"](b"abc") == "fake3"
 
     monkeypatch.delitem(sys.modules, "blake3")
-    kernels = hashreg.resolve_native_kernels(warn=False)
+    kernels = hashreg.resolve_native_kernels()
     assert kernels["blake3"] is blake3_hex  # no wheel in this sandbox

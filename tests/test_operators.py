@@ -145,12 +145,12 @@ def test_containment_finds_planted(signatures):
 
 
 def test_verify_broadcast_size_guard(spark, tiny_clips, signatures):
-    """Scale guard: past broadcast_pair_limit the verify slow path must
-    not broadcast the membership table (10^12-row corpora can exceed the
-    8 GB broadcast hard limit) — with Spark's auto-broadcast disabled the
-    whole plan falls back to shuffle joins, and results are identical on
-    both paths."""
-    from quichash_spark.operators.verify import verify_candidates
+    """Scale guard: past BROADCAST_PAIR_LIMIT candidates the verify slow
+    path must not broadcast the membership table (10^12-row corpora can
+    exceed the 8 GB broadcast hard limit) — with Spark's auto-broadcast
+    disabled the whole plan falls back to shuffle joins, and results are
+    identical on both paths."""
+    from quichash_spark.operators.verify import BROADCAST_PAIR_LIMIT, verify_candidates
     from quichash_spark.plans.inspect import node_names
 
     def broadcasts(df) -> bool:
@@ -165,12 +165,12 @@ def test_verify_broadcast_size_guard(spark, tiny_clips, signatures):
     try:
         guarded = verify_candidates(
             cands, tiny_clips, CLIPS_CONFIG, signatures=signatures,
-            n_candidates=len(pairs), broadcast_pair_limit=0,
+            n_candidates=BROADCAST_PAIR_LIMIT + 1,
         )
         assert not broadcasts(guarded)
         hinted = verify_candidates(
             cands, tiny_clips, CLIPS_CONFIG, signatures=signatures,
-            n_candidates=len(pairs), broadcast_pair_limit=1 << 40,
+            n_candidates=len(pairs),
         )
         assert broadcasts(hinted)
         ga = sorted(map(tuple, guarded.collect()))
@@ -311,29 +311,45 @@ def test_connected_components_shapes(spark):
     assert cc([("a", "b")], nodes=["a", "b", "z"]) == {"a": "a", "b": "a", "z": "z"}
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, monkeypatch):
     """Worst-case diameter graph: large-star/small-star converges in
     O(log n) rounds, not O(n) (the scale property the DataFrame loop
-    exists for)."""
+    exists for).  The union-find tail is switched off, so the star rounds
+    run to convergence; one edge checksum precedes the loop and one
+    follows each round."""
+    from quichash_spark.operators import connected_components as cc
+
+    checksums = []
+    edge_checksum = cc._edge_checksum
+
+    def counted(edges):
+        checksums.append(1)
+        return edge_checksum(edges)
+
+    monkeypatch.setattr(cc, "LOCAL_FINISH_EDGES", 0)
+    monkeypatch.setattr(cc, "_edge_checksum", counted)
     n = 1000
     edges = spark.createDataFrame(
         [(f"n{i:05d}", f"n{i+1:05d}") for i in range(n - 1)],
         "clip_a string, clip_b string",
     )
-    assign = connected_components(edges, max_iters=20)
+    assign = connected_components(edges)
     rows = assign.collect()
     assert len(rows) == n
     assert {r["cluster_id"] for r in rows} == {"n00000"}
+    assert len(checksums) - 1 < cc.MAX_ITERS
 
 
-def test_connected_components_local_finish_equals_distributed(spark):
+def test_connected_components_local_finish_equals_distributed(spark, monkeypatch):
     """Two-level CC: the single-task union-find tail must produce exactly
     the distributed star-rounds assignment (same min-member labeling) on
     a mixed graph of chains, stars, triangles and singleton-free noise —
     whether the tail is reached after the checksum (unhinted), directly
     from an edge bound (hinted, with duplicate edges and a self-loop
-    that union-find must absorb), or never (threshold 0)."""
+    that union-find must absorb), or never (LOCAL_FINISH_EDGES at 0)."""
     import random
+
+    from quichash_spark.operators import connected_components as cc
 
     rng = random.Random(7)
     edges = []
@@ -347,14 +363,10 @@ def test_connected_components_local_finish_equals_distributed(spark):
         edges.append((f"h{s:04d}_0", f"h{s:04d}_1"))
     rng.shuffle(edges)
     df = spark.createDataFrame(edges, "clip_a string, clip_b string")
-    local = {
-        r["clip_id"]: r["cluster_id"]
-        for r in connected_components(df, local_finish_threshold=10**9).collect()
-    }
-    dist = {
-        r["clip_id"]: r["cluster_id"]
-        for r in connected_components(df, local_finish_threshold=0).collect()
-    }
+    local = {r["clip_id"]: r["cluster_id"] for r in connected_components(df).collect()}
+    monkeypatch.setattr(cc, "LOCAL_FINISH_EDGES", 0)
+    dist = {r["clip_id"]: r["cluster_id"] for r in connected_components(df).collect()}
+    monkeypatch.undo()
     noisy = edges + edges[:25] + [(edges[0][0], edges[0][0])]
     hinted = {
         r["clip_id"]: r["cluster_id"]

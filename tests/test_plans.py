@@ -215,7 +215,7 @@ def test_verify_plan_build_with_hints_submits_no_job(spark, tiny_clips):
 
 
 def test_connected_components_under_bound_runs_no_checksum_job(spark):
-    """An edge bound under local_finish_threshold sends the edges straight
+    """An edge bound under LOCAL_FINISH_EDGES sends the edges straight
     to the union-find task: building the plan runs no checksum job, and
     materializing it runs a single job."""
     from quichash_spark.operators.connected_components import connected_components

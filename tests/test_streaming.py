@@ -95,6 +95,53 @@ def test_stream_embed_neardup_band_state(spark, tmp_path):
     assert a["joined_existing"] or b["joined_existing"]
 
 
+def test_emb_band_assign_output_concats_with_padding_silently():
+    """PySpark pads each ``applyInPandasWithState`` output batch with an
+    all-None frame of the output columns, sometimes of 0 rows, before one
+    ``pd.concat``.  Pandas deprecates that concat (FutureWarning) when a
+    float column is present, so the perceptual assigner's output frame
+    must concat with such padding without any warning."""
+    import warnings
+
+    import numpy as np
+    import pandas as pd
+
+    from quichash_spark.streaming.cluster import _emb_band_assign
+
+    class _State:  # the GroupState surface the assigner uses
+        value = None
+        exists = property(lambda self: self.value is not None)
+        get = property(lambda self: self.value)
+
+        def update(self, value):
+            self.value = value
+
+    rep = np.zeros(30)
+    rep[0] = 1.0
+    near = np.zeros(30)
+    near[0], near[1] = 0.999, np.sqrt(1 - 0.999**2)
+    far = np.zeros(30)
+    far[1] = 1.0
+    batch = pd.DataFrame({
+        "band_idx": [0] * 3, "band_key": [5] * 3,
+        "clip_id": ["c0", "c1", "c2"], "embedding": [rep, near, far],
+    })
+    state = _State()
+    frames = list(_emb_band_assign((0, 5), iter([batch]), state))
+    frames += list(_emb_band_assign((0, 5), iter([batch.iloc[1:]]), state))
+    cols = list(frames[0].columns)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for rows in (0, 2):
+            padding = pd.DataFrame(dict.fromkeys(cols), index=list(range(rows)))
+            merged = pd.concat(frames + [padding], ignore_index=True)
+            assert len(merged) == 5 + rows
+    # the cosine gate: c1 is at 0.999 of the seeder c0, c2 at 0
+    assert [f["verified"].tolist() for f in frames] == [
+        [True, True, False], [True, False],
+    ]
+
+
 def test_stream_embed_state_survives_restart(spark, tmp_path):
     """The operator's core claim — a near-dup arriving AFTER a full
     query shutdown still joins the original's cluster — requires the
