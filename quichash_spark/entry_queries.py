@@ -570,7 +570,16 @@ def q_glob_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for k in range(3):
             (docs.filter(F.col("doc_id") % 3 == k)
              .write.mode("overwrite").parquet(os.path.join(root, f"src_{k}")))
-        globbed = spark.read.parquet(os.path.join(root, "src_*"))
+        # a glob names no streaming sink's output, so the reader skips
+        # the _spark_metadata probe, which stats the literal glob path
+        # and logs a FileNotFoundException trace per read
+        probe = "spark.sql.streaming.fileStreamSink.ignoreMetadata"
+        saved = spark.conf.get(probe)
+        spark.conf.set(probe, "true")
+        try:
+            globbed = spark.read.parquet(os.path.join(root, "src_*"))
+        finally:
+            spark.conf.set(probe, saved)
         res = (
             globbed.withColumn(
                 "src_bucket",
@@ -816,7 +825,12 @@ def q_clips_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     clips = materialized_clips(spark, _clips_n(sf_dir))
     sigs = compute_signatures(clips, CLIPS_CONFIG)
-    return exact_duplicate_groups(sigs).drop("clip_ids")
+    # the reference's presentation order (ref src/dedup.rs:625-627)
+    return (
+        exact_duplicate_groups(sigs)
+        .orderBy(F.desc("wasted_bytes"), "content_hash")
+        .drop("clip_ids")
+    )
 
 
 def q_clips_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

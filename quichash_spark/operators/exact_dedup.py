@@ -18,9 +18,11 @@ from pyspark.sql import functions as F
 
 
 def exact_duplicate_groups(signatures: DataFrame) -> DataFrame:
-    """Groups of clips sharing a content hash (count > 1), sorted like the
-    reference: members ascending, groups by wasted bytes descending
-    (ref src/dedup.rs:610,625-627). ``wasted`` counts duplicate samples."""
+    """Groups of clips sharing a content hash (count > 1), members
+    ascending (ref src/dedup.rs:610). ``wasted`` counts duplicate samples.
+    The groups are unordered: a global sort would cost the pipeline stage
+    two jobs, so the one query that presents them applies the
+    reference's order (wasted bytes descending, ref src/dedup.rs:625-627)."""
     return (
         signatures.filter(F.col("content_hash").isNotNull())
         .groupBy("content_hash")
@@ -30,7 +32,6 @@ def exact_duplicate_groups(signatures: DataFrame) -> DataFrame:
             ((F.count("*") - F.lit(1)) * F.first("n_samples") * 2).alias("wasted_bytes"),
         )
         .filter(F.col("n") > 1)
-        .orderBy(F.desc("wasted_bytes"), "content_hash")
     )
 
 

@@ -5,14 +5,22 @@ DataFrame (schema per BASELINE.json input_hint), checkpointing every stage
 through a :class:`~quichash_spark.storage.CheckpointStore` so a killed run
 resumes by skipping completed stages (manifest-gated, idempotent writes).
 
-    clips ─1→ signatures ─2→ exact edges ──────────────┐
-                 ├─3→ LSH text candidates ──┐          │
+    clips ─1→ signatures ─2→ exact groups ─────────────┐  2 ∥ 3–6: background
+                 ├─3→ LSH text candidates ──┐          │  thread, joined
                  ├─3b→ LSH pcm candidates ──┼─6→ verify┼─7→ clusters
                  └─4→ simhash candidates ───┘          │
-                                        8: metrics + manifest (all stages)
+                            8: metrics + one manifest entry per stage
 
 Containment (stage 5) is not a pipeline channel: its buckets are the
 LSH text buckets, and the verify kernel accepts containment pairs.
+
+Nothing before clusters reads the exact groups, so that stage runs on
+one background thread while candidates → verify run on the caller's;
+clusters waits for both.  The thread inherits the caller's job group,
+local properties and session tags, an error in either branch is raised
+to the caller, and the thread never outlives the call.  The checkpoint
+store keeps one manifest entry per stage, so the two branches never
+write the same manifest file.
 
 Batch (:func:`run_pipeline`) and incremental (:func:`incremental_update`)
 runs share ONE stage graph (:func:`_run_stages`).  An incremental run
@@ -30,8 +38,10 @@ they submit no sizing jobs of their own.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -160,13 +170,6 @@ def _run_stages(
             .unionByName(new_sigs.withColumn("is_new", F.lit(True)))
         )
 
-    exact_groups = _stage(
-        store, "exact_groups", lambda: exact_duplicate_groups(signatures), timings
-    )
-    # star edges derive from the (tiny) groups table — no second
-    # checkpoint stage
-    exact_edges = exact_duplicate_edges(exact_groups)
-
     def build_candidates():
         from quichash_spark.operators.lsh import unified_candidates
 
@@ -177,21 +180,33 @@ def _run_stages(
         # summary after the candidates write has filled it
         return pairs, {"buckets_dropped": dropped}
 
-    candidates = _stage(store, "candidates", build_candidates, timings)
+    # the exact groups run on the pool's one thread while candidates →
+    # verify run here; leaving the block joins the thread whichever
+    # branch raises, and result() re-raises the thread's error
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        exact_future = pool.submit(
+            inheritable_thread_target(store.spark)(_stage), store,
+            "exact_groups", lambda: exact_duplicate_groups(signatures), timings,
+        )
+        candidates = _stage(store, "candidates", build_candidates, timings)
 
-    # exact pairs need no re-verification (proven identical by content
-    # hash) but they also cost nothing: identical pcm_hash routes them
-    # through the JVM fast path where transcript equality accepts them —
-    # so no anti-join barrier is spent carving them out
-    # the manifest's candidate count bounds the pairs without a job
-    verified = _stage(
-        store, "verified_edges",
-        lambda: verify_candidates(
-            candidates, all_clips, cfg, signatures=signatures,
-            n_candidates=store.rows("candidates"),
-        ),
-        timings,
-    )
+        # exact pairs need no re-verification (proven identical by content
+        # hash) but they also cost nothing: identical pcm_hash routes them
+        # through the JVM fast path where transcript equality accepts them —
+        # so no anti-join barrier is spent carving them out
+        # the manifest's candidate count bounds the pairs without a job
+        verified = _stage(
+            store, "verified_edges",
+            lambda: verify_candidates(
+                candidates, all_clips, cfg, signatures=signatures,
+                n_candidates=store.rows("candidates"),
+            ),
+            timings,
+        )
+        exact_groups = exact_future.result()
+    # star edges derive from the (tiny) groups table — no second
+    # checkpoint stage
+    exact_edges = exact_duplicate_edges(exact_groups)
 
     def build_clusters() -> DataFrame:
         edges = (

@@ -10,13 +10,32 @@ Backend: parquet directories, the only one; per-partition lineage comes
 from the written files' footers.  Writes are idempotent per (stage,
 config_hash): re-running a completed stage is a no-op, so a killed driver
 resumes by skipping completed stages.
+
+The manifest is one entry file per stage, ``<base>/_manifest/<stage>.json``.
+A write deletes the stage's entry before it overwrites the table and
+publishes the new entry by renaming a temp file onto the then-absent
+name, so:
+
+- a rewrite that dies part way leaves the stage incomplete, never a
+  ``complete`` entry over a half-written table;
+- stages written concurrently (the pipeline overlaps two) touch
+  different files and cannot lose each other's update;
+- no write replaces an existing file (on ext4 with delayed allocation a
+  rename over an existing file forces a journal commit, tens of ms).
+
+An unreadable entry reads as absent: the stage reruns.  The single
+``_manifest.json`` of older checkpoints is not read, so their stages
+rerun; as a prior of ``incremental_update`` such a checkpoint is
+rejected as incomplete.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import os
 import shutil
+import tempfile
 import time
 from dataclasses import asdict
 from pathlib import Path
@@ -50,10 +69,9 @@ def config_hash(cfg: DedupConfig) -> str:
 class CheckpointStore:
     """Parquet-directory checkpoint store.
 
-    ``base_dir/<stage>/`` holds the stage table; ``base_dir/_manifest.json``
-    records ``stage -> {status, config_hash, rows, schema, wall_ms, ts}``.
-    A stage is reusable iff status == 'complete' and the config hash
-    matches.
+    ``base_dir/<stage>/`` holds the stage table; ``base_dir/_manifest/<stage>.json``
+    records ``{status, config_hash, rows, schema, wall_ms, ts}``.  A stage
+    is reusable iff status == 'complete' and the config hash matches.
     """
 
     def __init__(self, spark: SparkSession, base_dir: str, cfg: DedupConfig):
@@ -64,18 +82,31 @@ class CheckpointStore:
 
     # -- manifest ----------------------------------------------------------
     @property
-    def _manifest_path(self) -> Path:
-        return self.base / "_manifest.json"
+    def _manifest_dir(self) -> Path:
+        return self.base / "_manifest"
+
+    def _entry_path(self, stage: str) -> Path:
+        return self._manifest_dir / f"{stage}.json"
 
     def _read_manifest(self) -> dict:
-        if self._manifest_path.exists():
-            return json.loads(self._manifest_path.read_text())
-        return {}
+        """``stage -> entry`` merged from the entry files; an unreadable
+        entry (deleted mid-read, or left empty by a crash) counts as absent."""
+        manifest = {}
+        for path in self._manifest_dir.glob("*.json"):
+            try:
+                manifest[path.stem] = json.loads(path.read_text())
+            except (OSError, ValueError):
+                pass
+        return manifest
 
-    def _write_manifest(self, manifest: dict) -> None:
-        tmp = self._manifest_path.with_suffix(".tmp")
-        tmp.write_text(json.dumps(manifest, indent=1, sort_keys=True))
-        tmp.replace(self._manifest_path)
+    def _publish_entry(self, stage: str, entry: dict) -> None:
+        """Write ``entry`` to a fresh temp file and rename it onto the
+        stage's entry name, which :meth:`write` deleted beforehand."""
+        self._manifest_dir.mkdir(exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=self._manifest_dir, prefix=f".{stage}.", suffix=".tmp")
+        with os.fdopen(fd, "w") as f:
+            json.dump(entry, f, indent=1, sort_keys=True)
+        os.rename(tmp, self._entry_path(stage))
 
     def is_complete(self, stage: str) -> bool:
         ent = self._read_manifest().get(stage)
@@ -89,6 +120,8 @@ class CheckpointStore:
     def write(self, df: DataFrame, stage: str,
               lineage: dict[str, DataFrame] | None = None) -> DataFrame:
         """Idempotent overwrite of a stage table; marks the stage complete.
+        The stage's entry goes first, so a write that fails part way
+        leaves the stage incomplete.
 
         Per-partition lineage comes from the written parquet FOOTERS
         (one part-file per output partition, num_rows read driver-side
@@ -104,22 +137,21 @@ class CheckpointStore:
         complete.
         """
         t0 = time.monotonic()
+        self._entry_path(stage).unlink(missing_ok=True)
         df.write.mode("overwrite").parquet(self._table_path(stage))
         parts = self._footer_partition_rows(stage)
         for name, extra in (lineage or {}).items():
             self.append_metrics(name, extra)
         rows = sum(n for _, n in parts)
         self._append_metrics_rows(stage, parts)
-        manifest = self._read_manifest()
-        manifest[stage] = {
+        self._publish_entry(stage, {
             "status": "complete",
             "config_hash": self.cfg_hash,
             "rows": rows,
             "schema": df.schema.jsonValue(),
             "wall_ms": round((time.monotonic() - t0) * 1000, 1),
             "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        }
-        self._write_manifest(manifest)
+        })
         return self.read(stage)
 
     def rows(self, stage: str) -> int | None:
@@ -141,9 +173,7 @@ class CheckpointStore:
         return reader.parquet(self._table_path(stage))
 
     def invalidate(self, stage: str) -> None:
-        manifest = self._read_manifest()
-        manifest.pop(stage, None)
-        self._write_manifest(manifest)
+        self._entry_path(stage).unlink(missing_ok=True)
         p = Path(self._table_path(stage))
         if p.exists():
             shutil.rmtree(p)

@@ -362,3 +362,137 @@ def test_incremental_requires_complete_prior(spark, tmp_path):
             spark, str(tmp_path / "nonexistent"), clips, clips,
             str(tmp_path / "delta"),
         )
+
+
+def _failing_rewrite_df(spark):
+    """Rows whose write fails inside the tasks, after Spark has begun
+    overwriting the table."""
+    return spark.range(4).select(
+        F.when(F.col("id") == 2, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id")).alias("id")
+    )
+
+
+def test_failed_rewrite_leaves_stage_incomplete(spark, tmp_path):
+    """A rewrite of a complete stage that dies part way leaves the stage
+    incomplete: the old entry goes before the table is overwritten."""
+    from quichash_spark.config import CLIPS_CONFIG
+    from quichash_spark.storage import CheckpointStore
+
+    store = CheckpointStore(spark, str(tmp_path / "ck"), CLIPS_CONFIG)
+    store.write(spark.range(3), "stage")
+    assert store.is_complete("stage") and store.rows("stage") == 3
+    with pytest.raises(Exception, match="boom"):
+        store.write(_failing_rewrite_df(spark), "stage")
+    assert not store.is_complete("stage")
+    assert store.rows("stage") is None
+    assert "stage" not in store._read_manifest()
+
+
+def test_manifest_writes_never_rename_onto_an_existing_file(spark, tmp_path, monkeypatch):
+    """Every manifest publish renames onto a name that does not exist:
+    first writes, rewrites and writes after an invalidate."""
+    import os
+
+    from quichash_spark.config import CLIPS_CONFIG
+    from quichash_spark.storage import CheckpointStore
+
+    targets: list[tuple[str, bool]] = []
+
+    def recording(real):
+        def move(src, dst, *args, **kwargs):
+            targets.append((str(dst), os.path.exists(dst)))
+            return real(src, dst, *args, **kwargs)
+        return move
+
+    monkeypatch.setattr(os, "rename", recording(os.rename))
+    monkeypatch.setattr(os, "replace", recording(os.replace))
+    store = CheckpointStore(spark, str(tmp_path / "ck"), CLIPS_CONFIG)
+    store.write(spark.range(3), "a")
+    store.write(spark.range(5), "a")
+    store.write(spark.range(2), "b")
+    store.invalidate("b")
+    store.write(spark.range(4), "b")
+    assert len(targets) == 4, targets
+    assert not [t for t, existed in targets if existed], targets
+    assert {s: e["rows"] for s, e in store._read_manifest().items()} == {"a": 5, "b": 4}
+
+
+def test_concurrent_stage_writes_both_complete(spark, tmp_path):
+    """Two threads writing two stages into one store: neither update is
+    lost."""
+    import threading
+
+    from quichash_spark.config import CLIPS_CONFIG
+    from quichash_spark.storage import CheckpointStore
+
+    store = CheckpointStore(spark, str(tmp_path / "ck"), CLIPS_CONFIG)
+    errors: list[BaseException] = []
+
+    def write(stage: str, n: int) -> None:
+        try:
+            store.write(spark.range(n), stage)
+        except BaseException as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    threads = [threading.Thread(target=write, args=a) for a in (("x", 7), ("y", 11))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    assert store.is_complete("x") and store.is_complete("y")
+    assert (store.rows("x"), store.rows("y")) == (7, 11)
+
+
+def test_overlapped_exact_groups_inherit_job_group_and_join(spark, tiny_clips, tmp_path, monkeypatch):
+    """The exact-groups stage runs on a background thread under the
+    caller's job group, and the thread ends with the call."""
+    import threading
+
+    import quichash_spark.pipeline as pipeline
+
+    real = pipeline.exact_duplicate_groups
+    seen = {}
+
+    def probe(signatures):
+        seen["thread"] = threading.current_thread() is not threading.main_thread()
+        seen["group"] = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+        return real(signatures)
+
+    monkeypatch.setattr(pipeline, "exact_duplicate_groups", probe)
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    n_threads = threading.active_count()
+    spark.sparkContext.setJobGroup("qh_overlap", "overlapped pipeline run")
+    try:
+        res = pipeline.run_pipeline(spark, tiny_clips, str(tmp_path / "ck"))
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    assert threading.active_count() == n_threads
+    assert seen == {"thread": True, "group": "qh_overlap"}
+    assert res.stage_seconds["exact_groups"] > 0
+    # every job of the run, exact_groups' included, carries the group
+    assert tracker.getJobIdsForGroup("qh_overlap")
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert res.exact_groups.count() == 10  # one group per block of 20
+
+
+def test_overlapped_exact_groups_error_is_raised(spark, tiny_clips, tmp_path, monkeypatch):
+    """An error in the background stage is raised by run_pipeline, and
+    no thread outlives the call."""
+    import threading
+
+    import quichash_spark.pipeline as pipeline
+
+    class Boom(RuntimeError):
+        pass
+
+    def fail(signatures):
+        raise Boom("exact groups failed")
+
+    monkeypatch.setattr(pipeline, "exact_duplicate_groups", fail)
+    n_threads = threading.active_count()
+    with pytest.raises(Boom, match="exact groups failed"):
+        pipeline.run_pipeline(spark, tiny_clips, str(tmp_path / "ck"))
+    assert threading.active_count() == n_threads
